@@ -1018,15 +1018,20 @@ def q_nearest_neighbor_jaccard(spark, sf_dir):
               min(_cap, int(-(-_pr // 500_000))))
     if isinstance(_b["lo"], int) and _b["lo"] >= 0 \
             and _b["hi"] < (1 << 31):
+        # widen BEFORE the shift: an int32 id shifted by 32 wraps to
+        # itself, and (a << 32) | b would collide pairs
+        id_type = exploded.schema["doc_a"].dataType
         pairs = (exploded
-                 .select(F.shiftleft(F.col("doc_a"), 32)
-                         .bitwiseOR(F.col("doc_b")).alias("pk"))
+                 .select(F.shiftleft(F.col("doc_a").cast("long"), 32)
+                         .bitwiseOR(F.col("doc_b").cast("long"))
+                         .alias("pk"))
                  .repartition(_np, "pk")
                  .groupBy("pk")
                  .agg(F.count("*").alias("inter"))
-                 .select(F.shiftrightunsigned("pk", 32).alias("doc_a"),
+                 .select(F.shiftrightunsigned("pk", 32).cast(id_type)
+                         .alias("doc_a"),
                          F.col("pk").bitwiseAND(F.lit((1 << 32) - 1))
-                         .alias("doc_b"),
+                         .cast(id_type).alias("doc_b"),
                          "inter"))
     else:
         pairs = (exploded
@@ -1693,32 +1698,21 @@ def q_anderson_darling(spark, sf_dir):
     (_erfc_sql) inside the textbook sorted-logcdf sum.  Degenerate groups
     (n < 4 or zero variance) excluded in both engines."""
     import numpy as np
-    import pandas as pd
     from light_curve_python_spark.functions.kernels import (
         evaluate_kernel,
         make_kernel,
     )
-    from light_curve_python_spark.operators.grouped import (
-        grouped_map_batches,
-        per_group,
-    )
-    ev = _ev(spark, sf_dir).select("user_id", "m")
+    from light_curve_python_spark.operators.grouped import grouped_map
     k = make_kernel("anderson_darling_normal")
-    schema = T.StructType([ev.schema["user_id"],
-                           T.StructField("a2", T.DoubleType())])
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = pdf["m"].to_numpy(np.float64)
+    def fn(m):
         if len(m) < 4 or np.std(m, ddof=1) == 0:
-            return pd.DataFrame({"user_id": pdf["user_id"].iloc[:0],
-                                 "a2": pd.Series([], dtype="float64")})
-        out = evaluate_kernel(k, np.arange(len(m), dtype=np.float64), m,
-                              None, fill_value=None)
-        return pd.DataFrame({"user_id": [pdf["user_id"].iloc[0]],
-                             "a2": [out[0]]})
+            return None
+        return evaluate_kernel(k, np.arange(len(m), dtype=np.float64), m,
+                               None, fill_value=None)[:1, None]
 
-    out = grouped_map_batches(ev, "user_id", schema,
-                              per_group("user_id", fn))
+    out = grouped_map(_ev(spark, sf_dir), "user_id", ["m"],
+                      [T.StructField("a2", T.DoubleType())], fn)
     return out.withColumn("a2", _r("a2", 6))
 
 
@@ -1762,33 +1756,21 @@ def q_chi2_pvar(spark, sf_dir):
     as recursive CTEs, so even the iterative special function carries a
     full hash gate."""
     import numpy as np
-    import pandas as pd
     from light_curve_python_spark.functions.kernels import (
         evaluate_kernel,
         make_kernel,
     )
-    from light_curve_python_spark.operators.grouped import (
-        grouped_map_batches,
-        per_group,
-    )
-    ev = _ev(spark, sf_dir).select("user_id", "m", "sigma")
+    from light_curve_python_spark.operators.grouped import grouped_map
     k = make_kernel("chi2_pvar")
-    schema = T.StructType([ev.schema["user_id"],
-                           T.StructField("pvar", T.DoubleType())])
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = pdf["m"].to_numpy(np.float64)
+    def fn(m, sigma):
         if len(m) < 2:
-            return pd.DataFrame({"user_id": pdf["user_id"].iloc[:0],
-                                 "pvar": pd.Series([], dtype="float64")})
-        out = evaluate_kernel(
-            k, np.arange(len(m), dtype=np.float64), m,
-            pdf["sigma"].to_numpy(np.float64), fill_value=None)
-        return pd.DataFrame({"user_id": [pdf["user_id"].iloc[0]],
-                             "pvar": [out[0]]})
+            return None
+        return evaluate_kernel(k, np.arange(len(m), dtype=np.float64), m,
+                               sigma, fill_value=None)[:1, None]
 
-    out = grouped_map_batches(ev, "user_id", schema,
-                              per_group("user_id", fn))
+    out = grouped_map(_ev(spark, sf_dir), "user_id", ["m", "sigma"],
+                      [T.StructField("pvar", T.DoubleType())], fn)
     return out.withColumn("pvar", _r("pvar", 6))
 
 
@@ -1865,38 +1847,24 @@ def q_dmdt_gausses(spark, sf_dir):
     package's coefficients — see _erf_sql) over the same pair set, so the
     iterative-free but erf-heavy kernel gets a full hash gate."""
     import numpy as np
-    import pandas as pd
     from light_curve_python_spark.operators.dmdt import dmdt_gausses_kernel
-    from light_curve_python_spark.operators.grouped import (
-        grouped_map_batches,
-        per_group,
-    )
-    ev = _ev(spark, sf_dir).select("user_id", "t", "m", "sigma")
+    from light_curve_python_spark.operators.grouped import grouped_map
     dt_edges = 10.0 ** np.linspace(DMDT["lgdt_min"], DMDT["lgdt_max"],
                                    DMDT["n_dt"] + 1)
     dm_edges = np.asarray(GAUSS_DM_EDGES, dtype=np.float64)
-    schema = T.StructType([ev.schema["user_id"],
-                           T.StructField("dt_bin", T.LongType()),
-                           T.StructField("dm_bin", T.LongType()),
-                           T.StructField("mass", T.DoubleType())])
+    out_fields = [T.StructField("dt_bin", T.LongType()),
+                  T.StructField("dm_bin", T.LongType()),
+                  T.StructField("mass", T.DoubleType())]
     n_dt, n_dm = DMDT["n_dt"], len(GAUSS_DM_EDGES) - 1
+    di, mi = np.meshgrid(np.arange(n_dt, dtype=np.int64),
+                         np.arange(n_dm, dtype=np.int64), indexing="ij")
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        t = pdf["t"].to_numpy(np.float64)
-        order = np.argsort(t, kind="mergesort")
-        hist = dmdt_gausses_kernel(
-            t[order], pdf["m"].to_numpy(np.float64)[order],
-            pdf["sigma"].to_numpy(np.float64)[order], dt_edges, dm_edges)
-        di, mi = np.meshgrid(np.arange(n_dt), np.arange(n_dm),
-                             indexing="ij")
-        return pd.DataFrame({
-            "user_id": pdf["user_id"].iloc[0],
-            "dt_bin": di.ravel().astype(np.int64),
-            "dm_bin": mi.ravel().astype(np.int64),
-            "mass": hist.ravel()})
+    def fn(t, m, sigma):
+        hist = dmdt_gausses_kernel(t, m, sigma, dt_edges, dm_edges)
+        return di.ravel(), mi.ravel(), hist.ravel()
 
-    out = grouped_map_batches(ev, "user_id", schema,
-                              per_group("user_id", fn))
+    out = grouped_map(_ev(spark, sf_dir), "user_id", ["t", "m", "sigma"],
+                      out_fields, fn, order_cols=("t", "m"))
     return out.withColumn("mass", _r("mass", 6))
 
 
@@ -1958,35 +1926,23 @@ def q_periodogram_grid(spark, sf_dir):
     closed-form per-frequency cos/sin sums (tau-shifted Lomb normal
     equations) in plain SQL."""
     import numpy as np
-    import pandas as pd
     from light_curve_python_spark.functions.kernels import periodogram_power
-    ev = _ev(spark, sf_dir).select("user_id", "t", "m")
+    from light_curve_python_spark.operators.grouped import grouped_map
     freqs = np.asarray(PG_FREQS, dtype=np.float64)
-    schema = T.StructType([ev.schema["user_id"],
-                           T.StructField("freq_idx", T.LongType()),
-                           T.StructField("power", T.DoubleType())])
+    out_fields = [T.StructField("freq_idx", T.LongType()),
+                  T.StructField("power", T.DoubleType())]
 
-    empty = pd.DataFrame({"user_id": pd.Series([], dtype="int64"),
-                          "freq_idx": pd.Series([], dtype="int64"),
-                          "power": pd.Series([], dtype="float64")})
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        t = pdf["t"].to_numpy(np.float64)
-        m = pdf["m"].to_numpy(np.float64)
+    def fn(t, m):
         # degenerate groups (n < 2 or zero variance) are EXCLUDED in both
         # engines (the SQL twin filters n >= 2 AND sm > 0) instead of
         # crashing the whole query in the kernel's ValueError path
         if len(m) < 2 or np.std(m, ddof=1) == 0:
-            return empty
-        order = np.argsort(t, kind="mergesort")
-        _, power = periodogram_power(
-            t[order], m[order], freqs=freqs, normalization="psd")
-        return pd.DataFrame({
-            "user_id": pdf["user_id"].iloc[0],
-            "freq_idx": np.arange(len(freqs), dtype=np.int64),
-            "power": power})
+            return None
+        _, power = periodogram_power(t, m, freqs=freqs, normalization="psd")
+        return np.arange(len(freqs), dtype=np.int64), power
 
-    out = ev.groupBy("user_id").applyInPandas(fn, schema)
+    out = grouped_map(_ev(spark, sf_dir), "user_id", ["t", "m"], out_fields,
+                      fn, order_cols=("t", "m"))
     return out.withColumn("power", _r("power", 6))
 
 
@@ -2073,36 +2029,22 @@ def q_periodogram_peaks(spark, sf_dir):
     interior-local-max peak pick (strongest first, argmax fallback), and
     the (P - mean)/std(ddof=1) S/N — the full output contract in SQL."""
     import numpy as np
-    import pandas as pd
     from light_curve_python_spark.functions.kernels import (
         evaluate_kernel,
         make_kernel,
     )
-    from light_curve_python_spark.operators.grouped import (
-        grouped_map_batches,
-        per_group,
-    )
-    ev = _ev(spark, sf_dir).select("user_id", "t", "m")
+    from light_curve_python_spark.operators.grouped import grouped_map
     k = make_kernel("periodogram", peaks=1, fast=False)
-    schema = T.StructType([ev.schema["user_id"],
-                           T.StructField("period_0", T.DoubleType()),
-                           T.StructField("s_to_n_0", T.DoubleType())])
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        t = pdf["t"].to_numpy(np.float64)
-        m = pdf["m"].to_numpy(np.float64)
-        order = np.argsort(t, kind="mergesort")
-        t, m = t[order], m[order]
+    def fn(t, m):
         if len(m) < 3 or np.std(m, ddof=1) == 0 or t[-1] <= t[0]:
-            return pd.DataFrame({"user_id": pdf["user_id"].iloc[:0],
-                                 "period_0": pd.Series([], dtype="f8"),
-                                 "s_to_n_0": pd.Series([], dtype="f8")})
-        out = evaluate_kernel(k, t, m, None, fill_value=None)
-        return pd.DataFrame({"user_id": [pdf["user_id"].iloc[0]],
-                             "period_0": [out[0]], "s_to_n_0": [out[1]]})
+            return None
+        return evaluate_kernel(k, t, m, None, fill_value=None)[:2, None]
 
-    out = grouped_map_batches(ev, "user_id", schema,
-                              per_group("user_id", fn))
+    out = grouped_map(_ev(spark, sf_dir), "user_id", ["t", "m"],
+                      [T.StructField("period_0", T.DoubleType()),
+                       T.StructField("s_to_n_0", T.DoubleType())],
+                      fn, order_cols=("t", "m"))
     return out.select("user_id", _r("period_0", 6).alias("period_0"),
                       _r("s_to_n_0", 6).alias("s_to_n_0"))
 
@@ -2196,35 +2138,22 @@ def q_periodogram_folded(spark, sf_dir):
     ``period_folded_`` output, reproduced in SQL end to end (grid → power
     → peak → fold → consecutive-pair sum)."""
     import numpy as np
-    import pandas as pd
     from light_curve_python_spark.functions.kernels import (
         evaluate_kernel,
         make_kernel,
     )
-    from light_curve_python_spark.operators.grouped import (
-        grouped_map_batches,
-        per_group,
-    )
-    ev = _ev(spark, sf_dir).select("user_id", "t", "m")
+    from light_curve_python_spark.operators.grouped import grouped_map
     k = make_kernel("periodogram", peaks=1, fast=False,
                     phase_features=("eta",))
-    schema = T.StructType([ev.schema["user_id"],
-                           T.StructField("folded_eta", T.DoubleType())])
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        t = pdf["t"].to_numpy(np.float64)
-        m = pdf["m"].to_numpy(np.float64)
-        order = np.argsort(t, kind="mergesort")
-        t, m = t[order], m[order]
+    def fn(t, m):
         if len(m) < 3 or np.std(m, ddof=1) == 0 or t[-1] <= t[0]:
-            return pd.DataFrame({"user_id": pdf["user_id"].iloc[:0],
-                                 "folded_eta": pd.Series([], dtype="f8")})
-        out = evaluate_kernel(k, t, m, None, fill_value=None)
-        return pd.DataFrame({"user_id": [pdf["user_id"].iloc[0]],
-                             "folded_eta": [out[2]]})
+            return None
+        return evaluate_kernel(k, t, m, None, fill_value=None)[2:3, None]
 
-    out = grouped_map_batches(ev, "user_id", schema,
-                              per_group("user_id", fn))
+    out = grouped_map(_ev(spark, sf_dir), "user_id", ["t", "m"],
+                      [T.StructField("folded_eta", T.DoubleType())], fn,
+                      order_cols=("t", "m"))
     return out.select("user_id", _r("folded_eta", 6).alias("folded_eta"))
 
 

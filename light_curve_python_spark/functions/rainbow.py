@@ -615,8 +615,9 @@ def _rainbow_factory(band_wave_cm: Optional[Dict[str, float]] = None,
     """Kernel facade: the multiband arrays come pre-split per band in the
     engine's banded path, so this kernel is NOT dispatched through
     FeatureExtractor(bands=...) — use operators.spectral.rainbow_fit (joint
-    multiband applyInPandas) instead.  Registered so FeatureSpec can name
-    it and so the fill/min_obs semantics are declared in one place."""
+    multiband, one grouped_map callback per entity) instead.  Registered
+    so FeatureSpec can name it and so the fill/min_obs semantics are
+    declared in one place."""
     if band_wave_cm is None:
         raise ValueError("rainbow_fit requires band_wave_cm={band: cm}")
     band_names = sorted(band_wave_cm)

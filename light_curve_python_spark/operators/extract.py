@@ -2,10 +2,13 @@
 
 Recasts the reference's per-curve evaluators (``Feature.__call__`` /
 ``Feature.many``, /root/reference/light-curve/src/features.rs:2289-2531) as
-Arrow-batched grouped pandas UDFs:
+Arrow-batched Spark operators:
 
 - :meth:`FeatureExtractor.extract` — one feature vector per entity over its
-  whole series (the reference's ``many``: one curve in, one vector out).
+  whole series (the reference's ``many``: one curve in, one vector out),
+  on the aggregate-then-map primitive of operators/grouped.py;
+  :meth:`FeatureExtractor.extract_nested` is its map half over curves
+  that are already nested.
 - :meth:`FeatureExtractor.extract_point_in_time` — one feature vector per
   entity×timestamp probe, seeing ONLY observations with ``t <= ts`` (and
   ``t >= ts - horizon`` when a range horizon is given — both bounds
@@ -15,7 +18,7 @@ Arrow-batched grouped pandas UDFs:
   leakage by construction (slices are taken with ``np.searchsorted`` on the
   sorted time axis, never a full-table filter that could drift).
 
-All kernels for a row are evaluated in ONE pass per group — the reference's
+All kernels for a row are evaluated in ONE pass per curve — the reference's
 Extractor fusion (features/extractor.py:36-41) — because Catalyst cannot fuse
 across Python UDF boundaries (SURVEY.md §4).
 
@@ -33,6 +36,7 @@ columns are appended to the probe pandas frame, the Arrow round-trip of
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Iterable, List, Optional, Sequence, Union
 
 import numpy as np
@@ -44,6 +48,7 @@ from pyspark.sql import types as T
 from ..functions.battery import PrefixBattery
 from ..functions.kernels import Kernel, evaluate_many, make_kernel
 from ..functions.transforms import apply_transform_column
+from .grouped import grouped_map, map_curves
 
 __all__ = ["FeatureExtractor"]
 
@@ -137,6 +142,21 @@ class FeatureExtractor:
                 None if s is None else s[mask], self.fill_value))
         return np.concatenate(outs)
 
+    def _band_codes(self, vals) -> np.ndarray:
+        codes = pd.Categorical(vals, categories=self.bands).codes
+        # a TYPE mismatch (integer-coded column vs string bands or vice
+        # versa) makes every code -1 and would silently emit all-fill
+        # output for the whole table; an entity merely observed in other
+        # bands is legitimate and keeps the fill behavior
+        if len(codes) and (codes == -1).all() \
+                and isinstance(vals[0], (str, bytes)) \
+                != isinstance(self.bands[0], (str, bytes)):
+            raise ValueError(
+                f"band column type {type(vals[0]).__name__!r} cannot "
+                f"match bands={self.bands!r} — every code resolves "
+                "to -1 (all-fill output)")
+        return codes
+
     def _prepare_arrays(self, pdf: pd.DataFrame, t_col, m_col, sigma_col,
                         band_col):
         t = pdf[t_col].to_numpy(dtype=np.float64)
@@ -151,22 +171,8 @@ class FeatureExtractor:
         m = m[order]
         s = (pdf[sigma_col].to_numpy(dtype=np.float64)[order]
              if sigma_col else None)
-        codes = None
-        if self.bands is not None:
-            vals = pdf[band_col].to_numpy()[order]
-            codes = pd.Categorical(vals, categories=self.bands).codes
-            # a TYPE mismatch (integer-coded column vs string bands or
-            # vice versa) makes every code -1 and would silently emit
-            # all-fill output for the whole table; an entity merely
-            # observed in other bands is legitimate and keeps the fill
-            # behavior
-            if len(codes) and (codes == -1).all() \
-                    and isinstance(vals[0], (str, bytes)) \
-                    != isinstance(self.bands[0], (str, bytes)):
-                raise ValueError(
-                    f"band column type {type(vals[0]).__name__!r} cannot "
-                    f"match bands={self.bands!r} — every code resolves "
-                    "to -1 (all-fill output)")
+        codes = (self._band_codes(pdf[band_col].to_numpy()[order])
+                 if self.bands is not None else None)
         return t, m, s, codes
 
     # ---- whole-entity extraction -----------------------------------------
@@ -174,140 +180,40 @@ class FeatureExtractor:
     def extract(self, obs: DataFrame, entity_col: str = "doc_id",
                 t_col: str = "t", m_col: str = "m",
                 sigma_col: Optional[str] = "sigma",
-                band_col: str = "band",
-                grouped_batches: bool = True) -> DataFrame:
-        """One output row per entity over its complete series.
-
-        grouped_batches=True (default) evaluates MANY entities per Python
-        call via aggregate-then-map (``_extract_agg_arrow``): each
-        entity's curve is collected into ONE ``list<struct>`` row with a
-        hash aggregation (map-side combine, no sort) and slices are
-        evaluated straight off the Arrow buffers in ``mapInArrow`` —
-        Python never materializes or groups the scalar rows.  ``False``
-        selects the one-call-per-group applyInPandas path (identical
-        results; kept for comparison tests)."""
+                band_col: str = "band") -> DataFrame:
+        """One output row per entity over its complete series, evaluated
+        by :func:`~.grouped.grouped_map` (one hash aggregation, then every
+        entity of an Arrow batch in one Python call) with the feature
+        callback :meth:`extract_nested` shares."""
         # prune sigma when no kernel needs it (an explicitly passed
         # column would otherwise ship through Arrow for nothing, and a
         # sigma-less dataset would fail the select)
         sigma_col = sigma_col if self.needs_sigma else None
-        cols = [entity_col, t_col, m_col]
-        if sigma_col:
-            cols.append(sigma_col)
-        if self.bands is not None:
-            cols.append(band_col)
-        pruned = obs.select(*cols)  # explicit column pruning into the UDF
-
-        entity_field = pruned.schema[entity_col]
         self._check_name_collisions([entity_col], "the entity column")
-        schema = T.StructType([entity_field] + self._feature_fields())
-        names = self.names
-        this = self
-
-        if not grouped_batches:
-            def fn_group(pdf: pd.DataFrame) -> pd.DataFrame:
-                t, m, s, codes = this._prepare_arrays(
-                    pdf, t_col, m_col, sigma_col, band_col)
-                vec = (this._eval_window(t, m, s) if codes is None
-                       else this._eval_window_banded(t, m, s, codes))
-                row = {entity_col: [pdf[entity_col].iloc[0]]}
-                row.update({n: [v] for n, v in zip(names, vec)})
-                return pd.DataFrame(row)
-
-            out = pruned.groupBy(entity_col).applyInPandas(fn_group, schema)
-            return self._apply_transforms(out)
-
-        out = self._extract_agg_arrow(pruned, entity_col, t_col, m_col,
-                                      sigma_col, band_col, schema, names)
+        value_cols = [t_col, m_col] + ([sigma_col] if sigma_col else []) \
+            + ([band_col] if self.bands is not None else [])
+        out = grouped_map(obs, entity_col, value_cols,
+                          self._feature_fields(),
+                          self._curve_fn(sigma_col is not None),
+                          order_cols=(t_col, m_col))
         return self._apply_transforms(out)
 
-    def _extract_agg_arrow(self, pruned: DataFrame, entity_col, t_col,
-                           m_col, sigma_col, band_col, schema, names):
-        """Aggregate-then-map grouped evaluation: collect each entity's
-        curve into ONE list<struct> row (hash aggregation with map-side
-        combine), then evaluate slices straight off the Arrow buffers.
-
-        Replaces the repartition + sortWithinPartitions + pandas-groupby
-        route: the shuffle moves the same bytes as fewer, larger rows,
-        needs NO sort (hash agg), and Python never runs a groupby over
-        the scalar rows — measured 3.6 s -> 0.8 s for the non-kernel
-        floor of the 11.4M-row periodogram headline at sf1.  Same
-        numbers: per-entity arrays are identical (lexsort tie order,
-        NaN-for-null via Arrow, the band-code guard — all exactly
-        _prepare_arrays semantics; the struct fields of one collect_list
-        are filled from the same input iterator, so columns cannot
-        misalign)."""
-        import pyarrow as pa
-
+    def _curve_fn(self, has_sigma: bool):
+        """The per-curve callback of :meth:`extract` and
+        :meth:`extract_nested`: ``(t, m[, sigma][, band])`` in (t, m)
+        lexsort order — the tie order of :meth:`_prepare_arrays` — to one
+        feature row."""
         this = self
-        bands = self.bands
-        has_sigma = sigma_col is not None
-        fields = [F.col(t_col).alias("t"), F.col(m_col).alias("m")]
-        if has_sigma:
-            fields.append(F.col(sigma_col).alias("s"))
-        if bands is not None:
-            fields.append(F.col(band_col).alias("b"))
-        curve_col = "_curve" if entity_col != "_curve" else "_curve_"
-        g = (pruned.groupBy(entity_col)
-             .agg(F.collect_list(F.struct(*fields)).alias(curve_col)))
 
-        def fn(batches):
-            for batch in batches:
-                col = batch.column(batch.schema.names.index(curve_col))
-                values = col.values          # struct child (unsliced)
-                offs = col.offsets.to_numpy()  # slice-aware, len+1
-                t_all = values.field(0).to_numpy(zero_copy_only=False) \
-                    .astype(np.float64, copy=False)
-                m_all = values.field(1).to_numpy(zero_copy_only=False) \
-                    .astype(np.float64, copy=False)
-                nxt = 2
-                s_all = None
-                if has_sigma:
-                    s_all = values.field(nxt) \
-                        .to_numpy(zero_copy_only=False) \
-                        .astype(np.float64, copy=False)
-                    nxt += 1
-                b_all = (values.field(nxt).to_numpy(zero_copy_only=False)
-                         if bands is not None else None)
-                nrows = len(col)
-                feats = np.empty((nrows, len(names)), dtype=np.float64)
-                for i in range(nrows):
-                    sl = slice(offs[i], offs[i + 1])
-                    t = t_all[sl]
-                    m = m_all[sl]
-                    # deterministic tie order, identical to
-                    # _prepare_arrays (see there)
-                    order = np.lexsort((m, t))
-                    t = t[order]
-                    m = m[order]
-                    s = s_all[sl][order] if s_all is not None else None
-                    if bands is None:
-                        feats[i] = this._eval_window(t, m, s)
-                    else:
-                        vals = b_all[sl][order]
-                        codes = pd.Categorical(vals,
-                                               categories=bands).codes
-                        # type-mismatch guard — see _prepare_arrays
-                        if len(codes) and (codes == -1).all() \
-                                and isinstance(vals[0], (str, bytes)) \
-                                != isinstance(bands[0], (str, bytes)):
-                            raise ValueError(
-                                f"band column type cannot match "
-                                f"bands={bands!r} (all codes -1)")
-                        feats[i] = this._eval_window_banded(t, m, s, codes)
-                out_schema = pa.schema(
-                    [batch.schema.field(entity_col)]
-                    + [pa.field(n, pa.float64()) for n in names])
-                # from_pandas=True: NaN -> SQL NULL, matching the pandas
-                # serializer of the replaced mapInPandas route (fill rows
-                # were NULL there; a bare pa.array would keep NaN doubles
-                # and silently change fill semantics)
-                arrays = [batch.column(
-                    batch.schema.names.index(entity_col))] \
-                    + [pa.array(feats[:, j], from_pandas=True)
-                       for j in range(len(names))]
-                yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
-
-        return g.select(entity_col, curve_col).mapInArrow(fn, schema)
+        def fn(t, m, *rest):
+            s = rest[0] if has_sigma else None
+            if this.bands is None:
+                vec = this._eval_window(t, m, s)
+            else:
+                vec = this._eval_window_banded(t, m, s,
+                                               this._band_codes(rest[-1]))
+            return vec[:, None]
+        return fn
 
     # ---- point-in-time extraction ----------------------------------------
 
@@ -510,15 +416,14 @@ class FeatureExtractor:
         integer, and ANY null (list, struct, or field level) is rejected
         (features.rs:1795-1811).
 
-        Because each row already carries its complete curve, this is a
-        ZERO-SHUFFLE map (mapInArrow): no groupBy, no exchange — the plan
-        a nested Iceberg/parquet layout buys at scale.  All non-curve
-        columns pass through untouched.  Output equals
-        :meth:`extract` on the exploded long format (asserted in
-        tests/test_extract.py).
+        Because each row already carries its complete curve, this is the
+        map half of :meth:`extract` alone (:func:`~.grouped.map_curves`,
+        same callback): no groupBy, no exchange — the plan a nested
+        Iceberg/parquet layout buys at scale.  All non-curve columns pass
+        through untouched.  Output equals :meth:`extract` on the exploded
+        long format, fill values as SQL NULL in both (asserted inside
+        Spark in tests/test_extract.py).
         """
-        import pyarrow as pa
-
         elem = df.schema[curve_col].dataType
         if not isinstance(elem, T.ArrayType) \
                 or not isinstance(elem.elementType, T.StructType):
@@ -574,72 +479,19 @@ class FeatureExtractor:
 
         pass_names = [c for c in df.columns if c != curve_col]
         self._check_name_collisions(pass_names, "pass-through columns")
-        schema = T.StructType(
-            [df.schema[c] for c in pass_names] + self._feature_fields())
-        names = self.names
-        this = self
-        bands = self.bands
-
-        def fn(batches):
-            for batch in batches:
-                col = batch.column(batch.schema.names.index(curve_col))
-                if col.null_count:
-                    raise ValueError("null curves are not allowed")
-                values = col.values          # struct child (unsliced)
-                if values.null_count:
-                    raise ValueError("null curve elements are not allowed")
-                offs = col.offsets.to_numpy()  # slice-aware, len(batch)+1
-                childs = {}
-                for idx, _role in numeric:
-                    ch = values.field(idx)
-                    if ch.null_count:
-                        raise ValueError(
-                            "null t/m/sigma values are not allowed")
-                    childs[idx] = ch.to_numpy(zero_copy_only=False) \
-                        .astype(np.float64, copy=False)
-                if b_idx is not None:
-                    bch = values.field(b_idx)
-                    if bch.null_count:
-                        raise ValueError("null band values are not allowed")
-                    band_all = bch.to_numpy(zero_copy_only=False)
-                nrows = len(col)
-                feats = np.empty((nrows, len(names)), dtype=np.float64)
-                for i in range(nrows):
-                    sl = slice(offs[i], offs[i + 1])
-                    t = childs[t_idx][sl]
-                    m = childs[m_idx][sl]
-                    # deterministic tie order on duplicate t, identical
-                    # to the plain t-sort when t is unique (see
-                    # _prepare_arrays)
-                    order = np.lexsort((m, t))
-                    t = t[order]
-                    m = m[order]
-                    s = (childs[s_idx][sl][order]
-                         if s_idx is not None else None)
-                    if bands is None:
-                        feats[i] = this._eval_window(t, m, s)
-                    else:
-                        bvals = band_all[sl][order]
-                        codes = pd.Categorical(bvals,
-                                               categories=bands).codes
-                        # type-mismatch guard — see _prepare_arrays
-                        if len(codes) and (codes == -1).all() \
-                                and isinstance(bvals[0], (str, bytes)) \
-                                != isinstance(bands[0], (str, bytes)):
-                            raise ValueError(
-                                f"band field type cannot match "
-                                f"bands={bands!r} (all codes -1)")
-                        feats[i] = this._eval_window_banded(t, m, s, codes)
-                out = pa.schema(
-                    [batch.schema.field(n) for n in pass_names]
-                    + [pa.field(n, pa.float64()) for n in names])
-                arrays = [batch.column(batch.schema.names.index(n))
-                          for n in pass_names] \
-                    + [pa.array(feats[:, j]) for j in range(len(names))]
-                yield pa.RecordBatch.from_arrays(arrays, schema=out)
-
-        cols = pass_names + [curve_col]
-        out = df.select(*cols).mapInArrow(fn, schema)
+        # ANY null — list, element, or a used field — is rejected before
+        # the map (NaN-for-null is the long-format convention only)
+        used = [i for i in (t_idx, m_idx, s_idx, b_idx) if i is not None]
+        curve = F.col(curve_col)
+        bad = curve.isNull() | F.exists(curve, lambda e: reduce(
+            lambda a, b: a | b,
+            [e.getField(struct_fields[i].name).isNull() for i in used],
+            e.isNull()))
+        checked = df.withColumn(curve_col, F.when(bad, F.raise_error(F.lit(
+            "null curves, curve elements and t/m/sigma/band values are "
+            "not allowed"))).otherwise(curve))
+        out = map_curves(checked, curve_col, used, self._feature_fields(),
+                         self._curve_fn(s_idx is not None), order=[0, 1])
         return self._apply_transforms(out)
 
     # ---- Bins meta-feature composition -------------------------------------

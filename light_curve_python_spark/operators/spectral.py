@@ -11,14 +11,13 @@ from __future__ import annotations
 from typing import Optional, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..functions.kernels import periodogram_power
 from .dmdt import (count_dt_kernel, dmdt_gausses_kernel, dmdt_points_kernel,
                    normalize_dmdt)
-from .grouped import grouped_map_batches, per_group
+from .grouped import grouped_map
 
 __all__ = ["periodogram_freq_power", "multiband_periodogram",
            "multiband_power", "dmdt_maps", "rainbow_fit"]
@@ -34,26 +33,43 @@ def periodogram_freq_power(obs: DataFrame, entity_col: str = "doc_id",
     """(entity, freqs array, power array) — raw Lomb-Scargle grid per
     entity.  fast=True (the reference default) uses the Press-Rybicki FFT
     evaluator."""
-    schema = T.StructType([
-        obs.schema[entity_col],
+    out_fields = [
         T.StructField("freqs", T.ArrayType(T.DoubleType()), False),
         T.StructField("power", T.ArrayType(T.DoubleType()), False),
-    ])
+    ]
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        t = pdf[t_col].to_numpy(np.float64)
-        order = np.argsort(t, kind="mergesort")
-        t = t[order]
-        m = pdf[m_col].to_numpy(np.float64)[order]
+    def fn(t, m):
         freqs, power = periodogram_power(
             t, m, resolution=resolution, max_freq_factor=max_freq_factor,
             nyquist=nyquist, normalization=normalization, fast=fast)
-        return pd.DataFrame({entity_col: [pdf[entity_col].iloc[0]],
-                             "freqs": [freqs], "power": [power]})
+        return [freqs], [power]
 
-    return grouped_map_batches(obs.select(entity_col, t_col, m_col),
-                               entity_col, schema,
-                               per_group(entity_col, fn))
+    return grouped_map(obs, entity_col, [t_col, m_col], out_fields, fn,
+                       order_cols=(t_col, m_col))
+
+
+def _band_power(t_all, m_all, s_all, b_all, bands, weighting, power):
+    """Weighted mean of per-band standardized powers — the combine stage
+    of the reference's multiband Periodogram (src/features.rs:4513-4543),
+    weights 'chi2' (per-band Σ((m-m̄)/σ)²) or 'count' (per-band n).
+    ``power(t, y)`` evaluates one band; bands with fewer than 3 points or
+    zero variance are skipped, and ``None`` means no band was usable."""
+    num = 0.0
+    den = 0.0
+    for b in bands:
+        mask = b_all == b
+        if mask.sum() < 3:
+            continue
+        t, m, s = t_all[mask], m_all[mask], s_all[mask]
+        std = np.std(m, ddof=1)
+        if std == 0:
+            continue
+        y = (m - np.mean(m)) / std
+        w = (float(np.sum(((m - np.mean(m)) / s) ** 2))
+             if weighting == "chi2" else float(len(m)))
+        num = num + w * power(t, y)
+        den += w
+    return num / den if den > 0 else None
 
 
 def multiband_periodogram(obs: DataFrame, bands: Sequence[str],
@@ -89,89 +105,31 @@ def multiband_periodogram(obs: DataFrame, bands: Sequence[str],
         raise ValueError("weighting must be 'chi2' or 'count'")
     names = [x for i in range(peaks)
              for x in (f"period_{i}", f"period_s_to_n_{i}")]
-    schema = T.StructType(
-        [obs.schema[entity_col]]
-        + [T.StructField(n, T.DoubleType()) for n in names])
 
-    def eval_entity(t_all, m_all, s_all, b_all):
-        order = np.argsort(t_all, kind="mergesort")
-        t_all = t_all[order]
-        m_all = m_all[order]
-        s_all = s_all[order]
-        b_all = b_all[order]
-        freqs = periodogram_freq_grid(t_all, resolution, max_freq_factor)
-        num = np.zeros(len(freqs))
-        den = 0.0
-        for b in bands:
-            mask = b_all == b
-            if mask.sum() < 3:
-                continue
-            t, m, s = t_all[mask], m_all[mask], s_all[mask]
-            std = np.std(m, ddof=1)
-            if std == 0:
-                continue
-            y = (m - np.mean(m)) / std
-            if fast:
-                p = lomb_scargle_power_fast(t, y, freqs[0], len(freqs))
-            else:
-                p = lomb_scargle_power(t, y, freqs)
-            w = (float(np.sum(((m - np.mean(m)) / s) ** 2))
-                 if weighting == "chi2" else float(len(m)))
-            num += w * p
-            den += w
+    def fn(t, m, s, b):
+        freqs = periodogram_freq_grid(t, resolution, max_freq_factor)
+        if fast:
+            power = _band_power(t, m, s, b, bands, weighting,
+                                lambda tb, y: lomb_scargle_power_fast(
+                                    tb, y, freqs[0], len(freqs)))
+        else:
+            power = _band_power(t, m, s, b, bands, weighting,
+                                lambda tb, y: lomb_scargle_power(tb, y,
+                                                                 freqs))
+        # missing peaks are NaN, surfacing as SQL NULL
         vals = np.full(2 * peaks, np.nan)
-        if den > 0:
-            power = num / den
+        if power is not None:
             top = periodogram_peak_indices(power, peaks)
             p_mean = np.mean(power)
             p_std = np.std(power, ddof=1)
             for rank, i in enumerate(top):
                 vals[2 * rank] = 2.0 * _math.pi / freqs[i]
                 vals[2 * rank + 1] = (power[i] - p_mean) / p_std
-        return vals
+        return vals[:, None]
 
-    # aggregate-then-map (see FeatureExtractor._extract_agg_arrow): one
-    # list<struct> row per entity via hash agg — no partition sort, no
-    # Python-side groupby over the scalar rows; per-band numerics are
-    # unchanged (band subsequences are t-sorted either way)
-    import pyarrow as pa
-    from pyspark.sql import functions as F
-    g = (obs.select(entity_col, t_col, m_col, sigma_col, band_col)
-         .groupBy(entity_col)
-         .agg(F.collect_list(F.struct(
-             F.col(t_col).alias("t"), F.col(m_col).alias("m"),
-             F.col(sigma_col).alias("s"), F.col(band_col).alias("b")))
-             .alias("_curve")))
-
-    def fn(batches):
-        for batch in batches:
-            col = batch.column(batch.schema.names.index("_curve"))
-            values = col.values
-            offs = col.offsets.to_numpy()
-            t_all = values.field(0).to_numpy(zero_copy_only=False) \
-                .astype(np.float64, copy=False)
-            m_all = values.field(1).to_numpy(zero_copy_only=False) \
-                .astype(np.float64, copy=False)
-            s_all = values.field(2).to_numpy(zero_copy_only=False) \
-                .astype(np.float64, copy=False)
-            b_all = values.field(3).to_numpy(zero_copy_only=False)
-            nrows = len(col)
-            feats = np.empty((nrows, 2 * peaks), dtype=np.float64)
-            for i in range(nrows):
-                sl = slice(offs[i], offs[i + 1])
-                feats[i] = eval_entity(t_all[sl], m_all[sl],
-                                       s_all[sl], b_all[sl])
-            out_schema = pa.schema(
-                [batch.schema.field(entity_col)]
-                + [pa.field(n, pa.float64()) for n in names])
-            # from_pandas=True: NaN -> SQL NULL, matching the replaced
-            # pandas route's serializer (missing peaks were NULL there)
-            arrays = [batch.column(batch.schema.names.index(entity_col))] \
-                + [pa.array(feats[:, j], from_pandas=True)
-                   for j in range(2 * peaks)]
-            yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
-
-    return g.mapInArrow(fn, schema)
+    return grouped_map(obs, entity_col, [t_col, m_col, sigma_col, band_col],
+                       [T.StructField(n, T.DoubleType()) for n in names],
+                       fn, order_cols=(t_col, m_col))
 
 
 def multiband_power(obs: DataFrame, bands: Sequence[str],
@@ -191,47 +149,21 @@ def multiband_power(obs: DataFrame, bands: Sequence[str],
     if weighting not in ("chi2", "count"):
         raise ValueError("weighting must be 'chi2' or 'count'")
     freqs_arr = np.asarray(list(freqs), dtype=np.float64)
-    schema = T.StructType([
-        obs.schema[entity_col],
+    out_fields = [
         T.StructField("freq_idx", T.LongType(), False),
         T.StructField("power", T.DoubleType(), False),
-    ])
+    ]
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        t_all = pdf[t_col].to_numpy(np.float64)
-        order = np.argsort(t_all, kind="mergesort")
-        t_all = t_all[order]
-        m_all = pdf[m_col].to_numpy(np.float64)[order]
-        s_all = pdf[sigma_col].to_numpy(np.float64)[order]
-        b_all = pdf[band_col].to_numpy()[order]
-        num = np.zeros(len(freqs_arr))
-        den = 0.0
-        for b in bands:
-            mask = b_all == b
-            if mask.sum() < 3:
-                continue
-            t, m, s = t_all[mask], m_all[mask], s_all[mask]
-            std = np.std(m, ddof=1)
-            if std == 0:
-                continue
-            y = (m - np.mean(m)) / std
-            p = lomb_scargle_power(t, y, freqs_arr)
-            w = (float(np.sum(((m - np.mean(m)) / s) ** 2))
-                 if weighting == "chi2" else float(len(m)))
-            num += w * p
-            den += w
-        if den == 0:
-            return pd.DataFrame({entity_col: pdf[entity_col].iloc[:0],
-                                 "freq_idx": pd.Series([], dtype="int64"),
-                                 "power": pd.Series([], dtype="float64")})
-        return pd.DataFrame({
-            entity_col: pdf[entity_col].iloc[0],
-            "freq_idx": np.arange(len(freqs_arr), dtype=np.int64),
-            "power": num / den})
+    def fn(t, m, s, b):
+        power = _band_power(t, m, s, b, bands, weighting,
+                            lambda tb, y: lomb_scargle_power(tb, y,
+                                                             freqs_arr))
+        if power is None:
+            return None
+        return np.arange(len(freqs_arr), dtype=np.int64), power
 
-    return grouped_map_batches(
-        obs.select(entity_col, t_col, m_col, sigma_col, band_col),
-        entity_col, schema, per_group(entity_col, fn))
+    return grouped_map(obs, entity_col, [t_col, m_col, sigma_col, band_col],
+                       out_fields, fn, order_cols=(t_col, m_col))
 
 
 def dmdt_maps(obs: DataFrame, entity_col: str = "doc_id", t_col: str = "t",
@@ -247,37 +179,28 @@ def dmdt_maps(obs: DataFrame, entity_col: str = "doc_id", t_col: str = "t",
                       else np.logspace(-1, 2, 17))
     dm_e = np.asarray(dm_edges if dm_edges is not None
                       else np.linspace(-2, 2, 17))
-    cols = [entity_col, t_col, m_col]
+    cols = [t_col, m_col]
     if gausses:
         if sigma_col is None:
             raise ValueError("gausses requires sigma_col")
         cols.append(sigma_col)
-    schema = T.StructType([
-        obs.schema[entity_col],
+    out_fields = [
         T.StructField("dmdt", T.ArrayType(T.DoubleType()), False),
         T.StructField("n_dt", T.IntegerType(), False),
         T.StructField("n_dm", T.IntegerType(), False),
-    ])
+    ]
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        t = pdf[t_col].to_numpy(np.float64)
-        order = np.argsort(t, kind="mergesort")
-        t = t[order]
-        m = pdf[m_col].to_numpy(np.float64)[order]
+    def fn(t, m, *s):
         if gausses:
-            s = pdf[sigma_col].to_numpy(np.float64)[order]
-            hist = dmdt_gausses_kernel(t, m, s, dt_e, dm_e)
+            hist = dmdt_gausses_kernel(t, m, s[0], dt_e, dm_e)
         else:
             hist = dmdt_points_kernel(t, m, dt_e, dm_e)
         dtc = count_dt_kernel(t, dt_e) if "dt" in norm else None
         hist = normalize_dmdt(hist, norm, dt_counts=dtc)
-        return pd.DataFrame({entity_col: [pdf[entity_col].iloc[0]],
-                             "dmdt": [hist.ravel()],
-                             "n_dt": [hist.shape[0]],
-                             "n_dm": [hist.shape[1]]})
+        return [hist.ravel()], [hist.shape[0]], [hist.shape[1]]
 
-    return grouped_map_batches(obs.select(*cols), entity_col, schema,
-                               per_group(entity_col, fn))
+    return grouped_map(obs, entity_col, cols, out_fields, fn,
+                       order_cols=(t_col, m_col))
 
 
 def rainbow_fit(obs: DataFrame, band_wave_cm, entity_col: str = "doc_id",
@@ -320,26 +243,19 @@ def rainbow_fit(obs: DataFrame, band_wave_cm, entity_col: str = "doc_id",
                           if not nm.endswith("_err")])
     err_idx = np.array([i for i, nm in enumerate(names)
                         if nm.endswith("_err")], dtype=int)
-    schema = T.StructType(
-        [obs.schema[entity_col]]
-        + [T.StructField(n, T.DoubleType(), True) for n in names])
+    out_fields = [T.StructField(n, T.DoubleType(), True) for n in names]
     waves = {b: float(band_wave_cm[b]) for b in band_names}
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        t = pdf[t_col].to_numpy(np.float64)
-        order = np.argsort(t, kind="mergesort")
-        mask = (pdf[upper_limit_col].to_numpy(bool)[order]
-                if upper_limit_col is not None else None)
+    def fn(t, m, s, b, *upper):
         try:
             with np.errstate(all="ignore"):
                 vec = rainbow_fit_arrays(
-                    t[order], pdf[m_col].to_numpy(np.float64)[order],
-                    pdf[sigma_col].to_numpy(np.float64)[order],
-                    pdf[band_col].to_numpy()[order], waves,
+                    t, m, s, b, waves,
                     with_baseline=with_baseline, max_iter=max_iter,
                     n_starts=n_starts, bolometric=bolometric,
                     temperature=temperature, spectral=spectral,
-                    upper_mask=mask, with_errors=with_errors)
+                    upper_mask=upper[0].astype(bool) if upper else None,
+                    with_errors=with_errors)
             if not np.all(np.isfinite(vec[value_idx])) \
                     or (len(err_idx) and np.any(np.isnan(vec[err_idx]))):
                 raise ValueError("non-finite fit")
@@ -348,12 +264,10 @@ def rainbow_fit(obs: DataFrame, band_wave_cm, entity_col: str = "doc_id",
             if fill_value is None:
                 raise
             vec = np.full(len(names), float(fill_value))
-        row = {entity_col: [pdf[entity_col].iloc[0]]}
-        row.update({n: [v] for n, v in zip(names, vec)})
-        return pd.DataFrame(row)
+        return np.asarray(vec, dtype=np.float64)[:, None]
 
-    cols = [entity_col, t_col, m_col, sigma_col, band_col]
+    cols = [t_col, m_col, sigma_col, band_col]
     if upper_limit_col is not None:
         cols.append(upper_limit_col)
-    return grouped_map_batches(obs.select(*cols), entity_col, schema,
-                               per_group(entity_col, fn))
+    return grouped_map(obs, entity_col, cols, out_fields, fn,
+                       order_cols=(t_col, m_col))

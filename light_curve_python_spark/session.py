@@ -97,7 +97,8 @@ def get_spark(master: Optional[str] = None,
         # whole curves as list<struct> rows, so a records-only cap would
         # let a few million-point entities put GBs into one Python batch
         # (guide §4.2); 64m splits such batches with no effect on the
-        # common case
+        # common case (one entity's row is never split — see the size
+        # limit in operators/grouped.py)
         .config("spark.sql.execution.arrow.maxBytesPerBatch",
                 str(64 * 1024 * 1024))
         # runtime re-planning: partition coalescing + skew-join splitting

@@ -9,7 +9,7 @@ state and emit the running answer as events arrive.
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator, Tuple
+from typing import Iterable, Iterator, Optional, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -28,10 +28,10 @@ STATE_SCHEMA = T.StructType([
 def streaming_n_not_det_before_fd(events: DataFrame,
                                   key_col: str = "user_id",
                                   ts_col: str = "ts", m_col: str = "value",
-                                  m_threshold: float = None,
-                                  sigma_col: str = None,
+                                  m_threshold: Optional[float] = None,
+                                  sigma_col: Optional[str] = None,
                                   signal_to_noise: float = 5.0,
-                                  sigma_threshold: float = None
+                                  sigma_threshold: Optional[float] = None
                                   ) -> DataFrame:
     """Streaming count of non-detections before the first detection per
     key.  Two detection rules: with ``sigma_col`` set, a row is a

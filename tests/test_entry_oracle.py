@@ -158,25 +158,30 @@ def test_oracle_sql_order_matches_queries():
 def test_nn_jaccard_wide_id_fallback(spark, sf_dir, tmp_path):
     """The packed-pair-key fast path in q_nearest_neighbor_jaccard is
     gated on every doc id fitting 32 bits; ids at/above 2^31 must take
-    the exact two-column aggregation and still match the (unchanged)
-    DuckDB twin byte-for-byte."""
+    the exact two-column aggregation, and int32 ids the packed path with
+    the ids widened before the shift — both must still match the
+    (unchanged) DuckDB twin byte-for-byte."""
+    import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     src = pq.read_table(f"{sf_dir}/documents.parquet")
-    wide = src.set_column(
-        src.schema.get_field_index("doc_id"), "doc_id",
-        pc.add(src.column("doc_id"), (1 << 31)))
-    d = tmp_path / "widedocs"
-    d.mkdir()
-    pq.write_table(wide, str(d / "documents.parquet"))
+    col = src.schema.get_field_index("doc_id")
+    for name, ids in (
+            ("wide", pc.add(src.column("doc_id"), (1 << 31))),
+            ("int32", src.column("doc_id").cast(pa.int32()))):
+        d = tmp_path / f"{name}docs"
+        d.mkdir()
+        pq.write_table(src.set_column(col, "doc_id", ids),
+                       str(d / "documents.parquet"))
 
-    spark_pdf = E.q_nearest_neighbor_jaccard(spark, str(d)).toPandas()
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW documents AS SELECT * FROM "
-                f"'{d}/documents.parquet'")
-    duck_pdf = con.execute(E.SQL_NN_JACCARD).fetchdf()
-    con.close()
-    assert (spark_pdf["doc_id"] >= (1 << 31)).all()
-    assert _compare("nn_jaccard_wide_id", spark_pdf, duck_pdf) == 0
-    assert _digest(spark_pdf) == _digest(duck_pdf)
+        spark_pdf = E.q_nearest_neighbor_jaccard(spark, str(d)).toPandas()
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM "
+                    f"'{d}/documents.parquet'")
+        duck_pdf = con.execute(E.SQL_NN_JACCARD).fetchdf()
+        con.close()
+        if name == "wide":
+            assert (spark_pdf["doc_id"] >= (1 << 31)).all()
+        assert _compare(f"nn_jaccard_{name}_id", spark_pdf, duck_pdf) == 0
+        assert _digest(spark_pdf) == _digest(duck_pdf)

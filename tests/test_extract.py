@@ -322,43 +322,61 @@ def test_float32_input_parity(spark):
     np.testing.assert_allclose(a.to_numpy(), b.to_numpy(), rtol=2e-3)
 
 
-def test_extract_grouped_batches_equals_per_group(spark):
-    """The many-entities-per-call mapInPandas path must be value-identical
-    to the one-call-per-group applyInPandas path, including when entities
-    straddle Arrow batch boundaries (forced tiny batches)."""
+def _serial_reference(pdf, kernels, bands=None):
+    """Whole-entity features by a local pandas groupby (null keys kept)
+    — an independent serial twin of ``extract`` that shares only the
+    kernels, not the grouping or slicing code.  Compare with RTOL, not
+    bitwise: numpy's SIMD reductions inside the kernels round differently
+    with the memory alignment of their input (~1e-13 relative)."""
+    def one(g):
+        g = g.sort_values(["t", "m"])
+        t, m, s = (g[c].to_numpy(float) for c in ("t", "m", "sigma"))
+        if bands is None:
+            return evaluate_many(kernels, t, m, s, np.nan)
+        b = g.band.to_numpy()
+        return np.concatenate([
+            evaluate_many(kernels, t[b == x], m[b == x], s[b == x], np.nan)
+            for x in bands])
+    # string keys; the null group's NaN label becomes None
+    return {k if isinstance(k, str) else None: one(g)
+            for k, g in pdf.groupby("doc_id", dropna=False)}
+
+
+def test_extract_tiny_batches_matches_serial_reference(spark):
+    """Many entities per Python call must equal the serial per-entity
+    reference, including when Arrow batches are forced tiny (7 rows; the
+    80-point entity alone has more points than a batch holds rows)."""
     import pandas as pd
     from light_curve_python_spark.operators.extract import FeatureExtractor
     rng = np.random.default_rng(7)
     frames = []
     for e in range(25):
-        # e07 is a giant entity spanning MANY forced-tiny Arrow batches,
-        # exercising the carry buffer's whole-batch continuation path
         n = 80 if e == 7 else int(rng.integers(2, 30))
         frames.append(pd.DataFrame({
             "doc_id": f"e{e:02d}",
             "t": np.sort(rng.uniform(0, 100, n)),
             "m": rng.uniform(15, 21, n),
             "sigma": rng.uniform(0.01, 0.2, n)}))
-    df = spark.createDataFrame(pd.concat(frames, ignore_index=True))
+    pdf = pd.concat(frames, ignore_index=True)
+    df = spark.createDataFrame(pdf)
     ex = FeatureExtractor(["amplitude", "mean", "standard_deviation",
                            "stetson_k", "linear_fit", "otsu_split",
                            "inter_percentile_range"])
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     try:
-        # tiny batches: most entities straddle a batch boundary, so the
-        # carry path is exercised hard
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-        a = ex.extract(df, band_col=None).toPandas() \
+        got = ex.extract(df, band_col=None).toPandas() \
             .set_index("doc_id").sort_index()
-        b = ex.extract(df, band_col=None, grouped_batches=False) \
-            .toPandas().set_index("doc_id").sort_index()
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    assert list(a.index) == list(b.index)
-    np.testing.assert_array_equal(a.to_numpy(), b.to_numpy())
+    want = _serial_reference(pdf, ex.kernels)
+    assert list(got.index) == sorted(want)
+    np.testing.assert_allclose(
+        got[ex.names].to_numpy(), np.stack([want[k] for k in got.index]),
+        rtol=RTOL)
 
 
-def test_extract_grouped_batches_banded(spark):
+def test_extract_banded_matches_serial_reference(spark):
     import pandas as pd
     from light_curve_python_spark.operators.extract import FeatureExtractor
     rng = np.random.default_rng(8)
@@ -371,18 +389,21 @@ def test_extract_grouped_batches_banded(spark):
             "m": rng.uniform(15, 21, n),
             "sigma": rng.uniform(0.01, 0.2, n),
             "band": rng.choice(["g", "r"], n)}))
-    df = spark.createDataFrame(pd.concat(frames, ignore_index=True))
+    pdf = pd.concat(frames, ignore_index=True)
     ex = FeatureExtractor(["mean", "amplitude"], bands=["g", "r"])
-    a = ex.extract(df).toPandas().set_index("doc_id").sort_index()
-    b = ex.extract(df, grouped_batches=False).toPandas() \
+    got = ex.extract(spark.createDataFrame(pdf)).toPandas() \
         .set_index("doc_id").sort_index()
-    np.testing.assert_array_equal(a.to_numpy(), b.to_numpy())
+    want = _serial_reference(pdf, ex.kernels, bands=["g", "r"])
+    assert list(got.index) == sorted(want)
+    np.testing.assert_allclose(
+        got[ex.names].to_numpy(), np.stack([want[k] for k in got.index]),
+        rtol=RTOL)
 
 
 def test_extract_null_entity_key_parity(spark):
-    """Null entity keys form one group in BOTH extract paths (pandas
-    groupby would silently drop them without dropna=False — round-3
-    review finding)."""
+    """A null entity key forms ONE group, as in pandas
+    ``groupby(dropna=False)`` (a plain pandas groupby would silently drop
+    it — round-3 review finding)."""
     import pandas as pd
     from light_curve_python_spark.operators.extract import FeatureExtractor
     rng = np.random.default_rng(9)
@@ -394,16 +415,40 @@ def test_extract_null_entity_key_parity(spark):
             "t": np.sort(rng.uniform(0, 100, n)),
             "m": rng.uniform(15, 21, n),
             "sigma": rng.uniform(0.01, 0.2, n)}))
-    df = spark.createDataFrame(pd.concat(frames, ignore_index=True))
+    pdf = pd.concat(frames, ignore_index=True)
     ex = FeatureExtractor(["mean", "amplitude"])
-    a = ex.extract(df, band_col=None).toPandas()
-    b = ex.extract(df, band_col=None, grouped_batches=False).toPandas()
-    assert len(a) == 3 and len(b) == 3
-    av = a.sort_values("mean").reset_index(drop=True)
-    bv = b.sort_values("mean").reset_index(drop=True)
-    np.testing.assert_allclose(av[["mean", "amplitude"]].to_numpy(),
-                               bv[["mean", "amplitude"]].to_numpy())
-    assert a.doc_id.isna().sum() == 1
+    got = ex.extract(spark.createDataFrame(pdf).repartition(3),
+                     band_col=None).toPandas()
+    want = _serial_reference(pdf, ex.kernels)
+    assert len(got) == 3 and got.doc_id.isna().sum() == 1
+    assert len(want) == 3
+    for _, row in got.iterrows():
+        key = row.doc_id if isinstance(row.doc_id, str) else None
+        np.testing.assert_allclose(row[ex.names].to_numpy(float),
+                                   want[key], rtol=RTOL)
+
+
+def test_extract_nested_null_fill_equals_long_in_spark(spark):
+    """extract_nested and extract emit fill rows the same way (SQL NULL),
+    so the two outputs are equal inside Spark — checked null-safely with
+    exceptAll both ways, not after toPandas (which maps both NULL and NaN
+    to NaN)."""
+    from pyspark.sql import functions as F
+    from light_curve_python_spark.operators.extract import FeatureExtractor
+    obs = spark.createDataFrame(
+        [("a", 1.0, 5.0, 0.1), ("b", 1.0, 5.0, 0.1), ("b", 2.0, 6.0, 0.2),
+         ("b", 3.0, 4.0, 0.1), (None, 2.0, 7.0, 0.3)],
+        "doc_id string, t double, m double, sigma double")
+    # standard_deviation needs >= 2 points: entities a and null fill
+    ex = FeatureExtractor(["mean", "standard_deviation", "linear_fit"])
+    long_out = ex.extract(obs, band_col=None)
+    nested = obs.groupBy("doc_id").agg(
+        F.collect_list(F.struct("t", "m", "sigma")).alias("curve"))
+    nested_out = ex.extract_nested(nested)
+    assert nested_out.filter(
+        F.col("standard_deviation").isNull()).count() == 2
+    assert nested_out.exceptAll(long_out).count() == 0
+    assert long_out.exceptAll(nested_out).count() == 0
 
 
 def test_review_fixes_extract_guards(spark):
