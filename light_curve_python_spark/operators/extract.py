@@ -16,7 +16,11 @@ Arrow-batched Spark operators:
   ROW``): the as-of/point-in-time
   semantics the north rule adds on top of the reference, with zero temporal
   leakage by construction (slices are taken with ``np.searchsorted`` on the
-  sorted time axis, never a full-table filter that could drift).
+  sorted time axis, never a full-table filter that could drift).  One
+  evaluator serves every probe set: an ``applyInArrow`` cogroup of
+  observations and probes per entity; full-history single-band probes
+  share one prefix pass (``PrefixBattery``), horizon and banded probes
+  are evaluated window by window.
 
 All kernels for a row are evaluated in ONE pass per curve — the reference's
 Extractor fusion (features/extractor.py:36-41) — because Catalyst cannot fuse
@@ -29,9 +33,11 @@ a single task.  Only the probe side is split — every probe still sees the full
 observation history, so order-sensitive kernels stay exact (SURVEY.md §7
 "hard parts" (4)).
 
-The token payload (or any probe column) is carried through untouched: feature
-columns are appended to the probe pandas frame, the Arrow round-trip of
-``array<int32>`` is lossless (asserted byte-for-byte in tests/test_extract.py).
+The token payload (or any probe column) is carried through untouched: the
+probe side's Arrow column buffers are passed inline to the output table, next
+to the appended feature columns, so payloads never become Python objects and
+``array<int32>`` tokens stay byte-identical (asserted in
+tests/test_extract.py).
 """
 
 from __future__ import annotations
@@ -41,7 +47,7 @@ from typing import Iterable, List, Optional, Sequence, Union
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -157,24 +163,6 @@ class FeatureExtractor:
                 "to -1 (all-fill output)")
         return codes
 
-    def _prepare_arrays(self, pdf: pd.DataFrame, t_col, m_col, sigma_col,
-                        band_col):
-        t = pdf[t_col].to_numpy(dtype=np.float64)
-        m = pdf[m_col].to_numpy(dtype=np.float64)
-        # lexsort (t, then m): identical to the plain t-sort whenever t
-        # is unique (the validated-ingest guarantee), and a DETERMINISTIC
-        # tie order otherwise — a stable sort alone would preserve
-        # arbitrary shuffle arrival order among equal-t rows, making
-        # consecutive-difference kernels differ between runs/retries
-        order = np.lexsort((m, t))
-        t = t[order]
-        m = m[order]
-        s = (pdf[sigma_col].to_numpy(dtype=np.float64)[order]
-             if sigma_col else None)
-        codes = (self._band_codes(pdf[band_col].to_numpy()[order])
-                 if self.bands is not None else None)
-        return t, m, s, codes
-
     # ---- whole-entity extraction -----------------------------------------
 
     def extract(self, obs: DataFrame, entity_col: str = "doc_id",
@@ -201,7 +189,7 @@ class FeatureExtractor:
     def _curve_fn(self, has_sigma: bool):
         """The per-curve callback of :meth:`extract` and
         :meth:`extract_nested`: ``(t, m[, sigma][, band])`` in (t, m)
-        lexsort order — the tie order of :meth:`_prepare_arrays` — to one
+        lexsort order — the tie order of :meth:`_pit_arrow` — to one
         feature row."""
         this = self
 
@@ -223,59 +211,22 @@ class FeatureExtractor:
             sigma_col: Optional[str] = "sigma", band_col: str = "band",
             ts_col: str = "ts", horizon: Optional[float] = None,
             salt_partitions: Optional[int] = None,
-            hot_threshold: Optional[int] = None,
-            payload_via_join: bool = True,
-            use_arrow: bool = True) -> DataFrame:
+            hot_threshold: Optional[int] = None) -> DataFrame:
         """Feature vector per probe row, window = {obs : t <= ts
-        [and t >= ts - horizon, both bounds inclusive]}.  All probe columns pass through untouched.
+        [and t >= ts - horizon, both bounds inclusive]}.
 
-        payload_via_join: when probes carry extra columns (token payloads),
-        don't ship them through the Python workers at all — the UDF sees only
-        (entity, ts, uid) and the payload is joined back JVM-side by uid.
-        Byte-identical result (it never leaves the JVM), far less Arrow I/O.
+        One ``applyInArrow`` cogroup of observations and probes per entity
+        (:meth:`_pit_arrow`).  All probe columns pass through untouched as
+        raw Arrow buffers — the token payload is never materialized as
+        Python objects.  Fill values surface as SQL NULL.
         """
         # prune sigma when no kernel needs it (an explicitly passed
         # column would otherwise ship through Arrow for nothing, and a
         # sigma-less dataset would fail the select)
         sigma_col = sigma_col if self.needs_sigma else None
-        arrow_ok = (use_arrow and horizon is None and self.bands is None)
-        payload_cols = [c for c in probes.columns
-                        if c not in (entity_col, ts_col)]
-        # collision check on the FULL probe schema before any branching —
-        # the payload_via_join recursion only sees the slim columns, and a
-        # payload column named like a feature output would otherwise
-        # surface as an ambiguous-reference error deep in the job
+        # a payload column named like a feature output would otherwise
+        # surface as a duplicate-name error deep in the job
         self._check_name_collisions(probes.columns, "probe columns")
-        # the uid-join detour only pays when payload columns would otherwise
-        # be materialized as pandas objects; the Arrow path streams them
-        # through as raw buffers, so it keeps the payload inline
-        if payload_via_join and payload_cols and not arrow_ok:
-            # DETERMINISTIC uid: row_number within the entity partition,
-            # ordered by ts.  monotonically_increasing_id depends on the
-            # physical partition layout, so a task retry / AQE replan could
-            # assign different ids in the slim branch vs the join-back
-            # branch.  row_number ties (same entity, same ts) are assigned
-            # arbitrarily, but such probes have IDENTICAL feature input, so
-            # any assignment joins a correct feature row to each payload.
-            # The window shuffles on the same entity key the cogroup needs.
-            w_uid = Window.partitionBy(entity_col).orderBy(ts_col)
-            probes_uid = probes.withColumn(
-                "_probe_rn", F.row_number().over(w_uid))
-            slim = probes_uid.select(entity_col, ts_col, "_probe_rn")
-            feats = self.extract_point_in_time(
-                obs, slim, entity_col, t_col, m_col, sigma_col, band_col,
-                ts_col, horizon, salt_partitions, hot_threshold,
-                payload_via_join=False, use_arrow=use_arrow)
-            # null-SAFE equality on the entity key: the cogroup path emits
-            # fill rows for null-entity probes (groupBy keeps the null
-            # group), and a plain inner join's null != null would silently
-            # drop exactly those rows on this branch
-            f = feats.drop(ts_col)
-            out = probes_uid.join(
-                f, probes_uid[entity_col].eqNullSafe(f[entity_col])
-                & (probes_uid["_probe_rn"] == f["_probe_rn"]),
-                "inner").drop(f[entity_col]).drop(f["_probe_rn"])
-            return out.drop("_probe_rn")
         ocols = [entity_col, t_col, m_col]
         if sigma_col:
             ocols.append(sigma_col)
@@ -289,86 +240,35 @@ class FeatureExtractor:
                 obs_p, probes, entity_col, ts_col,
                 salt_partitions, hot_threshold)
 
+        # again after salting, which adds the _salt probe column
         self._check_name_collisions(probes.columns, "probe columns")
-        probe_fields = [f for f in probes.schema.fields]
-        schema = T.StructType(probe_fields + self._feature_fields())
-        names = self.names
-        this = self
-        # prefix-vectorized path: full-history windows, single band —
-        # evaluates the entire probe set of a group in one pass
-        battery = (PrefixBattery(self.kernels, self.fill_value)
-                   if horizon is None and self.bands is None else None)
-
-        if battery is not None and use_arrow:
-            return self._apply_transforms(self._pit_arrow(
-                obs_p, probes, group_keys, schema, battery,
-                entity_col, t_col, m_col, sigma_col, ts_col))
-
-        def fn(obs_pdf: pd.DataFrame, probes_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(probes_pdf) == 0:
-                return pd.DataFrame(columns=[f.name for f in schema.fields])
-            out = probes_pdf.reset_index(drop=True)
-            if len(obs_pdf) == 0:
-                t = m = np.empty(0)
-                s = np.empty(0) if sigma_col else None
-                codes = (np.empty(0, dtype=np.int8)
-                         if this.bands is not None else None)
-            else:
-                t, m, s, codes = this._prepare_arrays(
-                    obs_pdf, t_col, m_col, sigma_col, band_col)
-            cutoffs = out[ts_col].to_numpy(dtype=np.float64)
-            if battery is not None:
-                ends = np.searchsorted(t, cutoffs, side="right")
-                # a NULL/NaN cutoff must see NOTHING (fill row) — searchsorted
-                # treats NaN as +inf, which would leak the full history
-                ends[np.isnan(cutoffs)] = 0
-                feats = battery.evaluate_prefixes(t, m, s, ends)
-            else:
-                feats = np.empty((len(out), len(names)), dtype=np.float64)
-                for j, cutoff in enumerate(cutoffs):
-                    if np.isnan(cutoff):
-                        # NULL/NaN cutoff sees NOTHING (fill row) — NaN
-                        # compares as +inf in searchsorted and would leak
-                        # the full history
-                        lo = hi = 0
-                    else:
-                        hi = np.searchsorted(t, cutoff, side="right")
-                        # inclusive lower bound: t >= ts - horizon, matching
-                        # Window.rangeBetween(-horizon, 0)
-                        lo = (np.searchsorted(t, cutoff - horizon,
-                                              side="left")
-                              if horizon is not None else 0)
-                    sl = slice(lo, hi)
-                    sw = None if s is None else s[sl]
-                    if codes is None:
-                        feats[j] = this._eval_window(t[sl], m[sl], sw)
-                    else:
-                        feats[j] = this._eval_window_banded(
-                            t[sl], m[sl], sw, codes[sl])
-            # single concat, not 40 per-column inserts per group
-            return pd.concat(
-                [out, pd.DataFrame(feats, columns=list(names))], axis=1)
-
-        grouped = obs_p.groupby(*group_keys).cogroup(
-            probes.groupby(*group_keys))
-        out = grouped.applyInPandas(fn, schema)
+        schema = T.StructType(probes.schema.fields + self._feature_fields())
+        out = self._pit_arrow(obs_p, probes, group_keys, schema, horizon,
+                              t_col, m_col, sigma_col, band_col, ts_col)
         if "_salt" in out.columns:
             out = out.drop("_salt")
         return self._apply_transforms(out)
 
-    # ---- arrow fast path ----------------------------------------------------
-
     def _pit_arrow(self, obs_p: DataFrame, probes: DataFrame, group_keys,
-                   schema, battery, entity_col, t_col, m_col, sigma_col,
+                   schema, horizon, t_col, m_col, sigma_col, band_col,
                    ts_col) -> DataFrame:
-        """applyInArrow variant of the prefix-battery PIT extraction: no
-        pandas materialization — Arrow column buffers go straight to numpy
-        (~25-35% faster end to end than the pandas UDF at both 8 and 32
-        cores on the sf0.1 flagship)."""
+        """The PIT evaluator: Arrow column buffers go straight to numpy,
+        no pandas materialization.  Full-history single-band probe sets
+        run :meth:`PrefixBattery.evaluate_prefixes` over all probes of a
+        group at once; any other probe set (range horizon, bands) slices
+        each probe's window ``[ts - horizon, ts]`` with two
+        ``np.searchsorted`` bounds and evaluates it on its own."""
         import pyarrow as pa
 
-        feature_names = list(battery.names)
+        this = self
+        feature_names = self.names
+        battery = (PrefixBattery(self.kernels, self.fill_value)
+                   if horizon is None and self.bands is None else None)
         probe_names = [f.name for f in probes.schema.fields]
+
+        def column(table, name):
+            return table.column(name).to_numpy().astype(np.float64,
+                                                       copy=False)
 
         def fn(obs_t: "pa.Table", probes_t: "pa.Table") -> "pa.Table":
             out_schema = pa.schema(
@@ -376,32 +276,54 @@ class FeatureExtractor:
                 + [pa.field(n, pa.float64()) for n in feature_names])
             if probes_t.num_rows == 0:
                 return out_schema.empty_table()
-            t = obs_t.column(t_col).to_numpy()
-            m = obs_t.column(m_col).to_numpy()
-            # lexsort (m tiebreak), matching _prepare_arrays: a stable
-            # sort alone keeps arbitrary shuffle arrival order among
-            # equal-t rows, so consecutive-difference kernels would
-            # differ between runs/retries
+            t = column(obs_t, t_col)
+            m = column(obs_t, m_col)
+            # lexsort (t, then m): identical to the plain t-sort whenever
+            # t is unique (the validated-ingest guarantee), and a
+            # DETERMINISTIC tie order otherwise — a stable sort alone
+            # keeps arbitrary shuffle arrival order among equal-t rows,
+            # so consecutive-difference kernels would differ between
+            # runs/retries
             order = np.lexsort((m, t))
             t = t[order]
             m = m[order]
-            s = (obs_t.column(sigma_col).to_numpy()[order]
-                 if sigma_col else None)
-            ts = probes_t.column(ts_col).to_numpy()
+            s = column(obs_t, sigma_col)[order] if sigma_col else None
+            ts = column(probes_t, ts_col)
+            # a NULL/NaN cutoff must see NOTHING (fill row) — searchsorted
+            # treats NaN as +inf, which would leak the full history
+            nan = np.isnan(ts)
             ends = np.searchsorted(t, ts, side="right")
-            ends[np.isnan(ts)] = 0  # NaN cutoff sees nothing (fill row)
-            feats = battery.evaluate_prefixes(t, m, s, ends)
+            ends[nan] = 0
+            if battery is not None:
+                feats = battery.evaluate_prefixes(t, m, s, ends)
+            else:
+                # inclusive lower bound: t >= ts - horizon, matching
+                # Window.rangeBetween(-horizon, 0)
+                starts = (np.searchsorted(t, ts - horizon, side="left")
+                          if horizon is not None
+                          else np.zeros_like(ends))
+                starts[nan] = 0
+                codes = (this._band_codes(
+                    obs_t.column(band_col).to_numpy()[order])
+                    if this.bands is not None else None)
+                feats = np.empty((len(ts), len(feature_names)))
+                for j, (lo, hi) in enumerate(zip(starts, ends)):
+                    sl = slice(lo, hi)
+                    sw = None if s is None else s[sl]
+                    if codes is None:
+                        feats[j] = this._eval_window(t[sl], m[sl], sw)
+                    else:
+                        feats[j] = this._eval_window_banded(
+                            t[sl], m[sl], sw, codes[sl])
             cols = [probes_t.column(n).combine_chunks()
                     for n in probe_names] + \
-                   [pa.array(feats[:, i]) for i in range(feats.shape[1])]
+                   [pa.array(feats[:, i], from_pandas=True)
+                    for i in range(len(feature_names))]
             return pa.Table.from_arrays(cols, schema=out_schema)
 
         grouped = obs_p.groupby(*group_keys).cogroup(
             probes.groupby(*group_keys))
-        out = grouped.applyInArrow(fn, schema)
-        if "_salt" in out.columns:
-            out = out.drop("_salt")
-        return out
+        return grouped.applyInArrow(fn, schema)
 
     # ---- nested-input extraction --------------------------------------------
 

@@ -157,13 +157,23 @@ class CheckpointedRun:
             subset = tagged.filter(F.col("_bucket") == b).drop("_bucket")
             t0 = time.perf_counter()
             out = compute(subset)
-            bpath = self._spark_prefix \
-                + os.path.join(self.output_path, f"bucket={b}")
-            out.write.mode("overwrite").parquet(bpath)
-            rows = out.sparkSession.read.parquet(bpath).count()
-            self._commit(b, rows, time.perf_counter() - t0)
+            bpath = os.path.join(self.output_path, f"bucket={b}")
+            out.write.mode("overwrite").parquet(self._spark_prefix + bpath)
+            self._commit(b, self._parquet_rows(bpath),
+                         time.perf_counter() - t0)
             executed.append(b)
         return executed
+
+    @staticmethod
+    def _parquet_rows(path: str) -> int:
+        """Rows of a written parquet directory, summed from the part files'
+        footers — no Spark job re-reads what was just written.  Spark's
+        ``_``/``.``-prefixed side files (``_SUCCESS``, checksums) are not
+        data."""
+        import pyarrow.parquet as pq
+        return sum(pq.read_metadata(os.path.join(path, f)).num_rows
+                   for f in os.listdir(path)
+                   if not f.startswith(("_", ".")))
 
     def read(self, spark: SparkSession) -> DataFrame:
         paths = [self._spark_prefix

@@ -247,22 +247,25 @@ def test_extract_nested_banded_and_validation(spark):
 def test_nan_probe_ts_sees_nothing(spark, data):
     """A NULL/NaN probe timestamp must produce a FILL row, never the full
     observation history (searchsorted treats NaN as +inf — silent future
-    leakage otherwise).  Covers the battery, arrow, loop, and horizon
-    paths."""
+    leakage otherwise).  Covers the battery, horizon, banded, and
+    banded-plus-horizon windows."""
     obs, probes, _, _ = data
     from pyspark.sql import functions as F
     bad = probes.limit(3).withColumn("ts", F.lit(None).cast("double"))
     mixed = probes.limit(5).unionByName(bad)
-    for kwargs in ({}, {"use_arrow": False}, {"horizon": 50.0}):
+    for bands, kwargs in ((None, {}), (None, {"horizon": 50.0}),
+                          (["g", "r"], {}),
+                          (["g", "r"], {"horizon": 50.0})):
         ex = FeatureExtractor(["observation_count", "mean"],
-                              fill_value=-7.0)
+                              fill_value=-7.0, bands=bands)
         out = ex.extract_point_in_time(
             obs, mixed, entity_col="doc_id", ts_col="ts",
             **kwargs).toPandas()
         nan_rows = out[out.ts.isna()]
         assert len(nan_rows) == 3
-        assert (nan_rows.observation_count == -7.0).all()
-        assert (nan_rows["mean"] == -7.0).all()
+        assert (nan_rows[ex.names] == -7.0).all().all(), (bands, kwargs)
+        assert (out[out.ts.notna()][ex.names] > 0).any().any(), \
+            (bands, kwargs)
 
 
 def test_salted_horizon_equals_unsalted(spark, data):
@@ -508,8 +511,8 @@ def test_review_fixes_extract_guards(spark):
 
 
 def test_pit_arrow_duplicate_t_deterministic(spark):
-    """The arrow PIT path must lexsort (m tiebreak) like _prepare_arrays:
-    with duplicate timestamps, consecutive-difference features were
+    """The PIT evaluator must lexsort (m tiebreak) like extract: with
+    duplicate timestamps, consecutive-difference features were
     arrival-order-dependent under a plain stable sort."""
     import pandas as pd
     rows = [("a", 1.0, 5.0, 0.1), ("a", 2.0, 9.0, 0.1),
@@ -530,11 +533,11 @@ def test_pit_arrow_duplicate_t_deterministic(spark):
         pd.testing.assert_series_equal(outs[0], other, check_names=False)
 
 
-def test_payload_join_keeps_null_entity_and_checks_collisions(spark):
-    """The payload_via_join branch must (a) keep null-entity probe rows
-    (null-safe join; the cogroup path emits fill rows for them) and
-    (b) reject payload columns named like feature outputs BEFORE the
-    slim recursion hides them."""
+def test_inline_payload_keeps_null_entity_and_checks_collisions(spark):
+    """The inline Arrow payload, with and without a horizon, must (a) keep
+    null-entity probe rows as fill rows (the cogroup keeps the null
+    group) and (b) reject payload columns named like feature outputs
+    before the job runs."""
     import numpy as np
     import pandas as pd
     obs = spark.createDataFrame(pd.DataFrame({
@@ -544,13 +547,48 @@ def test_payload_join_keeps_null_entity_and_checks_collisions(spark):
         [("a", 3.0, "x"), (None, 3.0, "y")],
         "doc_id string, ts double, payload string")
     ex = FeatureExtractor(["mean"])
-    out = ex.extract_point_in_time(obs, probes, horizon=10.0).toPandas()
-    assert sorted(out.payload) == ["x", "y"]
-    assert np.isnan(out[out.payload == "y"]["mean"].iloc[0])
-    with pytest.raises(ValueError, match="collide"):
-        ex.extract_point_in_time(
-            obs, probes.withColumnRenamed("payload", "mean"),
-            horizon=10.0)
+    for horizon in (10.0, None):
+        out = ex.extract_point_in_time(obs, probes,
+                                       horizon=horizon).toPandas()
+        assert sorted(out.payload) == ["x", "y"]
+        assert out[out.payload == "x"]["mean"].iloc[0] == 1.5
+        assert np.isnan(out[out.payload == "y"]["mean"].iloc[0])
+        with pytest.raises(ValueError, match="collide"):
+            ex.extract_point_in_time(
+                obs, probes.withColumnRenamed("payload", "mean"),
+                horizon=horizon)
+
+
+def test_banded_point_in_time_matches_numpy(spark, data):
+    """Banded PIT, full history and with a horizon: each probe's window
+    split per band equals a serial per-band numpy evaluation, and the
+    token payload survives byte for byte."""
+    obs, probes, obs_pd, probes_pd = data
+    bands = ["g", "r"]
+    ex = FeatureExtractor(FEATURES, bands=bands)
+    want_payload = probes_pd.set_index(["doc_id", "ts"]).sort_index()
+    for horizon in (None, 100.0):
+        got = ex.extract_point_in_time(obs, probes,
+                                       horizon=horizon).toPandas()
+        assert len(got) == len(probes_pd)
+        for _, row in got.iterrows():
+            g = obs_pd[obs_pd.doc_id == row.doc_id].sort_values("t")
+            keep = g.t <= row.ts
+            if horizon is not None:
+                keep &= g.t >= row.ts - horizon
+            w = g[keep]
+            want = np.concatenate([evaluate_many(
+                ex.kernels, w.t[w.band == b].to_numpy(float),
+                w.m[w.band == b].to_numpy(float),
+                w.sigma[w.band == b].to_numpy(float), fill_value=np.nan)
+                for b in bands])
+            np.testing.assert_allclose(
+                row[ex.names].to_numpy(float), want, rtol=RTOL,
+                equal_nan=True)
+            wt = np.asarray(want_payload.loc[(row.doc_id, row.ts),
+                                             "tokens"], dtype=np.int32)
+            assert wt.tobytes() == np.asarray(row.tokens,
+                                              dtype=np.int32).tobytes()
 
 
 def test_extract_fill_rows_are_sql_null(spark):
@@ -573,3 +611,13 @@ def test_extract_fill_rows_are_sql_null(spark):
     assert rows["a"]["standard_deviation"] is None          # fill -> NULL
     assert rows["b"]["standard_deviation"] is not None
     assert out.filter(F.col("standard_deviation").isNull()).count() == 1
+    # point-in-time, full history (prefix battery) and with a horizon
+    # (per-window): a 1-point window fills, as NULL and never as NaN
+    probes = spark.createDataFrame([("a", 1.0), ("b", 3.0)],
+                                   "doc_id string, ts double")
+    for horizon in (None, 5.0):
+        pit = ex.extract_point_in_time(df, probes, horizon=horizon)
+        sd = F.col("standard_deviation")
+        assert pit.filter(sd.isNull()).count() == 1, horizon
+        assert pit.filter(F.isnan(sd)).count() == 0, horizon
+        assert pit.filter(sd.isNull()).first()["doc_id"] == "a"

@@ -5,7 +5,8 @@ against .explain output, not taken on faith.
 - multi-stage features reuse the entity partitioning (no extra Exchange);
 - small dimension joins broadcast;
 - parquet filters reach the scan (PushedFilters);
-- bucketed tables feed the cogroup with zero Exchanges.
+- bucketed tables feed the cogroup with zero Exchanges;
+- a horizon PIT with a payload is a single Arrow cogroup.
 """
 
 import re
@@ -62,6 +63,19 @@ def test_multistage_features_reuse_partitioning(spark, obs):
     assert _n_exchanges(out) == 1, _plan(out)
     out2 = SQ.weighted_stats(obs, "doc_id", "m", "sigma")
     assert _n_exchanges(out2) <= 2, _plan(out2)
+
+
+def test_horizon_pit_plan_is_one_cogroup(spark, obs):
+    """A horizon PIT over probes with a payload is one Arrow cogroup: one
+    exchange per side, no Window and no join to carry the payload."""
+    from light_curve_python_spark.operators.extract import FeatureExtractor
+    probes = generate_probes(spark, 10, 4, seed=1)
+    out = FeatureExtractor(["mean", "amplitude"]).extract_point_in_time(
+        obs, probes, horizon=30.0)
+    plan = _plan(out)
+    assert plan.count("FlatMapCoGroupsInArrow") == 1, plan
+    assert "Window" not in plan and "Join" not in plan, plan
+    assert _n_exchanges(out) == 2, plan
 
 
 def test_filter_pushdown_to_parquet(spark, sf_dir):
@@ -154,9 +168,31 @@ def test_submit_entrypoint_end_to_end(spark, tmp_path):
     # resume: nothing recomputed
     assert submit_extract.main(argv + ["--resume"]) == 0
     import json
-    with open(f"{out_dir}/_manifest.jsonl") as f:
-        entries = [json.loads(x) for x in f]
-    assert len(entries) == 4  # no duplicate commits after resume
+
+    def manifest_rows(out):
+        with open(f"{out}/_manifest.jsonl") as f:
+            entries = [json.loads(x) for x in f]
+        # each entry's row count (read from the parquet footers) is
+        # Spark's count of the bucket it commits
+        for e in entries:
+            n = spark.read.parquet(f"{out}/bucket={e['bucket']}").count()
+            assert e["rows"] == n, e
+        return [e["rows"] for e in entries]
+
+    assert len(manifest_rows(out_dir)) == 4  # no duplicate commits
+    # two keys over four buckets (at least two buckets empty), output as
+    # a file:/// URI
+    probes2_dir = str(tmp_path / "probes2")
+    spark.read.parquet(probes_dir) \
+        .filter("doc_id IN ('doc00000000', 'doc00000001')") \
+        .write.parquet(probes2_dir)
+    out2 = str(tmp_path / "features2")
+    argv2 = ["--obs", obs_dir, "--probes", probes2_dir,
+             "--output", "file://" + out2, "--features", "mean",
+             "--n-buckets", "4", "--master", "local[4]"]
+    assert submit_extract.main(argv2) == 0
+    rows2 = manifest_rows(out2)
+    assert len(rows2) == 4 and rows2.count(0) >= 2 and sum(rows2) == 6
 
 
 def test_checkpoint_resume_guards(spark, tmp_path):
