@@ -28,9 +28,11 @@ from pyspark.sql import types as T
 from light_curve_python_spark.functions import sqlfeatures as SQ
 from light_curve_python_spark.operators.asof import asof_join
 from light_curve_python_spark.operators.bins import bin_series
+from light_curve_python_spark.operators.dedup import (pair_counts,
+                                                      posting_lists, shingle)
 from light_curve_python_spark.operators.extract import FeatureExtractor
 from light_curve_python_spark.operators.sessionize import session_stats
-from light_curve_python_spark.plans.balance import rebalance_scan, spread
+from light_curve_python_spark.plans.balance import rebalance_scan
 from light_curve_python_spark.operators.windows import (
     backfill,
     rolling_range_agg,
@@ -911,133 +913,29 @@ def q_nearest_neighbor_jaccard(spark, sf_dir):
     generated by an inverted shingle index (pairs must share >= 1 shingle —
     a guaranteed superset of pairs with jaccard > 0).
 
-    r6 single-subtree plan (the former shape recomputed the whole shingle
-    pipeline up to 8x: self-join sides x two sizes joins x the symmetric
-    union — 58 Exchanges / 16 scans in the physical plan):
-    - per-doc DISTINCT hashed shingles IN-ROW (array_distinct before the
-      explode) — the cross-row .distinct() exchange is gone; 8-byte
-      xxhash64 keys instead of ~30-byte strings as before (Jaccard over
-      per-doc distinct hashed shingles equals Jaccard over the strings;
-      a collision would be caught by the DuckDB twin, which keeps them);
-    - the inverted index built ONCE as (sh, list<doc_id>) posting lists;
-      the df prune (identical in the DuckDB twin, so parity holds whether
-      or not the cap fires) is a size() filter on the list;
-    - candidate pairs + |A ∩ B| from a bounded nested explode of each
-      posting list (fan-out d*(d-1)/2 per shingle, <= cap^2 under the df
-      prune) into one partially-aggregated groupBy — no self-join, no
-      second shuffle of the index;
-    - top-1 per doc via a partial-aggregating min(struct(-jaccard, doc_b))
-      over the two exploded directions — replaces the row_number sort
-      window over the doubled pair set (same total order: jaccard DESC,
-      doc_b ASC; jaccard > 0 so the negation is exact)."""
-    docs = rebalance_scan(_docs(spark, sf_dir).select("doc_id", "text"))
-    toks = docs.select(
-        "doc_id",
-        F.filter(F.split("text", " "), lambda w: w != "").alias("ws"))
-    n = F.size("ws") - (SHINGLE_K - 1)
-    # element_at, not slice(): the per-element slice allocated a k-array
-    # per shingle inside the interpreted HOF (3x this stage at sf1)
-    sh_arr = F.array_distinct(F.transform(
-        F.sequence(F.lit(1), n),
-        lambda i: F.xxhash64(F.concat_ws(
-            " ", *[F.element_at("ws", i + j) for j in range(SHINGLE_K)]))))
-    shingles = (toks.filter(n >= 1)
-                .select("doc_id", F.explode(sh_arr).alias("sh")))
-    # posting lists materialized ONCE (eager localCheckpoint, kilobyte-to-
-    # megabyte scale: one short row per distinct shingle) — the four
-    # consumers below (pair generation, sizes, and the single-shingle
-    # branch twice) otherwise each recompute the whole shingle pipeline:
-    # AQE's stage reuse did not canonicalize them together (observed 3
-    # full scans in the executed plan), and this is the same lineage-
-    # truncation device connected_components already uses
-    posts = (shingles.groupBy("sh")
-             .agg(F.collect_list("doc_id").alias("ds"))
-             .filter(F.size("ds") <= MAX_SHINGLE_DF)
-             .localCheckpoint(eager=True))
+    A composition of the dedup operators:
+    - ``shingle`` (per-doc distinct word 3-grams) hashed to 8-byte
+      ``xxhash64`` keys — Jaccard over per-doc distinct hashed shingles
+      equals Jaccard over the strings; a collision would be caught by the
+      DuckDB twin, which keeps the strings;
+    - the pair engine: ``posting_lists`` with the df prune (identical in
+      the DuckDB twin, so parity holds whether or not the cap fires), then
+      ``pair_counts`` for every candidate pair's |A ∩ B|;
+    - per-doc sizes over the PRUNED lists (the twin's ``sizes`` CTE);
+    - top-1 per doc through the exact strong/single split below, so the
+      sorting argmax sees pairs sharing >= 2 shingles plus one
+      single-shingle candidate per doc, not every pair."""
+    sh = shingle(_docs(spark, sf_dir), k=SHINGLE_K) \
+        .select("doc_id", F.xxhash64("sh").alias("sh"))
+    posts, _, stats = posting_lists(sh, "doc_id", MAX_SHINGLE_DF)
     # per-doc surviving-shingle counts: dimension-scale (one row per doc),
     # broadcast-hinted below — Catalyst's pre-AQE size estimate for the
     # exploded pair aggregate is unreliable and it otherwise tries to
     # broadcast the PAIR side (observed OOM at sf1)
     sizes = (posts.select(F.explode("ds").alias("doc_id"))
              .groupBy("doc_id").agg(F.count("*").alias("n_sh")))
-    # spread(): the posting lists are megabytes but explode to ~d^2/2 pair
-    # rows per shingle — without the explicit repartition AQE coalesces
-    # this stage to a couple of tasks (it sizes reducers by input bytes).
-    # Pair generation is a double explode + codegen filter rather than a
-    # HOF filter(): the HOF lambda is interpreted per element and builds
-    # a filtered array per outer row (measured 17.8 s vs 15.4 s at sf1
-    # for the whole pair stage).  The explicit repartition on the
-    # grouping keys then makes the count a post-shuffle-only aggregation:
-    # map-side partial aggregation is pure overhead here (the dedup
-    # factor is ~1.1 — measured 115.9M distinct of 128.8M pair rows at
-    # sf1) and its ~10^6-entry per-task hash maps dominated the stage
-    # (15.8 s partial+final vs 8.8 s repartition+complete).
-    exploded = (spread(posts).select(F.explode("ds").alias("doc_a"), "ds")
-                .select("doc_a", F.explode("ds").alias("doc_b"))
-                .filter(F.col("doc_b") > F.col("doc_a")))
-    # narrow the shuffle key (guide: shuffle fewer bytes / narrower
-    # types): when every doc id fits 32 bits, pack the ordered pair into
-    # ONE bigint — (a << 32) | b is injective for 0 <= a, b < 2^31 — so
-    # the ~10^8-row pair exchange carries 8 key bytes instead of 16 and
-    # the two-phase hash aggregation hashes/compares one long.  Measured
-    # min-of-3 on the sf1-like mirror: 24.7 -> 16.3 s for the isolated
-    # pair stage, pair digests bit-identical.  The bounds probe is one
-    # dimension-scale job over the already-checkpointed posting lists
-    # (same class as the tune_ann/temperature_mix scalar collects); ids
-    # beyond 32 bits (possible at 100 TB) keep the exact two-column plan.
-    _b = posts.select(
-        F.min(F.array_min("ds")).alias("lo"),
-        F.max(F.array_max("ds")).alias("hi"),
-        F.expr("sum(cast(size(ds) as bigint) * (size(ds) - 1) div 2)")
-        .alias("pair_rows")).first()
-    # EXPLICIT, size-derived partition count on the pair exchange.  A bare
-    # repartition(col) is AQE-coalescible, and AQE sizes post-shuffle
-    # reads by BYTES (64 MB advisory => the ~2 GB pair exchange collapses
-    # to ~32 fat partitions); this stage's reduce cost is hash-aggregation
-    # CPU over near-unique keys, not bytes, so byte-coalescing serializes
-    # it onto a few cores and makes each task build a cache-hostile
-    # multi-million-entry map.  An explicit count is exempt from
-    # coalescing: measured min-of-3 at the sf1-like mirror, 12.8 -> 5.9 s
-    # for the isolated pair stage (the small posts/top2 aggregations
-    # measured flat, so only this exchange gets the pin).  The count is
-    # derived from the EXACT pair-row total (sum of d*(d-1)/2 over the
-    # checkpointed posting lists — same dimension-scale job as the id
-    # bounds): ~500k rows per reduce task keeps each task's group map in
-    # the fast cache regime (256 vs 1024 partitions measured flat at
-    # 128.8M rows, AQE's 32 was 2.2x slower), floored at the session's
-    # parallelism and capped at its configured shuffle partitions so tiny
-    # corpora are not over-split (explicit 256 cost +8% at sf0.1) and a
-    # deployment's own sizing is respected at scale.
-    _pr = _b["pair_rows"] or 0
-    try:
-        _cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        # AQE-managed deployments may set a non-numeric value ("auto")
-        _cap = spark.sparkContext.defaultParallelism * 8
-    _np = max(spark.sparkContext.defaultParallelism,
-              min(_cap, int(-(-_pr // 500_000))))
-    if isinstance(_b["lo"], int) and _b["lo"] >= 0 \
-            and _b["hi"] < (1 << 31):
-        # widen BEFORE the shift: an int32 id shifted by 32 wraps to
-        # itself, and (a << 32) | b would collide pairs
-        id_type = exploded.schema["doc_a"].dataType
-        pairs = (exploded
-                 .select(F.shiftleft(F.col("doc_a").cast("long"), 32)
-                         .bitwiseOR(F.col("doc_b").cast("long"))
-                         .alias("pk"))
-                 .repartition(_np, "pk")
-                 .groupBy("pk")
-                 .agg(F.count("*").alias("inter"))
-                 .select(F.shiftrightunsigned("pk", 32).cast(id_type)
-                         .alias("doc_a"),
-                         F.col("pk").bitwiseAND(F.lit((1 << 32) - 1))
-                         .cast(id_type).alias("doc_b"),
-                         "inter"))
-    else:
-        pairs = (exploded
-                 .repartition(_np, "doc_a", "doc_b")
-                 .groupBy("doc_a", "doc_b")
-                 .agg(F.count("*").alias("inter")))
+    pairs = pair_counts(posts, stats).select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "inter")
     # EXACT top-1 split (the min(struct) argmax plans as a SortAggregate,
     # so feeding it all ~10^8 candidate pairs sorts them; the split cuts
     # its input ~10x without changing any result):

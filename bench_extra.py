@@ -9,6 +9,11 @@ With no query names, runs all 12 headlines.  Prints one JSON line
 {"queries": {...}, "sf": ...} (plus per-run draws) for OPTIMIZATION_r06.md
 evidence.  Shares bench.py's session/warmup/datagen so numbers are
 comparable with the frozen harness.
+
+``ngram_jaccard_bounded`` runs bench.py's skewed-corpus jaccard probe
+(bounded default and half-df exact legs, each draw a whole probe run)
+instead of a headline; it is only run when named, and on its own it
+skips the headline datagen and warm-up.
 """
 from __future__ import annotations
 
@@ -20,6 +25,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import bench  # noqa: E402
+
+# bench.py's skewed-corpus jaccard probe (not a headline)
+SKEW_PROBE = "ngram_jaccard_bounded"
 
 
 def main():
@@ -34,25 +42,34 @@ def main():
     only = set(args)
     # the headline table only closes over its arguments, so its names are
     # known before any session, datagen or warm-up work is paid for
-    names = bench._headline_queries(None, None, None)
-    unknown = only - set(names)
+    names = list(bench._headline_queries(None, None, None))
+    unknown = only - set(names) - {SKEW_PROBE}
     if unknown:
         sys.exit(f"unknown queries: {sorted(unknown)}; "
-                 f"choose from {sorted(names)}")
+                 f"choose from {sorted(names + [SKEW_PROBE])}")
+
+    headlines = [n for n in names if not only or n in only]
 
     spark = bench._session(bench.CPUS)
-    obs_path, probes_path = bench._ensure_synth(spark)
-    bench._warmup(spark, obs_path, probes_path)
-    queries = bench._headline_queries(spark, obs_path, probes_path)
     results, runs_log = {}, {}
-    for name, fn in queries.items():
-        if only and name not in only:
-            continue
-        spark.sparkContext.setJobDescription(f"bench_extra: {name}")
-        runs = [bench._time_one(spark, fn) for _ in range(n_runs)]
-        spark.sparkContext.setJobDescription(None)
-        runs_log[name] = [round(r, 3) for r in runs]
-        results[name] = round(min(runs), 3)
+    if headlines:
+        obs_path, probes_path = bench._ensure_synth(spark)
+        bench._warmup(spark, obs_path, probes_path)
+        queries = bench._headline_queries(spark, obs_path, probes_path)
+        for name in headlines:
+            spark.sparkContext.setJobDescription(f"bench_extra: {name}")
+            runs = [bench._time_one(spark, queries[name])
+                    for _ in range(n_runs)]
+            spark.sparkContext.setJobDescription(None)
+            runs_log[name] = [round(r, 3) for r in runs]
+            results[name] = round(min(runs), 3)
+    if SKEW_PROBE in only:
+        skew = [bench._jaccard_skew_bench(spark) for _ in range(n_runs)]
+        legs = {"bounded": [r["bounded_sec"] for r in skew],
+                "exact_half_df": [r["exact_opt_out"]["sec"] for r in skew]}
+        for leg, runs in legs.items():
+            runs_log[f"{SKEW_PROBE}.{leg}"] = runs
+            results[f"{SKEW_PROBE}.{leg}"] = min(runs)
     spark.stop()
     print(json.dumps({"queries": results, "sf": bench.SF,
                       "queries_runs": runs_log,

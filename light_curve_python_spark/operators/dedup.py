@@ -9,24 +9,32 @@ signatures); the oracle-checkable dictionary-id variants live in
   band-bucket self-join.  Candidate pairs are verified with exact Jaccard so
   LSH is a pure candidate generator (no false positives escape).
 - simhash64: one pass, 64 conditional sums per doc.
-- ngram_jaccard_pairs: inverted-index join (pairs must share a shingle) —
-  the standard superset-of-true-pairs candidate generation; a 100 TB corpus
-  additionally prunes by document frequency (drop shingles seen in > df_max
-  docs) which is exposed as ``max_shingle_df``.
+- ngram_jaccard_pairs: inverted-index candidates (pairs must share a
+  shingle) — the standard superset-of-true-pairs generation; a 100 TB
+  corpus additionally prunes by document frequency (drop shingles seen in
+  > df_max docs) which is exposed as ``max_shingle_df``.
+
+The inverted-index pair engine is ``posting_lists`` + ``pair_counts``:
+one eager checkpoint of the posting lists whose stats (id bounds, pair-row
+total, longest kept list) choose the pair generator, the pair key (packed
+long or two columns) and the pair exchange's partition count.  Both
+``ngram_jaccard_pairs`` and the ``nearest_neighbor_jaccard`` entry query
+run on it.
 """
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence
+from typing import Optional, Sequence, Tuple
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..plans.balance import rebalance_scan, spread
 
 __all__ = ["content_digest",
            "exact_dedup", "shingle", "minhash_signatures", "lsh_candidates",
-           "simhash64", "ngram_jaccard_pairs", "connected_components",
+           "simhash64", "posting_lists", "pair_counts",
+           "ngram_jaccard_pairs", "connected_components",
            "dedup_groups", "minhash_dedup", "ngram_contamination"]
 
 
@@ -361,6 +369,122 @@ def dedup_groups(pairs: DataFrame, nodes: DataFrame, node_col: str,
     return cc.withColumn("is_canonical", F.col("id") == F.col("component"))
 
 
+# ~500k pair rows per reduce task keeps each task's count map in the fast
+# cache regime (PAPERS.md: CAMEL's hash-table CPU-vs-memory trade-off;
+# 256 vs 1024 partitions measured flat at 128.8M rows, AQE's byte-sized
+# 32 was 2.2x slower)
+PAIR_ROWS_PER_TASK = 500_000
+# posting lists at least this long generate pairs with a HOF filter
+# instead of the double explode (see _pair_stream).  Measured on 4 cores
+# (ten lists of d members, packed key, median of 3): d = 1024 explode
+# 2.19 s vs HOF 2.61 s; d = 2048 8.60 vs 8.15 s (within noise);
+# d = 3000 21.96 vs 18.94 s.  The skew probe's exact leg (ten lists of
+# ~3000) sits above, the nn_jaccard corpora (d <= 400) far below.
+HOF_MIN_LIST = 2500
+
+
+def posting_lists(sh: DataFrame, id_col: str = "doc_id",
+                  max_df: Optional[int] = None
+                  ) -> Tuple[DataFrame, DataFrame, dict]:
+    """The inverted index of an ``(id_col, sh)`` shingle stream as
+    ``(kept, full, stats)``: ``full`` has one ``(sh, ds)`` row per
+    shingle, ``ds`` the ids holding it; ``kept`` drops the lists longer
+    than ``max_df`` (the document-frequency prune).
+
+    Eager: ``full`` is materialized by one ``localCheckpoint`` (one short
+    row per distinct shingle), so the pair stage, the sizes and any other
+    consumer read it instead of each recomputing the shingle pipeline;
+    ``kept`` is a lazy filter over it.  The same checkpoint job collects,
+    through ``observe``, the stats of the KEPT lists that ``pair_counts``
+    plans with — ``lo``/``hi`` (id bounds), ``pair_rows`` (sum of
+    d*(d-1)/2) and ``longest`` (max d) — so no separate probe job runs.
+    Stats are None when no list is kept."""
+    full = sh.groupBy("sh").agg(F.collect_list(F.col(id_col)).alias("ds"))
+    keep = F.lit(True) if max_df is None else F.size("ds") <= max_df
+    d = F.size("ds")
+    obs = Observation()
+    full = full.observe(
+        obs,
+        F.min(F.when(keep, F.array_min("ds"))).alias("lo"),
+        F.max(F.when(keep, F.array_max("ds"))).alias("hi"),
+        # d*(d-1) is even, so halving the sum is exact
+        F.shiftright(F.sum(F.when(keep, d.cast("long") * (d - 1))), 1)
+        .alias("pair_rows"),
+        F.max(F.when(keep, d)).alias("longest"))
+    full = full.localCheckpoint(eager=True)
+    return full.filter(keep), full, obs.get
+
+
+def _pair_stream(posts: DataFrame, hof: bool) -> DataFrame:
+    """(id_a, id_b) with id_a < id_b for every two members of a list.
+
+    spread(): AQE would coalesce the small posting-list relation to a
+    handful of tasks (it sizes reducers by input bytes) and serialize the
+    multiplicative explosion there.  Short lists take a double explode +
+    codegen filter: the HOF lambda is interpreted per element and builds
+    a filtered array per outer row.  Past HOF_MIN_LIST members the d^2
+    inner rows the double explode materializes before filtering cost more
+    than the interpreted lambda."""
+    outer = spread(posts).select(F.explode("ds").alias("id_a"), "ds")
+    if hof:
+        return outer.select("id_a", F.explode(F.filter(
+            "ds", lambda x: x > F.col("id_a"))).alias("id_b"))
+    return (outer.select("id_a", F.explode("ds").alias("id_b"))
+            .filter(F.col("id_b") > F.col("id_a")))
+
+
+def pair_counts(posts: DataFrame, stats: dict) -> DataFrame:
+    """``(id_a, id_b, inter)``, id_a < id_b: how many posting lists of
+    ``posting_lists`` hold both ids — |A ∩ B| over the index.
+
+    The count's reduce cost is hash-aggregation CPU over near-unique keys
+    (dedup factor ~1.1), so the pair exchange gets an EXPLICIT count
+    derived from the pair-row total — exempt from AQE's byte-based
+    coalescing, which collapses it onto a few fat partitions — and the
+    aggregation runs post-shuffle only: max(default parallelism,
+    min(shuffle.partitions, pair_rows / PAIR_ROWS_PER_TASK)).
+
+    Behind the double-explode generator, when every id is an integer in
+    [0, 2^31), the pair travels as ONE long ``(a << 32) | b`` (8 key bytes
+    instead of 16, one long to hash).  Other ids (negative, wider,
+    non-integer) keep the two-column key, and so does the HOF generator:
+    there the packing projection cost more than the narrower shuffle
+    saved (4 cores, median of 3: skew probe exact leg 13.97 packed vs
+    12.87 s two-column; ten lists of 3000, 20.82 vs 19.93 s; behind the
+    double explode, lists of 512, 1.91 vs 1.98 s)."""
+    spark = posts.sparkSession
+    dp = spark.sparkContext.defaultParallelism
+    try:
+        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        # some Spark distributions accept a non-numeric value ("auto");
+        # OSS Spark rejects it at conf.set
+        cap = dp * 8
+    n = max(dp, min(cap, -(-(stats["pair_rows"] or 0)
+                           // PAIR_ROWS_PER_TASK)))
+    hof = (stats["longest"] or 0) >= HOF_MIN_LIST
+    pairs = _pair_stream(posts, hof)
+    lo, hi = stats["lo"], stats["hi"]
+    if hof or not (isinstance(lo, int) and lo >= 0 and hi < (1 << 31)):
+        return (pairs.repartition(n, "id_a", "id_b")
+                .groupBy("id_a", "id_b")
+                .agg(F.count("*").alias("inter")))
+    # widen BEFORE the shift: an int32 id shifted by 32 wraps to itself,
+    # and (a << 32) | b would collide pairs
+    id_type = pairs.schema["id_a"].dataType
+    return (pairs
+            .select(F.shiftleft(F.col("id_a").cast("long"), 32)
+                    .bitwiseOR(F.col("id_b").cast("long")).alias("pk"))
+            .repartition(n, "pk")
+            .groupBy("pk")
+            .agg(F.count("*").alias("inter"))
+            .select(F.shiftrightunsigned("pk", 32).cast(id_type)
+                    .alias("id_a"),
+                    F.col("pk").bitwiseAND(F.lit((1 << 32) - 1))
+                    .cast(id_type).alias("id_b"),
+                    "inter"))
+
+
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", k: int = 3,
                         threshold: float = 0.8,
@@ -382,50 +506,19 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     corpus makes the join quadratic.  Dropping shingles with document
     frequency > cap bounds the per-shingle fan-out at cap^2 while candidates
     for genuinely similar pairs survive through their rarer shingles (the
-    standard inverted-index prefix/df-pruning argument)."""
-    sh = shingle(df, text_col, k, id_col)
-    # ONE inverted-index pass: posting lists per shingle (the df-prune is
-    # a size() filter on the list), candidate pairs generated by a nested
-    # explode of each list — no self-join, so the shingle relation is
-    # neither shuffled twice nor recomputed per join side, and the
-    # per-shingle fan-out stays the same d*(d-1)/2 the join produced
-    # (bounded by cap^2 under the default).  groupBy(pair).count() over
-    # the generated pairs IS |A ∩ B| over the index, exactly as before.
-    posts = sh.groupBy("sh").agg(F.collect_list(F.col(id_col)).alias("_ds"))
-    kept = posts if max_shingle_df is None else \
-        posts.filter(F.size("_ds") <= max_shingle_df)
-    # spread(): AQE would coalesce the small posting-list aggregate to a
-    # handful of tasks (it sizes reducers by input bytes) and serialize
-    # the multiplicative pair explosion there
-    pair_stream = (spread(kept)
-                   .select(F.explode("_ds").alias("id_a"), "_ds")
-                   .select("id_a",
-                           F.explode(F.filter(
-                               "_ds",
-                               lambda x: x > F.col("id_a"))).alias("id_b")))
-    if max_shingle_df is None:
-        # EXACT mode only: the fan-out is unbounded (quadratic in the
-        # hottest df), and the count's reduce cost is hash-map CPU over
-        # near-unique keys — map-side partial aggregation is overhead and
-        # AQE's byte-based coalescing of the bare exchange serializes the
-        # stage onto a few fat partitions.  An explicit-count repartition
-        # (the session's configured shuffle partitions, exempt from
-        # coalescing) + post-shuffle-only aggregation measured 17.3 ->
-        # 9.8 s min-of-2 on the skew probe's half-df exact leg.  The
-        # BOUNDED default keeps the partial-agg shape: its fan-out is
-        # capped at cap^2 per shingle and the same repartition measured
-        # 27% SLOWER there (1.94 -> 2.47 s on the probe's bounded leg).
-        try:
-            _np = int(df.sparkSession.conf.get(
-                "spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            # AQE-managed deployments may set a non-numeric value
-            # (e.g. "auto"); the session parallelism is the safe floor
-            _np = df.sparkSession.sparkContext.defaultParallelism
-        pair_stream = pair_stream.repartition(_np, "id_a", "id_b")
-    shared = (pair_stream
-              .groupBy("id_a", "id_b")
-              .agg(F.count("*").alias("_inter")))
+    standard inverted-index prefix/df-pruning argument).
+
+    Candidates and their counts come from the shared pair engine
+    (``posting_lists`` + ``pair_counts``), so the call is EAGER: it runs
+    one checkpoint job over the posting lists before returning, as
+    ``minhash_dedup`` does.  The returned frame stays lazy and reads the
+    corpus only through that checkpoint."""
+    posts, full, stats = posting_lists(shingle(df, text_col, k, id_col),
+                                       id_col, max_shingle_df)
+    shared = pair_counts(posts, stats)
+    # the UNPRUNED (id, sh) relation, read back from the checkpointed
+    # index rather than re-tokenizing the corpus
+    sh = full.select("sh", F.explode("ds").alias(id_col))
     if max_shingle_df is not None:
         # the pruned-index count undercounts pairs that also share hot
         # shingles: recount each surviving candidate against the FULL
@@ -438,7 +531,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
                   .join(sh.select(F.col(id_col).alias("id_b"), "sh"),
                         ["id_b", "sh"])
                   .groupBy("id_a", "id_b")
-                  .agg(F.count("*").alias("_inter")))
+                  .agg(F.count("*").alias("inter")))
     # |A| and |B| as per-doc scalars from the UNPRUNED shingle relation:
     # jaccard = n/(|A|+|B|-n) — identical to the former full-set
     # array_intersect verify, without shipping a single array.  The sizes
@@ -451,7 +544,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
                                            F.col("_n").alias("_na"))), "id_a")
             .join(F.broadcast(sizes.select(F.col(id_col).alias("id_b"),
                                            F.col("_n").alias("_nb"))), "id_b")
-            .withColumn("jaccard", F.col("_inter")
-                        / (F.col("_na") + F.col("_nb") - F.col("_inter")))
+            .withColumn("jaccard", F.col("inter")
+                        / (F.col("_na") + F.col("_nb") - F.col("inter")))
             .filter(F.col("jaccard") >= threshold)
             .select("id_a", "id_b", "jaccard"))

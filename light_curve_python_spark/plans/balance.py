@@ -16,16 +16,14 @@ rather than a constant tuned for local mode.
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import DataFrame
 
 __all__ = ["rebalance_scan", "spread"]
 
 
-def spread(df: DataFrame, per_core: int = 4) -> DataFrame:
-    """Explicit round-robin repartition to ``per_core x`` the session's
-    default parallelism — for tiny-input / huge-output generate stages
+def spread(df: DataFrame) -> DataFrame:
+    """Explicit round-robin repartition to 4x the session's default
+    parallelism — for tiny-input / huge-output generate stages
     (posting-list pair explosion: kilobytes in, 10^8 rows out).
 
     AQE's partition coalescing sizes reducers by their INPUT bytes with a
@@ -35,7 +33,7 @@ def spread(df: DataFrame, per_core: int = 4) -> DataFrame:
     numPartitions repartition is exempt from coalescing.  The extra
     shuffle moves only the small pre-explosion relation — at any scale it
     is one cheap pass compared to the generate it parallelizes."""
-    n = df.sparkSession.sparkContext.defaultParallelism * per_core
+    n = df.sparkSession.sparkContext.defaultParallelism * 4
     return df.repartition(n)
 
 
@@ -58,11 +56,10 @@ _WIDE_RE = _re.compile(
     r"(?m)^[\s+:|-]*(?:" + "|".join(_WIDE_OPS) + r")")
 
 
-def rebalance_scan(df: DataFrame, min_parallelism: Optional[int] = None
-                   ) -> DataFrame:
+def rebalance_scan(df: DataFrame) -> DataFrame:
     """Return ``df`` unchanged when its physical plan already has at least
-    ``min_parallelism`` (default: the session's default parallelism)
-    partitions; otherwise round-robin repartition to that width.
+    the session's default parallelism in partitions; otherwise
+    round-robin repartition to that width.
 
     Only narrow plans (scan / filter / project chains) are inspected —
     for those, ``df.rdd.getNumPartitions()`` is a metadata question.  A
@@ -72,9 +69,7 @@ def rebalance_scan(df: DataFrame, min_parallelism: Optional[int] = None
 
     Row-level results of any downstream deterministic computation are
     unaffected — only task placement changes."""
-    spark = df.sparkSession
-    if min_parallelism is None:
-        min_parallelism = spark.sparkContext.defaultParallelism
+    min_parallelism = df.sparkSession.sparkContext.defaultParallelism
     try:
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         if _WIDE_RE.search(plan):

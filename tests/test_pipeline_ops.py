@@ -1,13 +1,16 @@
 """Tests for dedup / similarity / text / multimodal / spec / checkpoint /
 sources — the training-data-pipeline operator set."""
 
+import itertools
 import os
+from collections import Counter
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from light_curve_python_spark.operators import dedup
 from light_curve_python_spark.operators.dedup import (
     exact_dedup,
     lsh_candidates,
@@ -294,6 +297,60 @@ def test_ngram_jaccard_hot_shingle_bounded(spark):
     all_pairs = ngram_jaccard_pairs(df, k=2, threshold=0.0,
                                     max_shingle_df=2).toPandas()
     assert len(all_pairs) == 1
+
+
+def _jaccard_reference(rows, k, threshold, max_df):
+    """Serial set-Jaccard: pairs sharing a word k-gram whose document
+    frequency is <= max_df (any shared k-gram when None), scored on the
+    FULL k-gram sets."""
+    sets = {}
+    for i, text in rows:
+        ws = text.split()
+        sets[i] = {" ".join(ws[j:j + k]) for j in range(len(ws) - k + 1)}
+    df = Counter(s for v in sets.values() for s in v)
+    out = {}
+    for a, b in itertools.combinations(sorted(sets), 2):
+        shared = sets[a] & sets[b]
+        if not any(max_df is None or df[s] <= max_df for s in shared):
+            continue
+        j = len(shared) / len(sets[a] | sets[b])
+        if j >= threshold:
+            out[(a, b)] = j
+    return out
+
+
+@pytest.mark.parametrize("generator", ["explode", "hof"])
+@pytest.mark.parametrize("ids", ["int32", "negative", "wide", "string"])
+def test_ngram_jaccard_pairs_every_id_width(spark, monkeypatch, ids,
+                                            generator):
+    """int32 ids take the packed pair key (widened before the shift)
+    behind the double explode; negative, >= 2^31 and string ids, and
+    every id behind the HOF generator, take the two-column key.  Every
+    case, in exact and capped mode, must equal a serial set-Jaccard
+    reference."""
+    if generator == "hof":
+        # the 24-member "hot tail" list is longer than this threshold
+        monkeypatch.setattr(dedup, "HOF_MIN_LIST", 8)
+    rng = np.random.default_rng(7)
+    texts = [" ".join(rng.choice(list("abcdef"), size=rng.integers(4, 9)))
+             + " hot tail" for _ in range(24)]
+    id_of, id_type = {
+        "int32": (lambda i: i, "int"),
+        "negative": (lambda i: i - 12, "bigint"),
+        "wide": (lambda i: (1 << 31) + 3 * i, "bigint"),
+        "string": (lambda i: f"d{i:02d}", "string"),
+    }[ids]
+    rows = [(id_of(i), t) for i, t in enumerate(texts)]
+    df = spark.createDataFrame(rows, f"doc_id {id_type}, text string")
+    for cap in (None, 5):
+        out = ngram_jaccard_pairs(df, k=2, threshold=0.25,
+                                  max_shingle_df=cap)
+        assert out.schema["id_a"].dataType.simpleString() == id_type
+        got = {(r.id_a, r.id_b): r.jaccard for r in out.collect()}
+        want = _jaccard_reference(rows, 2, 0.25, cap)
+        assert want and set(got) == set(want), (cap, got, want)
+        for pair, j in want.items():
+            assert got[pair] == pytest.approx(j, abs=1e-12), (cap, pair)
 
 
 def test_exact_dedup_null_columns_distinct(spark):

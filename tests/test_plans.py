@@ -6,7 +6,9 @@ against .explain output, not taken on faith.
 - small dimension joins broadcast;
 - parquet filters reach the scan (PushedFilters);
 - bucketed tables feed the cogroup with zero Exchanges;
-- a horizon PIT with a payload is a single Arrow cogroup.
+- a horizon PIT with a payload is a single Arrow cogroup;
+- the pair engine's stats ride its checkpoint job, and its pair stage
+  has one size-derived exchange.
 """
 
 import re
@@ -19,6 +21,7 @@ from light_curve_python_spark.datagen import (
     generate_probes,
 )
 from light_curve_python_spark.functions import sqlfeatures as SQ
+from light_curve_python_spark.operators import dedup
 from light_curve_python_spark.operators.asof import asof_join
 from light_curve_python_spark.operators.bins import bin_series
 from light_curve_python_spark.operators.sessionize import sessionize
@@ -76,6 +79,55 @@ def test_horizon_pit_plan_is_one_cogroup(spark, obs):
     assert plan.count("FlatMapCoGroupsInArrow") == 1, plan
     assert "Window" not in plan and "Join" not in plan, plan
     assert _n_exchanges(out) == 2, plan
+
+
+def _shingle_stream(spark, n_lists, d):
+    # n_lists posting lists of d members each, every id in [0, 2^31)
+    n = n_lists * d
+    return spark.range(n).select(((F.col("id") * 7) % n).alias("doc_id"),
+                                 (F.col("id") % n_lists).alias("sh"))
+
+
+def test_posting_list_stats_ride_the_checkpoint_job(spark):
+    """The posting lists and their stats come from ONE Spark job (AQE off,
+    so the shuffle map stage is not submitted as a job of its own): the
+    stats are observed by the checkpoint, not probed afterwards.  They
+    describe the kept lists only: the 20-member hot list is pruned."""
+    hot = spark.range(1000, 1020).select(F.col("id").alias("doc_id"),
+                                         F.lit(99).cast("long").alias("sh"))
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        sc.setJobGroup("posting_lists_jobs", "posting lists + stats")
+        posts, full, stats = dedup.posting_lists(
+            _shingle_stream(spark, 6, 10).unionByName(hot), max_df=10)
+        jobs = sc.statusTracker().getJobIdsForGroup("posting_lists_jobs")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert len(jobs) == 1, jobs
+    assert stats == {"lo": 0, "hi": 59, "pair_rows": 6 * 45, "longest": 10}
+    assert (posts.count(), full.count()) == (6, 7)
+
+
+def test_pair_stage_has_one_size_derived_exchange(spark, monkeypatch):
+    """The executed pair count shuffles once, on the packed key, into
+    ceil(pair_rows / PAIR_ROWS_PER_TASK) partitions (between the session
+    parallelism and shuffle.partitions here)."""
+    monkeypatch.setattr(dedup, "PAIR_ROWS_PER_TASK", 1000)
+    posts, _, stats = dedup.posting_lists(_shingle_stream(spark, 10, 30))
+    assert stats["pair_rows"] == 10 * 435
+    pairs = dedup.pair_counts(posts, stats)
+    assert len(pairs.collect()) == 10 * 435
+    final = _plan(pairs).split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final, final
+    exchanges = re.findall(r"(?<!Broadcast)Exchange hashpartitioning"
+                           r"\(([^)]*)\)", final)
+    assert len(exchanges) == 1, final
+    key, n = exchanges[0].rsplit(", ", 1)
+    assert key.startswith("pk#") and int(n) == 5, final
 
 
 def test_filter_pushdown_to_parquet(spark, sf_dir):
