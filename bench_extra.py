@@ -14,6 +14,12 @@ comparable with the frozen harness.
 (bounded default and half-df exact legs, each draw a whole probe run)
 instead of a headline; it is only run when named, and on its own it
 skips the headline datagen and warm-up.
+
+``python_task_floor`` (also only when named, no datagen or warm-up)
+times one engine ``mapInArrow`` (``grouped.map_curves``, a trivial
+callback) over the same 4096 entities at 4 and 64 partitions, min-of-N,
+and reports the seconds each extra Python task costs one core: the
+fixed per-task floor of the Python workers, not kernel time.
 """
 from __future__ import annotations
 
@@ -28,6 +34,39 @@ import bench  # noqa: E402
 
 # bench.py's skewed-corpus jaccard probe (not a headline)
 SKEW_PROBE = "ngram_jaccard_bounded"
+# per-task fixed cost of the Python workers (not a headline)
+FLOOR_PROBE = "python_task_floor"
+FLOOR_PARTITIONS = (4, 64)
+
+
+def _task_floor(spark, n_runs):
+    """Min-of-``n_runs`` seconds of one ``map_curves`` job per partition
+    count in FLOOR_PARTITIONS (draws alternate), and the extra seconds
+    per extra task times the session's cores."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from light_curve_python_spark.operators.grouped import map_curves
+
+    def job(parts):
+        curves = spark.range(4096, numPartitions=parts).select(
+            "id", F.transform(F.sequence(F.lit(1), F.lit(32)),
+                              lambda k: F.struct((F.col("id") + k)
+                                                 .cast("double").alias("t")))
+            .alias("c"))
+        return map_curves(curves, "c", [0],
+                          [T.StructField("mean", T.DoubleType())],
+                          lambda t: ([t.mean()],))
+
+    lo, hi = FLOOR_PARTITIONS
+    bench._time_one(spark, lambda s: job(hi))  # start every worker
+    runs = {p: [] for p in FLOOR_PARTITIONS}
+    for _ in range(n_runs):
+        for p in FLOOR_PARTITIONS:
+            runs[p].append(round(bench._time_one(spark, lambda s: job(p)), 3))
+    cores = spark.sparkContext.defaultParallelism
+    per_task_core = (min(runs[hi]) - min(runs[lo])) * cores / (hi - lo)
+    return runs, round(per_task_core, 4)
 
 
 def main():
@@ -43,10 +82,11 @@ def main():
     # the headline table only closes over its arguments, so its names are
     # known before any session, datagen or warm-up work is paid for
     names = list(bench._headline_queries(None, None, None))
-    unknown = only - set(names) - {SKEW_PROBE}
+    probes = {SKEW_PROBE, FLOOR_PROBE}
+    unknown = only - set(names) - probes
     if unknown:
         sys.exit(f"unknown queries: {sorted(unknown)}; "
-                 f"choose from {sorted(names + [SKEW_PROBE])}")
+                 f"choose from {sorted(names + sorted(probes))}")
 
     headlines = [n for n in names if not only or n in only]
 
@@ -70,9 +110,15 @@ def main():
         for leg, runs in legs.items():
             runs_log[f"{SKEW_PROBE}.{leg}"] = runs
             results[f"{SKEW_PROBE}.{leg}"] = min(runs)
+    floor = {}
+    if FLOOR_PROBE in only:
+        runs, floor["s_per_task_core"] = _task_floor(spark, n_runs)
+        for p, draws in runs.items():
+            runs_log[f"{FLOOR_PROBE}.p{p}"] = draws
+            results[f"{FLOOR_PROBE}.p{p}"] = min(draws)
     spark.stop()
     print(json.dumps({"queries": results, "sf": bench.SF,
-                      "queries_runs": runs_log,
+                      "queries_runs": runs_log, **floor,
                       "value": round(sum(results.values()), 3)}))
 
 

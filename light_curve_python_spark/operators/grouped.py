@@ -64,6 +64,19 @@ def grouped_map(df: DataFrame, entity_col: str, value_cols: Sequence[str],
                       [list(value_cols).index(c) for c in order_cols])
 
 
+def _column(pieces, typ):
+    """One Arrow output column from per-entity pieces.  Module-level on
+    purpose: ``map_curves``' closure pickles it by reference, so every
+    worker that runs the map imports this package (and its root's
+    ``_zipguard``), whatever module the callback comes from."""
+    import pyarrow as pa
+
+    if pa.types.is_list(typ) or pa.types.is_large_list(typ):
+        return pa.array([x for p in pieces for x in p], type=typ,
+                        from_pandas=True)
+    return pa.array(np.concatenate(pieces), type=typ, from_pandas=True)
+
+
 def map_curves(df: DataFrame, curve_col: str, fields: Sequence[int],
                out_fields: Sequence[T.StructField], fn: Callback,
                order: Sequence[int] = ()) -> DataFrame:
@@ -81,12 +94,6 @@ def map_curves(df: DataFrame, curve_col: str, fields: Sequence[int],
     schema = T.StructType([df.schema[c] for c in pass_cols]
                           + list(out_fields))
     out_types = [to_arrow_type(f.dataType) for f in out_fields]
-
-    def column(pieces, typ):
-        if pa.types.is_list(typ) or pa.types.is_large_list(typ):
-            return pa.array([x for p in pieces for x in p], type=typ,
-                            from_pandas=True)
-        return pa.array(np.concatenate(pieces), type=typ, from_pandas=True)
 
     def run(batches):
         for batch in batches:
@@ -123,7 +130,7 @@ def map_curves(df: DataFrame, curve_col: str, fields: Sequence[int],
                 cols = [pa.array(block[j], type=typ, from_pandas=True)
                         for j, typ in enumerate(out_types)]
             else:
-                cols = [column([p[j] for p in parts], typ)
+                cols = [_column([p[j] for p in parts], typ)
                         for j, typ in enumerate(out_types)]
             take = pa.array(np.repeat(rows, counts))
             keep = [batch.column(batch.schema.names.index(c)).take(take)

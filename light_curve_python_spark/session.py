@@ -107,7 +107,10 @@ def get_spark(master: Optional[str] = None,
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # default-true, pinned: forked Python workers persist across tasks,
-        # so kernel import/jit costs are paid once per core, not per task
+        # so kernel import/jit costs are paid once per core, not per task,
+        # and the zipimport guard the package root installs in a worker
+        # (_zipguard.py) keeps its later tasks from re-reading pyspark.zip
+        # and the other zips on its path (CPython < 3.13, ~120 ms per task)
         .config("spark.python.worker.reuse", "true")
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

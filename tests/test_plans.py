@@ -8,10 +8,13 @@ against .explain output, not taken on faith.
 - bucketed tables feed the cogroup with zero Exchanges;
 - a horizon PIT with a payload is a single Arrow cogroup;
 - the pair engine's stats ride its checkpoint job, and its pair stage
-  has one size-derived exchange.
+  has one size-derived exchange;
+- an engine ``mapInArrow`` guards its Python workers' per-task zip
+  re-read.
 """
 
 import re
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -128,6 +131,72 @@ def test_pair_stage_has_one_size_derived_exchange(spark, monkeypatch):
     assert len(exchanges) == 1, final
     key, n = exchanges[0].rsplit(", ", 1)
     assert key.startswith("pk#") and int(n) == 5, final
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13),
+                    reason="zipimporter.invalidate_caches is lazy from 3.13")
+def test_engine_map_guards_the_per_task_zip_reread(spark):
+    """Over 16 tasks of one engine ``mapInArrow`` (``map_curves``), every
+    task after a worker's first runs with the package root's zipimport
+    guard: its second task re-reads each zip on the path at most once,
+    later tasks re-read none (the stock method re-reads every zip once
+    per zipimporter at the start of every task).  Output unchanged."""
+    from pyspark.sql import types as T
+
+    from light_curve_python_spark.operators.grouped import map_curves
+
+    def probe(t):
+        # runs in the Python worker and is pickled by value: it imports
+        # nothing from the engine, so it sees what map_curves' own closure
+        # loaded
+        import os
+        import sys
+        import zipimport
+
+        from pyspark import TaskContext
+        read = zipimport._read_directory
+        if not hasattr(read, "calls"):
+            def counted(archive, _read=read):
+                counted.calls += 1
+                return _read(archive)
+            counted.calls = 0
+            zipimport._read_directory = read = counted
+        archives = {f.archive for f in sys.path_importer_cache.values()
+                    if isinstance(f, zipimport.zipimporter)}
+        guarded = getattr(zipimport.zipimporter.invalidate_caches,
+                          "_stat_guarded", False)
+        return ([float(t.sum())], [os.getpid()],
+                [TaskContext.get().taskAttemptId()], [guarded], [read.calls],
+                [len(archives)])
+
+    curves = spark.range(64, numPartitions=16).select(
+        "id", F.transform(F.sequence(F.lit(0), F.col("id") % 5),
+                          lambda k: F.struct(k.cast("double").alias("t")))
+        .alias("c"))
+    fields = [T.StructField("s", T.DoubleType()),
+              T.StructField("pid", T.LongType()),
+              T.StructField("task", T.LongType()),
+              T.StructField("guarded", T.BooleanType()),
+              T.StructField("reads", T.LongType()),
+              T.StructField("archives", T.LongType())]
+    rows = map_curves(curves, "c", [0], fields, probe).collect()
+    assert sorted((r.id, r.s) for r in rows) == [
+        (i, float(sum(range(i % 5 + 1)))) for i in range(64)]
+    tasks = {}
+    for r in rows:
+        seen = tasks.setdefault(r.pid, {}).setdefault(r.task, r)
+        if r.reads < seen.reads:
+            tasks[r.pid][r.task] = r
+    assert len({t for by_task in tasks.values() for t in by_task}) == 16
+    later = 0
+    for by_task in tasks.values():
+        runs = [by_task[t] for t in sorted(by_task)]
+        for k in range(1, len(runs)):
+            later += 1
+            assert runs[k].guarded, runs
+            new_reads = runs[k].reads - runs[k - 1].reads
+            assert new_reads <= (runs[k].archives if k == 1 else 0), runs
+    assert later >= 1, tasks
 
 
 def test_filter_pushdown_to_parquet(spark, sf_dir):
