@@ -1,29 +1,27 @@
 """Streaming point-in-time feature extraction (the north rule's PIT
 features as a live stream): per entity, emit the feature vector over all
 observations with t <= the arriving row's t — exactly what the batch
-engine computes per probe — by carrying running sufficient statistics in
-``applyInPandasWithState`` state.
+engine computes per probe — by folding each micro-batch into carried
+state with ``stateful.stateful_map``.
 
-Features maintained from O(1) state (n, Welford mean/M2, Σw, Σwm, min,
-max, last_t): observation_count, mean, standard_deviation (ddof=1), amplitude,
-weighted_mean, duration, maximum_time_interval — the moment family whose
-sufficient statistics fold associatively (quantile-family features need
-the full window and stay batch-side).  Within a micro-batch rows are
-processed in event-time order; state carries across micro-batches and
-restarts (checkpointed by Spark).  Zero temporal leakage by construction:
-a row's output is computed BEFORE folding any later row.
+``streaming_pit_features`` carries the batch ``PrefixBattery``'s prefix
+sums (n, the anchor m0/t0, Σm, Σ(m−m0), Σ(m−m0)², Σw, Σwm, running
+min/max, max Δt) and extends them with seeded cumulative folds, so for an
+in-order stream its moment family — observation_count, mean,
+standard_deviation (ddof=1), amplitude, weighted_mean, duration,
+maximum_time_interval — is bitwise the battery's.  Quantile-family
+features come from a bounded histogram sketch
+(``streaming_quantile_features``).  Zero temporal leakage by
+construction: a row's output is computed BEFORE folding any later row.
 """
 
 from __future__ import annotations
 
-import math
-from typing import Iterable, Iterator, Tuple
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .stateful import Arrays, stateful_map
 
 __all__ = ["streaming_pit_features", "STREAM_FEATURE_NAMES",
            "streaming_quantile_features", "QUANTILE_STREAM_NAMES"]
@@ -33,22 +31,22 @@ STREAM_FEATURE_NAMES = ("observation_count", "mean", "standard_deviation",
                         "maximum_time_interval")
 
 
-def _output_schema(key_field: T.StructField, ts_col: str,
-                   names=STREAM_FEATURE_NAMES) -> T.StructType:
-    return T.StructType(
-        [key_field, T.StructField(ts_col, T.DoubleType())]
-        + [T.StructField(n, T.DoubleType()) for n in names])
+def _schema(ts_col: str, names) -> T.StructType:
+    return T.StructType([T.StructField(n, T.DoubleType())
+                         for n in (ts_col,) + tuple(names)])
 
 
-# Welford (mean, M2) instead of raw (Σm, Σm²): the sum-of-squares
-# variance (sm2 - sm²/n) cancels catastrophically for large-magnitude m
-# (flux ~1e8 with spread ~1 emits 0.0 or noise); Welford folds stably.
-# NB: this changed the checkpointed state layout — streams checkpointed
-# under the old (sm, sm2) schema cannot resume on this version.
-STATE_SCHEMA = T.StructType([
-    T.StructField(n, T.DoubleType())
-    for n in ("n", "mean", "m2", "sw", "swm", "mn", "mx",
-              "t0", "last_t", "max_dt")])
+def _late(late_policy: str) -> str:
+    if late_policy not in ("drop", "fold"):
+        raise ValueError("late_policy must be 'drop' or 'fold'")
+    return "drop" if late_policy == "drop" else "keep"
+
+
+def _run(op, seed, x):
+    """``op``-accumulate ``x`` continuing from ``seed``: ``[seed, ...]``.
+    One accumulate over the seeded array is bitwise the accumulate over
+    the whole history (``seed + np.cumsum(x)`` is not)."""
+    return op.accumulate(np.concatenate(([seed], x)))
 
 
 def streaming_pit_features(obs: DataFrame, key_col: str = "doc_id",
@@ -57,7 +55,10 @@ def streaming_pit_features(obs: DataFrame, key_col: str = "doc_id",
                            late_policy: str = "drop") -> DataFrame:
     """One output row per observation: the moment-family feature vector of
     the entity's history INCLUDING that observation (emit-after-fold; use
-    lag semantics downstream if strictly-before is needed).
+    lag semantics downstream if strictly-before is needed).  Rows with a
+    non-finite t or m are skipped; a zero/NaN sigma is a missing-error
+    sentinel whose row enters the unweighted moments only (documented
+    divergence — the batch kernel NaNs exactly the windows containing it).
 
     Rows within a micro-batch are processed in event-time order, but a
     row arriving in a LATER micro-batch with t below the state's last
@@ -76,77 +77,50 @@ def streaming_pit_features(obs: DataFrame, key_col: str = "doc_id",
       order, leaking the already-folded future rows (duration/max_dt can
       go negative); only for pipelines that explicitly want running
       arrival-order stats."""
-    if late_policy not in ("drop", "fold"):
-        raise ValueError("late_policy must be 'drop' or 'fold'")
-    out_schema = _output_schema(obs.schema[key_col], t_col)
+    late = _late(late_policy)
 
-    def fn(key: Tuple, pdfs: Iterable[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            (n, mean, m2, sw, swm, mn, mx, t0, last_t, max_dt) = state.get
-        else:
-            n = mean = m2 = sw = swm = 0.0
-            mn = math.inf
-            mx = -math.inf
-            t0 = last_t = math.nan
-            max_dt = math.nan
-        rows = pd.concat(list(pdfs), ignore_index=True) \
-            .sort_values(t_col, kind="mergesort")
-        out = {c: [] for c in (t_col,) + STREAM_FEATURE_NAMES}
-        for t, m, s in zip(rows[t_col], rows[m_col], rows[sigma_col]):
-            if not math.isfinite(t):
-                # a NaN/null event time would poison last_t and silently
-                # DISABLE the late-row guard for every later batch (NaN
-                # comparisons are all False) — skip the row instead
-                continue
-            if late_policy == "drop" and not math.isnan(last_t) \
-                    and t < last_t:
-                continue      # late cross-batch row: unservable leak-free
-            if m is None or not math.isfinite(m):
-                # a NaN/null m would poison the folded moments FOREVER
-                # (unlike a batch window, state never forgets) — skip the
-                # row entirely, like the quantile twin below
-                continue
-            n += 1.0
-            delta = m - mean
-            mean += delta / n
-            m2 += delta * (m - mean)
-            # zero/NaN sigma is a missing-error sentinel: folding an
-            # infinite/NaN weight would NaN the weighted mean for every
-            # later emission; such rows contribute to the unweighted
-            # moments only (documented streaming divergence — the batch
-            # kernel NaNs exactly the windows containing the row)
-            if s is not None and math.isfinite(s) and s > 0.0:
-                w = s ** -2.0
-                sw += w
-                swm += w * m
-            mn = min(mn, m)
-            mx = max(mx, m)
-            if math.isnan(t0):
-                t0 = t
-            else:
-                dt = t - last_t
-                max_dt = dt if math.isnan(max_dt) else max(max_dt, dt)
-            last_t = t
-            out[t_col].append(t)
-            out["observation_count"].append(n)
-            out["mean"].append(mean)
-            out["standard_deviation"].append(
-                math.sqrt(max(m2, 0.0) / (n - 1.0)) if n > 1
-                else math.nan)
-            out["amplitude"].append(0.5 * (mx - mn))
-            out["weighted_mean"].append(swm / sw if sw > 0.0
-                                        else math.nan)
-            out["duration"].append(t - t0)
-            out["maximum_time_interval"].append(max_dt)
-        state.update((n, mean, m2, sw, swm, mn, mx, t0, last_t, max_dt))
-        res = pd.DataFrame(out)
-        res.insert(0, key_col, key[0])
-        yield res
+    def fold(_, a: Arrays, st: Arrays):
+        t, m, s = a[t_col], a[m_col], a[sigma_col]
+        if st["n"] == 0 and len(t):
+            st["m0"], st["t0"] = m[0], t[0]
+        k = st["n"] + np.arange(1.0, len(t) + 1.0)
+        ms = m - st["m0"]
+        w = np.where(s > 0.0, s, np.inf) ** -2.0    # bad sigma: weight 0
+        dt = np.diff(t, prepend=st["last_t"])
+        dt[np.isnan(dt)] = -np.inf                  # no interval before row 1
+        acc = {"sm": _run(np.add, st["sm"], m),
+               "sms": _run(np.add, st["sms"], ms),
+               "sms2": _run(np.add, st["sms2"], ms * ms),
+               "sw": _run(np.add, st["sw"], w),
+               "swm": _run(np.add, st["swm"], w * m),
+               "mn": _run(np.minimum, st["mn"], m),
+               "mx": _run(np.maximum, st["mx"], m),
+               "max_dt": _run(np.maximum, st["max_dt"], dt)}
+        c = {n: v[1:] for n, v in acc.items()}
+        with np.errstate(all="ignore"):
+            # PrefixBattery._Ctx's formulas and fill rule (non-finite ->
+            # NaN), so an in-order stream is bitwise the batch battery
+            feats = np.stack([
+                k, c["sm"] / k,
+                np.sqrt((c["sms2"] - c["sms"] ** 2 / k) / (k - 1)),
+                0.5 * (c["mx"] - c["mn"]), c["swm"] / c["sw"],
+                t - st["t0"], c["max_dt"]])
+        feats[~np.isfinite(feats)] = np.nan
+        st.update({n: v[-1] for n, v in acc.items()})
+        st["n"] = st["n"] + len(t)
+        return {t_col: t, **dict(zip(STREAM_FEATURE_NAMES, feats))}, st
 
-    return (obs.groupBy(key_col)
-            .applyInPandasWithState(fn, out_schema, STATE_SCHEMA,
-                                    "append", GroupStateTimeout.NoTimeout))
+    # -0.0 seeds the sums: it is the exact additive identity (0.0 would
+    # turn a leading -0.0 into +0.0)
+    init = {"n": np.array(0.0), "m0": np.array(np.nan),
+            "t0": np.array(np.nan),
+            **{n: np.array(-0.0) for n in ("sm", "sms", "sms2", "sw", "swm")},
+            "mn": np.array(np.inf), "mx": np.array(-np.inf),
+            "max_dt": np.array(-np.inf)}
+    return stateful_map(obs.select(key_col, t_col, m_col, sigma_col),
+                        key_col, t_col, fold,
+                        _schema(t_col, STREAM_FEATURE_NAMES), init,
+                        finite_cols=[m_col], late=late)
 
 
 # --- quantile family from bounded state --------------------------------------
@@ -156,37 +130,35 @@ QUANTILE_STREAM_NAMES = ("observation_count", "median",
                          "quantile_err_bound")
 
 _HALF_MAX = 8.988465674311579e307    # DBL_MAX / 2: keeps hi - lo finite
-
-_QSTATE_SCHEMA = T.StructType([
-    T.StructField("lo", T.DoubleType()),
-    T.StructField("hi", T.DoubleType()),
-    T.StructField("last_t", T.DoubleType()),
-    T.StructField("n_bins", T.IntegerType()),
-    T.StructField("counts", T.BinaryType()),
-])
+_QS = np.array([0.05, 0.25, 0.5, 0.75, 0.95])
+_BLOCK_CELLS = 1 << 18               # rows x bins per cumulative-count block
 
 
 def _hist_quantiles(counts, lo, width, n, qs):
-    """Hazen quantile estimates for all ``qs`` at once: interpolate
-    between the two bracketing ORDER-STATISTIC estimates (the true k-th
-    order statistic lies in the bin where the cumulative count reaches
-    k, so each estimate — and their convex combination — is within one
-    bin width of its true value; interpolating cumulative position
+    """Hazen quantile estimates for all ``qs`` at once, one row per
+    histogram: ``counts`` is (R, bins), ``n`` (R,), the result (R, len(qs)).
+    Interpolates between the two bracketing ORDER-STATISTIC estimates (the
+    true k-th order statistic lies in the bin where the cumulative count
+    reaches k, so each estimate — and their convex combination — is within
+    one bin width of its true value; interpolating cumulative position
     directly would be off by the full gap between adjacent order
-    statistics, not by a bin).  One cumsum + vectorized searchsorted per
-    call — this runs once per observation in the streaming hot path."""
-    cum = np.cumsum(counts)
-    h = np.clip(np.asarray(qs, dtype=np.float64) * n - 0.5, 0.0, n - 1.0)
+    statistics, not by a bin)."""
+    cum = np.cumsum(counts, axis=1)
+    h = np.clip(np.asarray(qs, dtype=np.float64) * n[:, None] - 0.5, 0.0,
+                (n - 1.0)[:, None])
     k = np.floor(h).astype(np.int64)
     frac = h - k
 
     def order_stat(ranks):
-        idx = np.searchsorted(cum, ranks)       # first bin with cum >= rank
-        prev = np.where(idx > 0, cum[np.maximum(idx - 1, 0)], 0)
-        return lo + (idx + (ranks - prev - 0.5) / counts[idx]) * width
+        # first bin with cum >= rank
+        idx = (cum[:, None, :] < ranks[:, :, None]).sum(axis=2)
+        prev = np.where(idx > 0, np.take_along_axis(
+            cum, np.maximum(idx - 1, 0), 1), 0)
+        return lo + (idx + (ranks - prev - 0.5)
+                     / np.take_along_axis(counts, idx, 1)) * width
 
     x0 = order_stat(k + 1)
-    x1 = order_stat(np.minimum(k + 2, np.int64(n)))
+    x1 = order_stat(np.minimum(k + 2, n.astype(np.int64)[:, None]))
     return (1.0 - frac) * x0 + frac * x1
 
 
@@ -211,130 +183,110 @@ def streaming_quantile_features(obs: DataFrame, key_col: str = "doc_id",
     ``hi - lo < 4 * true_range`` and the bound stays proportional to the
     entity's actual value spread.  Estimates are deterministic (no
     sampling) and independent of micro-batch boundaries for on-time
-    rows.
+    rows.  Rows with a non-finite t or m are skipped.
 
     ``late_policy`` follows ``streaming_pit_features`` ('drop' keeps the
-    zero-leakage guarantee; 'fold' is arrival-order)."""
-    if late_policy not in ("drop", "fold"):
-        raise ValueError("late_policy must be 'drop' or 'fold'")
+    zero-leakage guarantee; 'fold' is arrival-order).  Resuming a
+    checkpoint with a different ``bins`` raises ``ValueError``."""
+    late = _late(late_policy)
     if bins < 2 or bins % 2 != 0:
         # range doubling merges bin PAIRS; an odd count would crash at
         # the first expansion, mid-stream, after state was committed
         raise ValueError("bins must be an even number >= 2")
-    out_schema = _output_schema(obs.schema[key_col], t_col,
-                                QUANTILE_STREAM_NAMES)
+    init = {"lo": np.array(np.nan), "hi": np.array(np.nan),
+            "counts": np.zeros(bins, np.int64)}
+    return stateful_map(obs.select(key_col, t_col, m_col), key_col, t_col,
+                        _quantile_fold(t_col, m_col, bins),
+                        _schema(t_col, QUANTILE_STREAM_NAMES), init,
+                        finite_cols=[m_col], late=late)
 
-    def fn(key: Tuple, pdfs: Iterable[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            lo, hi, last_t, state_bins, blob = state.get
-            if state_bins != bins:
-                # the blob layout is bins-dependent: resuming a
-                # checkpoint with a different bins would silently drop
-                # half the mass (smaller) or crash mid-batch (larger)
-                raise ValueError(
-                    f"checkpointed state was written with bins="
-                    f"{state_bins}; restart with the same value "
-                    f"(got {bins})")
-            counts = np.frombuffer(blob, dtype=np.int64).copy()
-        else:
-            lo = hi = math.nan
-            counts = np.zeros(bins, dtype=np.int64)
-            last_t = math.nan
 
-        def _bin(x, width):
+def _quantile_fold(t_col: str, m_col: str, bins: int):
+    """The sketch's fold: rows enter the histogram in time order and each
+    row's quantiles are read off the histogram that includes it.  Python
+    loops once per range change (first value, first distinct value, each
+    doubling) and once per block of rows, never per row."""
+    block = max(1, _BLOCK_CELLS // bins)
+
+    def fold(_, a: Arrays, st: Arrays):
+        # magnitudes beyond DBL_MAX/2 clamp into the boundary cells (the
+        # error contract does not cover such inputs; unclamped, range
+        # doubling would overflow lo/hi to +/-inf)
+        v = np.clip(a[m_col], -_HALF_MAX, _HALF_MAX)
+        lo, hi, counts = float(st["lo"]), float(st["hi"]), st["counts"]
+        n = float(counts.sum())
+        out = []
+
+        def cells(x):
+            width = (hi - lo) / bins
             if width <= 0.0:
-                # subnormal spread: (hi-lo)/bins can underflow to 0 for
-                # hi > lo — everything lands in cell 0 and the estimate
-                # degrades gracefully to lo (err bound hi-lo, itself
-                # subnormal) instead of dividing by zero mid-stream
-                return 0
-            return min(max(int((x - lo) / width), 0), bins - 1)
+                # identical values, or a subnormal spread whose
+                # (hi-lo)/bins underflows: everything lands in cell 0
+                return np.zeros(len(x), np.int64)
+            return np.clip((x - lo) / width, 0, bins - 1).astype(np.int64)
 
-        def fold(v):
-            # invariant: counts always carries ALL folded mass — in the
-            # degenerate (single distinct value) phase it sits in bin 0
-            nonlocal lo, hi, counts
-            # keep hi - lo representable: magnitudes beyond DBL_MAX/2
-            # clamp into the boundary cells (the error contract does not
-            # cover such inputs; without the clamp the doubling loop
-            # overflows lo/hi to +/-inf and int(nan) kills the stream)
-            v = min(max(v, -_HALF_MAX), _HALF_MAX)
-            if math.isnan(lo):
-                lo = hi = v
-                counts[0] += 1
-                return
-            if hi == lo:
-                if v == lo:
-                    counts[0] += 1
-                    return
+        def emit(idx):
+            # add rows to cells idx in order, emitting each row's estimates
+            nonlocal n
+            width = (hi - lo) / bins
+            for b in range(0, len(idx), block):
+                cell = idx[b:b + block]
+                hist = np.zeros((len(cell), bins), np.int64)
+                hist[np.arange(len(cell)), cell] = 1
+                hist = counts + np.cumsum(hist, axis=0)
+                counts[:] = hist[-1]
+                rn = n + np.arange(1.0, len(cell) + 1.0)
+                n += len(cell)
+                if width <= 0.0:
+                    q, err = np.full((len(cell), len(_QS)), lo), hi - lo
+                else:
+                    q = _hist_quantiles(hist, lo, width, rn, _QS)
+                    err = 2.0 * width
+                out.append(np.column_stack(
+                    [rn, q[:, 2], q[:, 3] - q[:, 1], q[:, 0], q[:, 4],
+                     np.full(len(cell), err)]))
+
+        i = 0
+        while i < len(v):
+            if np.isnan(lo):
+                lo = hi = v[i]
+            flat = hi == lo
+            rest = v[i:]
+            # rows that fit the current range (or clamp at the DBL_MAX/2
+            # edges) are added without changing it
+            grow = rest != lo if flat else \
+                ((rest < lo) & (lo > -_HALF_MAX)) \
+                | ((rest >= hi) & (hi < _HALF_MAX))
+            j = i + int(np.argmax(grow)) if grow.any() else len(v)
+            emit(cells(v[i:j]))
+            if j == len(v):
+                break
+            x = v[j]
+            if flat:
+                # the first distinct value spreads [lo, hi] over the cells
                 seed_n, seed_v = counts[0], lo
                 counts[0] = 0
-                lo, hi = min(lo, v), max(hi, v)
-                width = (hi - lo) / bins
-                counts[_bin(seed_v, width)] = seed_n
-                counts[_bin(v, width)] += 1
-                return
-            while v < lo or v >= hi:
+                lo, hi = min(lo, x), max(hi, x)
+                counts[cells(np.array([seed_v]))[0]] = seed_n
+                emit(cells(v[j:j + 1]))
+                j += 1
+            while not flat and ((x < lo and lo > -_HALF_MAX)
+                                or (x >= hi and hi < _HALF_MAX)):
                 # double the range, merging bin pairs (old mass maps to
                 # the upper/lower half) — state stays O(bins) forever
-                if (v < lo and lo <= -_HALF_MAX) \
-                        or (v >= hi and hi >= _HALF_MAX):
-                    break            # fully clamped; _bin clamps the index
                 width = hi - lo
                 merged = counts.reshape(bins // 2, 2).sum(axis=1)
                 counts[:] = 0
-                if v < lo:
+                if x < lo:
                     counts[bins // 2:] = merged
                     lo = max(lo - width, -_HALF_MAX)
                 else:
                     counts[:bins // 2] = merged
                     hi = min(hi + width, _HALF_MAX)
-            counts[_bin(v, (hi - lo) / bins)] += 1
+            i = j
+        res = np.concatenate(out) if out \
+            else np.empty((0, len(QUANTILE_STREAM_NAMES)))
+        return ({t_col: a[t_col], **dict(zip(QUANTILE_STREAM_NAMES, res.T))},
+                {"lo": lo, "hi": hi, "counts": counts})
 
-        rows = pd.concat(list(pdfs), ignore_index=True) \
-            .sort_values(t_col, kind="mergesort")
-        out = {c: [] for c in (t_col,) + QUANTILE_STREAM_NAMES}
-        n = float(counts.sum())     # incremental below: one fold = +1
-        for t, m in zip(rows[t_col], rows[m_col]):
-            if not math.isfinite(t):
-                # a NaN/null event time would poison last_t and silently
-                # DISABLE the late-row guard for every later batch (NaN
-                # comparisons are all False) — skip the row instead
-                continue
-            if late_policy == "drop" and not math.isnan(last_t) \
-                    and t < last_t:
-                continue
-            if not math.isfinite(m):
-                # a non-finite value has no histogram cell; folding it
-                # would crash mid-stream — skip it (and emit nothing for
-                # it), mirroring the upstream finite-validation contract
-                continue
-            last_t = t
-            fold(m)
-            n += 1.0
-            width = (hi - lo) / bins
-            if width <= 0.0:
-                # identical values, or subnormal spread (see _bin)
-                q05 = q25 = q50 = q75 = q95 = lo
-                err = hi - lo
-            else:
-                q05, q25, q50, q75, q95 = _hist_quantiles(
-                    counts, lo, width, n, (0.05, 0.25, 0.5, 0.75, 0.95))
-                err = 2.0 * width
-            out[t_col].append(t)
-            out["observation_count"].append(n)
-            out["median"].append(q50)
-            out["inter_percentile_range"].append(q75 - q25)
-            out["q05"].append(q05)
-            out["q95"].append(q95)
-            out["quantile_err_bound"].append(err)
-        state.update((float(lo), float(hi), float(last_t), bins,
-                      counts.tobytes()))
-        res = pd.DataFrame(out)
-        res.insert(0, key_col, key[0])
-        yield res
-
-    return (obs.groupBy(key_col)
-            .applyInPandasWithState(fn, out_schema, _QSTATE_SCHEMA,
-                                    "append", GroupStateTimeout.NoTimeout))
+    return fold

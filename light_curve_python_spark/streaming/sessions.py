@@ -12,6 +12,8 @@ cluster.
 
 from __future__ import annotations
 
+from typing import Optional
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -71,7 +73,7 @@ def streaming_session_stats(events: DataFrame, key_col: str = "user_id",
 
 def streaming_bins(events: DataFrame, key_col: str = "user_id",
                    ts_col: str = "ts", m_col: str = "value",
-                   sigma_col: str = None, window: str = "1 day",
+                   sigma_col: Optional[str] = None, window: str = "1 day",
                    watermark: str = "1 hour") -> DataFrame:
     """Tumbling event-time rebin (the Bins meta-feature, streaming form)."""
     w = F.pow(F.col(sigma_col), F.lit(-2.0)) if sigma_col else F.lit(1.0)

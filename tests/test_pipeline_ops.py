@@ -2,6 +2,7 @@
 sources — the training-data-pipeline operator set."""
 
 import itertools
+import json
 import os
 from collections import Counter
 
@@ -193,20 +194,30 @@ def test_checkpointed_run_resume(spark, tmp_path):
     assert len(calls) == 4
     result = run.read(spark)
     assert result.count() == 48
+
+    def digest(df):
+        return sorted(repr(tuple(r)) for r in df.collect())
+
+    want = digest(result)
     # manifest carries lineage + metrics
     assert len(run.completed_buckets()) == 4
-    # a crash mid-append (truncated trailing line) must not poison resume:
-    # the unparseable line is skipped and only that bucket re-runs
+    # a crash mid-bucket leaves a truncated trailing manifest line and a
+    # partial part file in that bucket's directory: the unparseable line is
+    # skipped, only that bucket re-runs, and the garbage part is replaced
     with open(run.manifest_path) as f:
         lines = f.readlines()
+    torn = json.loads(lines[-1])["bucket"]
     with open(run.manifest_path, "w") as f:
         f.writelines(lines[:-1])
         f.write(lines[-1][: len(lines[-1]) // 2])  # torn write
+    with open(os.path.join(out, f"bucket={torn}",
+                           "part-99999-torn.snappy.parquet"), "wb") as f:
+        f.write(b"PAR1" + os.urandom(64))           # partial part file
     assert len(run.completed_buckets()) == 3
     done3 = run.run(probes, compute)
-    assert len(done3) == 1
+    assert done3 == [torn]
     assert len(run.completed_buckets()) == 4
-    assert run.read(spark).count() == 48
+    assert digest(run.read(spark)) == want
 
 
 def test_validate_and_mag_to_flux(spark):

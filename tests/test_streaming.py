@@ -549,9 +549,9 @@ def test_streaming_counter_key_schema_and_ties(spark, tmp_path):
 
 
 def test_streaming_pit_features_robust_inputs(spark, tmp_path):
-    """Round-5 review fixes: (a) Welford variance is stable for
-    large-magnitude m (the sum-of-squares form cancelled to 0/noise at
-    flux ~1e8); (b) sigma=0/NaN rows fold into unweighted moments only
+    """Round-5 review fixes: (a) the variance from the battery's anchored
+    prefix sums is stable for large-magnitude m (the raw sum-of-squares
+    form cancelled to 0/noise at flux ~1e8); (b) sigma=0/NaN rows fold into unweighted moments only
     instead of crashing or NaN-poisoning the weighted mean forever;
     (c) NaN m rows are skipped entirely."""
     import numpy as np
@@ -578,7 +578,7 @@ def test_streaming_pit_features_robust_inputs(spark, tmp_path):
     assert len(got) == 29               # NaN-m row emitted nothing
     last = got.iloc[-1]
     valid = np.delete(m, 5)
-    # Welford: std ~ 1, not the cancelled 0.0 of (sm2 - sm^2/n)
+    # anchored sums: std ~ 1, not the cancelled 0.0 of (sm2 - sm^2/n)
     assert last["standard_deviation"] == pytest.approx(
         valid.std(ddof=1), rel=1e-6)
     assert last["mean"] == pytest.approx(valid.mean(), rel=1e-12)
@@ -649,3 +649,328 @@ def test_streaming_dedup_reserved_digest_column(spark):
         .withColumnRenamed("value", "_digest")
     with pytest.raises(ValueError, match="_digest"):
         streaming_exact_dedup(df, ["_digest"], ts_col="timestamp")
+
+
+# --- stateful_map: one primitive, restart parity, fault injection ----------
+
+def _write_files(d, frames, first=0):
+    """One parquet file per frame, with increasing mtimes so a
+    ``maxFilesPerTrigger=1`` file source reads them in order."""
+    os.makedirs(d, exist_ok=True)
+    for i, f in enumerate(frames, start=first):
+        path = os.path.join(d, f"part-{i}.parquet")
+        f.to_parquet(path, index=False)
+        os.utime(path, (1.7e9 + i, 1.7e9 + i))
+
+
+def _digest(spark, path):
+    import hashlib
+    rows = sorted(repr(tuple(r)) for r in spark.read.parquet(path).collect())
+    return len(rows), hashlib.md5("\n".join(rows).encode()).hexdigest()
+
+
+def _frames(seed, n_files=3):
+    """In-order files: file k holds t in [10k, 10k + 10) for 3 entities,
+    with a value range that grows file by file."""
+    import numpy as np
+    rng = np.random.default_rng(seed)
+    obs, probes = [], []
+    for k in range(n_files):
+        for e in range(3):
+            t = 10.0 * k + np.sort(rng.choice(1000, 8, replace=False)) / 100
+            obs.append(pd.DataFrame({
+                "doc_id": f"e{e}", "t": t,
+                "m": rng.normal(20.0, 5.0 * (k + 1), 8),
+                "sigma": rng.uniform(0.05, 0.2, 8)}))
+            probes.append(pd.DataFrame({
+                "doc_id": f"e{e}", "ts": 10.0 * k + rng.uniform(0, 12, 4)}))
+    per = len(obs) // n_files
+    return ([pd.concat(obs[i * per:(i + 1) * per]) for i in range(n_files)],
+            [pd.concat(probes[i * per:(i + 1) * per])
+             for i in range(n_files)])
+
+
+_OBS = "doc_id string, t double, m double, sigma double"
+
+
+def _consumer(name):
+    """(builder(read) -> streaming DataFrame, output mode) per consumer."""
+    from light_curve_python_spark.streaming.asof import streaming_asof_join
+    from light_curve_python_spark.streaming.features import (
+        streaming_pit_features, streaming_quantile_features)
+    from light_curve_python_spark.streaming.stateful import (
+        streaming_n_not_det_before_fd)
+    return {
+        "asof": (lambda read: streaming_asof_join(
+            read("probes", "doc_id string, ts double"), read("obs", _OBS),
+            on="doc_id", value_cols=["m"], lookback=15.0), "append"),
+        "counter": (lambda read: streaming_n_not_det_before_fd(
+            read("obs", _OBS), key_col="doc_id", ts_col="t", m_col="m",
+            m_threshold=35.0), "update"),
+        "pit": (lambda read: streaming_pit_features(read("obs", _OBS)),
+                "append"),
+        "quantile": (lambda read: streaming_quantile_features(
+            read("obs", _OBS), bins=16), "append"),
+    }[name]
+
+
+def _run_batches(spark, build, mode, src, ckpt, out):
+    """availableNow, one file per source per micro-batch; every batch is
+    appended to ``out`` tagged with its batch id."""
+    def read(name, schema):
+        return spark.readStream.schema(schema) \
+            .option("maxFilesPerTrigger", 1).parquet(os.path.join(src, name))
+
+    def sink(batch, batch_id):
+        batch.withColumn("_batch", F.lit(batch_id)) \
+            .write.mode("append").parquet(out)
+
+    q = (build(read).writeStream.foreachBatch(sink).outputMode(mode)
+         .option("checkpointLocation", ckpt)
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+
+
+@pytest.mark.parametrize("name", ["asof", "counter", "pit", "quantile"])
+def test_stateful_consumers_restart_parity(spark, tmp_path, name):
+    """Files 1-2, a restart, then file 3 from the same checkpoint give
+    exactly the rows (and micro-batch ids) of one uninterrupted run."""
+    build, mode = _consumer(name)
+    obs, probes = _frames(seed=21)
+    full, split = str(tmp_path / "full"), str(tmp_path / "split")
+    for d, upto in ((full, 3), (split, 2)):
+        _write_files(os.path.join(d, "obs"), obs[:upto])
+        _write_files(os.path.join(d, "probes"), probes[:upto])
+    _run_batches(spark, build, mode, full, full + "/ckpt", full + "/out")
+    _run_batches(spark, build, mode, split, split + "/ckpt", split + "/out")
+    _write_files(os.path.join(split, "obs"), obs[2:], first=2)
+    _write_files(os.path.join(split, "probes"), probes[2:], first=2)
+    _run_batches(spark, build, mode, split, split + "/ckpt", split + "/out")
+    want = _digest(spark, full + "/out")
+    assert want[0] > 0
+    assert _digest(spark, split + "/out") == want
+    batches = spark.read.parquet(split + "/out").select("_batch") \
+        .distinct().count()
+    assert batches == 3
+
+
+def test_stateful_map_kill_mid_batch_restart(spark, tmp_path):
+    """A fold that dies inside micro-batch 2 (no task retry in local
+    mode) kills the query; restarting from the same checkpoint gives the
+    parquet sink byte-identical rows to an uninterrupted run."""
+    import numpy as np
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql import types as T
+
+    from light_curve_python_spark.streaming.stateful import stateful_map
+
+    obs, _ = _frames(seed=5)
+    marker = str(tmp_path / "fail_once")
+
+    def fold(_, a, st):
+        if len(a["t"]) and a["t"][0] >= 10.0 and os.path.exists(marker):
+            os.remove(marker)
+            raise RuntimeError("injected fault in micro-batch 2")
+        n = st["n"] + np.arange(1, len(a["t"]) + 1)
+        s = np.cumsum(np.concatenate(([st["s"]], a["m"])))
+        return ({"t": a["t"], "n": n, "s": s[1:]},
+                {"n": st["n"] + len(a["t"]), "s": s[-1]})
+
+    schema = T.StructType([T.StructField("t", T.DoubleType()),
+                           T.StructField("n", T.LongType()),
+                           T.StructField("s", T.DoubleType())])
+    init = {"n": np.array(0), "s": np.array(0.0)}
+
+    def run(d):
+        stream = spark.readStream.schema(_OBS) \
+            .option("maxFilesPerTrigger", 1).parquet(d + "/src")
+        q = (stateful_map(stream.select("doc_id", "t", "m"), "doc_id", "t",
+                          fold, schema, init)
+             .writeStream.format("parquet").option("path", d + "/out")
+             .option("checkpointLocation", d + "/ckpt")
+             .outputMode("append").trigger(availableNow=True).start())
+        q.awaitTermination(120)
+
+    clean, killed = str(tmp_path / "clean"), str(tmp_path / "killed")
+    for d in (clean, killed):
+        _write_files(d + "/src", obs)
+    run(clean)
+    open(marker, "w").close()
+    with pytest.raises(StreamingQueryException, match="injected fault"):
+        run(killed)
+    assert not os.path.exists(marker)
+    done = _digest(spark, killed + "/out")
+    assert 0 < done[0] < len(pd.concat(obs))      # died after batch 1
+    run(killed)
+    want = _digest(spark, clean + "/out")
+    assert want[0] == len(pd.concat(obs))
+    assert _digest(spark, killed + "/out") == want
+
+
+def test_streaming_pit_features_bitwise_battery(spark, tmp_path):
+    """In-order stream over 3 micro-batches: the moment family equals
+    PrefixBattery.evaluate_prefixes over every prefix, bit for bit."""
+    import numpy as np
+
+    from light_curve_python_spark.functions.battery import PrefixBattery
+    from light_curve_python_spark.functions.kernels import make_kernel
+    from light_curve_python_spark.streaming.features import (
+        STREAM_FEATURE_NAMES, streaming_pit_features)
+
+    obs, _ = _frames(seed=13)
+    _write_files(str(tmp_path / "src"), obs)
+    stream = spark.readStream.schema(_OBS) \
+        .option("maxFilesPerTrigger", 1).parquet(str(tmp_path / "src"))
+    q = (streaming_pit_features(stream)
+         .writeStream.format("parquet").option("path", str(tmp_path / "out"))
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    got = spark.read.parquet(str(tmp_path / "out")).toPandas()
+    battery = PrefixBattery([make_kernel(n) for n in STREAM_FEATURE_NAMES])
+    allobs = pd.concat(obs)
+    for e, grp in allobs.groupby("doc_id"):
+        grp = grp.sort_values("t")
+        g = got[got.doc_id == e].sort_values("t")
+        assert g.t.tolist() == grp.t.tolist()
+        want = battery.evaluate_prefixes(
+            grp.t.to_numpy(), grp.m.to_numpy(), grp.sigma.to_numpy(),
+            np.arange(1, len(grp) + 1))
+        have = g[list(STREAM_FEATURE_NAMES)].to_numpy(np.float64)
+        np.testing.assert_array_equal(have.view(np.uint64),
+                                      want.view(np.uint64), err_msg=e)
+
+
+def test_stateful_map_state_layout_mismatch():
+    """One binary state layout; a checkpoint written by another operator
+    or parameter set (here: a different histogram size) is rejected."""
+    import numpy as np
+
+    from light_curve_python_spark.streaming.stateful import _pack, _unpack
+
+    init = {"lo": np.array(np.nan), "counts": np.zeros(8, np.int64),
+            "hist": np.empty((0, 2))}
+    st = {"lo": np.array(1.5), "counts": np.arange(8),
+          "hist": np.arange(10.0).reshape(5, 2)}
+    back = _unpack(_pack(st), init)
+    assert back.keys() == st.keys()
+    for k in st:
+        np.testing.assert_array_equal(back[k], st[k])
+        assert back[k].dtype == init[k].dtype
+    for bad in ({**init, "counts": np.zeros(16, np.int64)},
+                {**init, "hist": np.empty((0, 3))},
+                {"lo": init["lo"], "counts": init["counts"]}):
+        with pytest.raises(ValueError, match="does not match"):
+            _unpack(_pack(st), bad)
+
+
+def _quantile_loop_reference(values, bins, lo, hi, counts):
+    """The per-row histogram fold the vectorized sketch replaced, kept as
+    its reference: returns one (n, median, ipr, q05, q95, err) row per
+    value and the new (lo, hi)."""
+    import math
+
+    import numpy as np
+
+    from light_curve_python_spark.streaming.features import _HALF_MAX
+
+    def hist_quantiles(n, width, qs):
+        cum = np.cumsum(counts)
+        h = np.clip(np.asarray(qs, dtype=np.float64) * n - 0.5, 0.0, n - 1.0)
+        k = np.floor(h).astype(np.int64)
+        frac = h - k
+
+        def order_stat(ranks):
+            idx = np.searchsorted(cum, ranks)
+            prev = np.where(idx > 0, cum[np.maximum(idx - 1, 0)], 0)
+            return lo + (idx + (ranks - prev - 0.5) / counts[idx]) * width
+
+        x0 = order_stat(k + 1)
+        x1 = order_stat(np.minimum(k + 2, np.int64(n)))
+        return (1.0 - frac) * x0 + frac * x1
+
+    def cell(x, width):
+        if width <= 0.0:
+            return 0
+        return min(max(int((x - lo) / width), 0), bins - 1)
+
+    rows, n = [], float(counts.sum())
+    for v in values:
+        v = min(max(v, -_HALF_MAX), _HALF_MAX)
+        if math.isnan(lo):
+            lo = hi = v
+            counts[0] += 1
+        elif hi == lo and v == lo:
+            counts[0] += 1
+        elif hi == lo:
+            seed_n, seed_v = counts[0], lo
+            counts[0] = 0
+            lo, hi = min(lo, v), max(hi, v)
+            counts[cell(seed_v, (hi - lo) / bins)] = seed_n
+            counts[cell(v, (hi - lo) / bins)] += 1
+        else:
+            while v < lo or v >= hi:
+                if (v < lo and lo <= -_HALF_MAX) \
+                        or (v >= hi and hi >= _HALF_MAX):
+                    break
+                width = hi - lo
+                merged = counts.reshape(bins // 2, 2).sum(axis=1)
+                counts[:] = 0
+                if v < lo:
+                    counts[bins // 2:] = merged
+                    lo = max(lo - width, -_HALF_MAX)
+                else:
+                    counts[:bins // 2] = merged
+                    hi = min(hi + width, _HALF_MAX)
+            counts[cell(v, (hi - lo) / bins)] += 1
+        n += 1.0
+        width = (hi - lo) / bins
+        if width <= 0.0:
+            q05 = q25 = q50 = q75 = q95 = lo
+            err = hi - lo
+        else:
+            q05, q25, q50, q75, q95 = hist_quantiles(
+                n, width, (0.05, 0.25, 0.5, 0.75, 0.95))
+            err = 2.0 * width
+        rows.append((n, q50, q75 - q25, q05, q95, err))
+    return rows, lo, hi
+
+
+@pytest.mark.parametrize("case", ["growing", "flat_then_spread", "extreme",
+                                  "subnormal", "doubling_every_row"])
+def test_quantile_fold_matches_row_loop(case, monkeypatch):
+    """The vectorized sketch fold is bitwise the per-row loop it replaced,
+    for any split of the rows into micro-batches and of a batch into
+    cumulative-count blocks."""
+    import numpy as np
+
+    from light_curve_python_spark.streaming import features
+    from light_curve_python_spark.streaming.features import (
+        QUANTILE_STREAM_NAMES, _quantile_fold)
+
+    monkeypatch.setattr(features, "_BLOCK_CELLS", 56)   # 7-row blocks
+
+    rng = np.random.default_rng(17)
+    values = {
+        "growing": rng.standard_normal(3000) * np.repeat([1, 4, 50], 1000),
+        "flat_then_spread": np.r_[np.full(40, 3.0), 3.0 + rng.random(60)],
+        "extreme": np.array([1.0, 1.0 + 1e-13, -1.7e308, 1.6e308, 2.0]),
+        "subnormal": np.array([0.0, 5e-324, 0.0, 1e-323, 5e-324]),
+        "doubling_every_row": 2.0 ** np.arange(60),
+    }[case]
+    bins = 8
+    fold = _quantile_fold("t", "m", bins)
+    st = {"lo": np.nan, "hi": np.nan, "counts": np.zeros(bins, np.int64)}
+    ref_counts = np.zeros(bins, np.int64)
+    lo = hi = np.nan
+    cuts = np.sort(rng.choice(np.arange(1, len(values)), 3, replace=False))
+    for part in np.split(values, cuts):
+        out, st = fold(None, {"t": np.zeros(len(part)), "m": part}, st)
+        want, lo, hi = _quantile_loop_reference(part, bins, lo, hi,
+                                                ref_counts)
+        have = np.column_stack([out[c] for c in QUANTILE_STREAM_NAMES])
+        np.testing.assert_array_equal(
+            have.view(np.uint64),
+            np.asarray(want, dtype=np.float64).reshape(-1, 6).view(np.uint64))
+        assert (st["lo"], st["hi"]) == (lo, hi)
+        np.testing.assert_array_equal(st["counts"], ref_counts)
