@@ -32,7 +32,6 @@ from light_curve_python_spark.operators.dedup import (pair_counts,
                                                       posting_lists, shingle)
 from light_curve_python_spark.operators.extract import FeatureExtractor
 from light_curve_python_spark.operators.sessionize import session_stats
-from light_curve_python_spark.plans.balance import rebalance_scan
 from light_curve_python_spark.operators.windows import (
     backfill,
     rolling_range_agg,
@@ -1058,33 +1057,15 @@ TOPK_ANN = 3
 
 
 def q_cosine_topk(spark, sf_dir):
-    emb = (spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-           .select("vec_id",
-                   F.col("embedding").cast("array<double>").alias("e")))
-    norm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-    # norms computed ONCE PER ROW on each side before the |probes|-way
-    # fan-out (the same expression previously re-evaluated per PAIR paid
-    # 2 of the 3 interpreted array traversals redundantly — bitwise-equal
-    # values, just not recomputed); corpus side rebalanced so a few-split
-    # scan does not serialize the fan-out on one task
-    probes = (emb.filter(F.col("vec_id") < N_PROBES_ANN)
-              .select(F.col("vec_id").alias("probe_id"),
-                      F.col("e").alias("pe"))
-              .withColumn("_np", norm(F.col("pe"))))
-    corpus = rebalance_scan(emb).withColumn("_ne", norm(F.col("e")))
-    dot = F.aggregate(F.zip_with("e", "pe", lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    pairs = (corpus.crossJoin(F.broadcast(probes))
-             .filter(F.col("vec_id") != F.col("probe_id"))
-             .withColumn("cosine", dot / (F.col("_ne") * F.col("_np"))))
-    pick = Window.partitionBy("probe_id").orderBy(F.col("cosine").desc(),
-                                                  F.col("vec_id").asc())
-    return (pairs.withColumn("rk", F.row_number().over(pick))
-            .filter(F.col("rk") <= TOPK_ANN)
-            .select("probe_id", F.col("rk").cast("long").alias("rk"),
-                    F.col("vec_id").alias("neighbor_id"),
-                    _r("cosine", 6).alias("cosine")))
+    """Exact top-k cosine neighbors (operators/similarity.py
+    cosine_topk): hoisted per-row norms and a JVM dot, whose summation
+    order the DuckDB twin's list_dot_product reproduces."""
+    from light_curve_python_spark.operators.similarity import cosine_topk
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    out = cosine_topk(emb, emb.filter(F.col("vec_id") < N_PROBES_ANN),
+                      k=TOPK_ANN)
+    return out.select("probe_id", F.col("rank").cast("long").alias("rk"),
+                      "neighbor_id", _r("cosine", 6).alias("cosine"))
 
 
 SQL_COSINE_TOPK = f"""
@@ -1589,29 +1570,26 @@ def _erfc_sql(x: str) -> str:
             f"ELSE {vlarge} END) END")
 
 
+def _curve_feature_rows(spark, sf_dir, feature, names):
+    """One feature over each user's whole event curve
+    (FeatureExtractor.extract), without the fill rows — too few points,
+    zero variance, zero time span: SQL NULL, the groups the DuckDB twins
+    exclude — and with the kernel outputs in ``names`` renamed and
+    rounded."""
+    out = FeatureExtractor([feature]).extract(_ev(spark, sf_dir),
+                                              entity_col="user_id")
+    return out.filter(F.col(next(iter(names))).isNotNull()).select(
+        "user_id", *[_r(k, 6).alias(v) for k, v in names.items()])
+
+
 def q_anderson_darling(spark, sf_dir):
     """AndersonDarlingNormal per user (kernels.py — scipy semantics with
     the finite-sample factor): the erf-dependent statistic gets a full
     hash gate by evaluating the engine's own Cody erfc in DuckDB
     (_erfc_sql) inside the textbook sorted-logcdf sum.  Degenerate groups
     (n < 4 or zero variance) excluded in both engines."""
-    import numpy as np
-    from light_curve_python_spark.functions.kernels import (
-        evaluate_kernel,
-        make_kernel,
-    )
-    from light_curve_python_spark.operators.grouped import grouped_map
-    k = make_kernel("anderson_darling_normal")
-
-    def fn(m):
-        if len(m) < 4 or np.std(m, ddof=1) == 0:
-            return None
-        return evaluate_kernel(k, np.arange(len(m), dtype=np.float64), m,
-                               None, fill_value=None)[:1, None]
-
-    out = grouped_map(_ev(spark, sf_dir), "user_id", ["m"],
-                      [T.StructField("a2", T.DoubleType())], fn)
-    return out.withColumn("a2", _r("a2", 6))
+    return _curve_feature_rows(spark, sf_dir, "anderson_darling_normal",
+                               {"anderson_darling_normal": "a2"})
 
 
 _TINY = 2.2250738585072014e-308   # np.finfo(float64).tiny — the log clip
@@ -1653,23 +1631,8 @@ def q_chi2_pvar(spark, sf_dir):
     fraction with identical iteration arithmetic and convergence tests —
     as recursive CTEs, so even the iterative special function carries a
     full hash gate."""
-    import numpy as np
-    from light_curve_python_spark.functions.kernels import (
-        evaluate_kernel,
-        make_kernel,
-    )
-    from light_curve_python_spark.operators.grouped import grouped_map
-    k = make_kernel("chi2_pvar")
-
-    def fn(m, sigma):
-        if len(m) < 2:
-            return None
-        return evaluate_kernel(k, np.arange(len(m), dtype=np.float64), m,
-                               sigma, fill_value=None)[:1, None]
-
-    out = grouped_map(_ev(spark, sf_dir), "user_id", ["m", "sigma"],
-                      [T.StructField("pvar", T.DoubleType())], fn)
-    return out.withColumn("pvar", _r("pvar", 6))
+    return _curve_feature_rows(spark, sf_dir, "chi2_pvar",
+                               {"chi2_pvar": "pvar"})
 
 
 def _sql_chi2_pvar() -> str:
@@ -1738,32 +1701,27 @@ GAUSS_DM_EDGES = [round(-2.0 + 0.25 * i, 2) for i in range(17)]  # 16 bins
 
 
 def q_dmdt_gausses(spark, sf_dir):
-    """Gaussian-smeared dm-dt map (operators/dmdt.py dmdt_gausses_kernel,
-    reference dmdt.rs:287-420): each pair spreads N(dm, sigma_i^2 +
-    sigma_j^2) probability mass over the dm bins of its dt row.  The
-    DuckDB twin evaluates the IDENTICAL Cody erf (generated from the
-    package's coefficients — see _erf_sql) over the same pair set, so the
-    iterative-free but erf-heavy kernel gets a full hash gate."""
+    """Gaussian-smeared dm-dt map (operators/spectral.py dmdt_maps with
+    gausses=True, reference dmdt.rs:287-420), one row per map cell: each
+    pair spreads N(dm, sigma_i^2 + sigma_j^2) probability mass over the dm
+    bins of its dt row.  The DuckDB twin evaluates the IDENTICAL Cody erf
+    (generated from the package's coefficients — see _erf_sql) over the
+    same pair set, so the iterative-free but erf-heavy kernel gets a full
+    hash gate."""
     import numpy as np
-    from light_curve_python_spark.operators.dmdt import dmdt_gausses_kernel
-    from light_curve_python_spark.operators.grouped import grouped_map
+    from light_curve_python_spark.operators.spectral import dmdt_maps
     dt_edges = 10.0 ** np.linspace(DMDT["lgdt_min"], DMDT["lgdt_max"],
                                    DMDT["n_dt"] + 1)
-    dm_edges = np.asarray(GAUSS_DM_EDGES, dtype=np.float64)
-    out_fields = [T.StructField("dt_bin", T.LongType()),
-                  T.StructField("dm_bin", T.LongType()),
-                  T.StructField("mass", T.DoubleType())]
-    n_dt, n_dm = DMDT["n_dt"], len(GAUSS_DM_EDGES) - 1
-    di, mi = np.meshgrid(np.arange(n_dt, dtype=np.int64),
-                         np.arange(n_dm, dtype=np.int64), indexing="ij")
-
-    def fn(t, m, sigma):
-        hist = dmdt_gausses_kernel(t, m, sigma, dt_edges, dm_edges)
-        return di.ravel(), mi.ravel(), hist.ravel()
-
-    out = grouped_map(_ev(spark, sf_dir), "user_id", ["t", "m", "sigma"],
-                      out_fields, fn, order_cols=("t", "m"))
-    return out.withColumn("mass", _r("mass", 6))
+    n_dm = len(GAUSS_DM_EDGES) - 1
+    maps = dmdt_maps(_ev(spark, sf_dir), entity_col="user_id",
+                     sigma_col="sigma", dt_edges=dt_edges,
+                     dm_edges=GAUSS_DM_EDGES, gausses=True)
+    cells = maps.select("user_id",
+                        F.posexplode("dmdt").alias("pos", "mass"))
+    return cells.select("user_id",
+                        F.expr(f"pos div {n_dm}").alias("dt_bin"),
+                        (F.col("pos") % n_dm).cast("long").alias("dm_bin"),
+                        _r("mass", 6).alias("mass"))
 
 
 def _sql_dmdt_gausses() -> str:
@@ -1926,25 +1884,9 @@ def q_periodogram_peaks(spark, sf_dir):
     tau-shifted closed-form power at every grid frequency, the strict
     interior-local-max peak pick (strongest first, argmax fallback), and
     the (P - mean)/std(ddof=1) S/N — the full output contract in SQL."""
-    import numpy as np
-    from light_curve_python_spark.functions.kernels import (
-        evaluate_kernel,
-        make_kernel,
-    )
-    from light_curve_python_spark.operators.grouped import grouped_map
-    k = make_kernel("periodogram", peaks=1, fast=False)
-
-    def fn(t, m):
-        if len(m) < 3 or np.std(m, ddof=1) == 0 or t[-1] <= t[0]:
-            return None
-        return evaluate_kernel(k, t, m, None, fill_value=None)[:2, None]
-
-    out = grouped_map(_ev(spark, sf_dir), "user_id", ["t", "m"],
-                      [T.StructField("period_0", T.DoubleType()),
-                       T.StructField("s_to_n_0", T.DoubleType())],
-                      fn, order_cols=("t", "m"))
-    return out.select("user_id", _r("period_0", 6).alias("period_0"),
-                      _r("s_to_n_0", 6).alias("s_to_n_0"))
+    return _curve_feature_rows(
+        spark, sf_dir, ("periodogram", {"peaks": 1, "fast": False}),
+        {"period_0": "period_0", "period_s_to_n_0": "s_to_n_0"})
 
 
 _PG_PEAKS_CTES = f"""ev AS ({EV_SQL}),
@@ -2035,24 +1977,10 @@ def q_periodogram_folded(spark, sf_dir):
     by phase, apply an order-sensitive feature (eta) — the kernel's
     ``period_folded_`` output, reproduced in SQL end to end (grid → power
     → peak → fold → consecutive-pair sum)."""
-    import numpy as np
-    from light_curve_python_spark.functions.kernels import (
-        evaluate_kernel,
-        make_kernel,
-    )
-    from light_curve_python_spark.operators.grouped import grouped_map
-    k = make_kernel("periodogram", peaks=1, fast=False,
-                    phase_features=("eta",))
-
-    def fn(t, m):
-        if len(m) < 3 or np.std(m, ddof=1) == 0 or t[-1] <= t[0]:
-            return None
-        return evaluate_kernel(k, t, m, None, fill_value=None)[2:3, None]
-
-    out = grouped_map(_ev(spark, sf_dir), "user_id", ["t", "m"],
-                      [T.StructField("folded_eta", T.DoubleType())], fn,
-                      order_cols=("t", "m"))
-    return out.select("user_id", _r("folded_eta", 6).alias("folded_eta"))
+    return _curve_feature_rows(
+        spark, sf_dir, ("periodogram", {"peaks": 1, "fast": False,
+                                        "phase_features": ("eta",)}),
+        {"period_folded_eta": "folded_eta"})
 
 
 RAINBOW_WAVES = {"g": 4770e-8, "r": 6231e-8}  # effective wavelengths, cm
@@ -2330,19 +2258,21 @@ def _cosine_dup_base(spark, sf_dir):
     """(embeddings, threshold-filtered cosine pairs) — ONE definition of
     the near-dup pair pipeline shared by q_cosine_dup_pairs and
     q_dedup_groups (whose docstring pins it to exactly these pairs); a
-    second copy could silently drift from its own components row."""
+    second copy could silently drift from its own components row.  The
+    norms and the score are the similarity operators' own expressions."""
+    from light_curve_python_spark.operators.similarity import (
+        cosine_score,
+        l2_norm,
+    )
     emb = (spark.read.parquet(f"{sf_dir}/embeddings.parquet")
            .select("vec_id",
                    F.col("embedding").cast("array<double>").alias("e")))
-    dot = F.aggregate(F.zip_with("ea", "eb", lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    a = emb.select(F.col("vec_id").alias("id_a"), F.col("e").alias("ea"))
-    b = emb.select(F.col("vec_id").alias("id_b"), F.col("e").alias("eb"))
-    norm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
+    a = emb.select(F.col("vec_id").alias("id_a"), F.col("e").alias("ea"),
+                   l2_norm("e").alias("na"))
+    b = emb.select(F.col("vec_id").alias("id_b"), F.col("e").alias("eb"),
+                   l2_norm("e").alias("nb"))
     pairs = (a.join(b, F.col("id_a") < F.col("id_b"))
-             .withColumn("cosine", dot / (norm(F.col("ea"))
-                                          * norm(F.col("eb"))))
+             .withColumn("cosine", cosine_score("ea", "eb", "na", "nb"))
              .filter(F.col("cosine") >= COSINE_DUP_TAU))
     return emb, pairs
 

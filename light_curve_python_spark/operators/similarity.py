@@ -1,15 +1,24 @@
 """Similarity search over embedding columns (array<float>).
 
+Every search scores its candidate pairs the same way: each side's L2 norm
+is computed once per row before the fan-out (``l2_norm``), each pair gets
+one JVM dot divided by the two norms (``cosine_score``), and one re-rank
+keeps each probe's top k by (cosine DESC, neighbor_id ASC).  On 4 cores
+at sf0.1 (100 probes, k=10, min of 5, two alternating rounds) the exact
+search takes 0.91-1.01 s with this scorer against 1.15-1.17 s with the
+pandas-UDF cosine it replaced (einsum per Arrow batch); the LSH headline
+of ``bench_extra.py`` is flat (see CHANGES.md).  The UDF's old "~2x"
+lead was over a JVM scorer that recomputed both norms for every pair.
+
 - cosine_topk: brute-force exact baseline.  The probe side is broadcast, the
   corpus side streams — at 100 TB the corpus never shuffles; cost is one scan
-  per probe batch.  Cosines run as one vectorized Arrow batch per task
-  (measured ~2x the JVM aggregate/zip_with HOF at 64-dim — the HOF lambda
-  is interpreted per element).
+  per probe batch.
 - lsh_topk: random-hyperplane LSH scale path — hyperplanes are derived
   deterministically from a seed (driver-side numpy, broadcast in the plan as
   literals), signatures computed with a vectorized pandas UDF (one matmul per
   Arrow batch), candidates restricted to matching buckets, then exact cosine
   re-rank.  Recall is tunable via n_planes/n_tables.
+- ivf_topk: KMeans coarse quantizer; probes search their nearest cells.
 - tune_ann: picks the cheapest (lsh or ivf) operating point meeting a
   target recall, measured on a probe sample against the exact baseline;
   falls back to recommending the exact path when no approximate point
@@ -29,90 +38,67 @@ from pyspark.sql.functions import pandas_udf
 
 from ..plans.balance import rebalance_scan
 
-__all__ = ["cosine_topk", "lsh_topk", "ivf_topk", "with_l2_norm",
+__all__ = ["cosine_topk", "lsh_topk", "ivf_topk", "l2_norm", "cosine_score",
            "ivf_train_centers", "ann_recall", "tune_ann"]
 
 
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, x: acc + x)
+def _array_sum(arr):
+    return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
 
 
-@pandas_udf(T.DoubleType())
-def _cosine_pudf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Vectorized cosine over two array columns: one einsum + two norms
-    per Arrow batch.  MEASURED faster than the JVM aggregate/zip_with
-    HOF dot at 64-dim (sf0.1 re-rank of 82k pairs: 2.39 s HOF vs 1.29 s
-    Arrow end-to-end, min-of-3) — the HOF lambda is interpreted per
-    element, the Arrow batch is one BLAS-shaped pass."""
-    if not len(a):
-        return pd.Series([], dtype="float64")
-    an = a.to_numpy()
-    bn = b.to_numpy()
-    # null or ragged-length embeddings get NULL (ranked last under desc)
-    # instead of blowing up the whole job in np.vstack — the JVM
-    # expression this UDF replaced emitted NULL for such rows, and one
-    # bad row must not kill a corpus-scale scan.  Mixed-but-equal-length
-    # pairs are computed per length group (deterministic: each PAIR's
-    # fate depends only on its own lengths, never on how rows were
-    # batched).  The validity pass is O(rows); the vstack fast path
-    # below is untouched for clean batches.
-    lens_a = np.fromiter((-1 if v is None else len(v) for v in an),
-                         np.int64, len(an))
-    lens_b = np.fromiter((-1 if v is None else len(v) for v in bn),
-                         np.int64, len(bn))
-    good = (lens_a >= 0) & (lens_a == lens_b)
-    if not (good.all() and len(np.unique(lens_a)) == 1):
-        vals = np.full(len(an), np.nan)
-        mask = np.ones(len(an), dtype=bool)
-        for dim in np.unique(lens_a[good]):
-            sel = good & (lens_a == dim)
-            ma = np.vstack(an[sel])
-            mb = np.vstack(bn[sel])
-            num = np.einsum("ij,ij->i", ma, mb)
-            den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
-            zero = den == 0.0
-            vals[sel] = num / np.where(zero, 1.0, den)
-            si = np.nonzero(sel)[0]
-            mask[si[~zero]] = False
-        return pd.Series(pd.arrays.FloatingArray(vals, mask))
-    ma = np.vstack(an)
-    mb = np.vstack(bn)
-    num = np.einsum("ij,ij->i", ma, mb)
-    den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
-    # zero-norm vectors get NULL, matching the former JVM x/0.0 — a NaN
-    # here would sort FIRST under the desc() rank window (Spark orders
-    # NaN above every other double) and outrank every real neighbor
-    zero = den == 0.0
-    vals = num / np.where(zero, 1.0, den)
-    return pd.Series(pd.arrays.FloatingArray(vals, zero))
+def l2_norm(vec: str):
+    """``sqrt(Σ x²)`` of an ``array<double>`` column — computed once per
+    row, before any pair fan-out, and passed to :func:`cosine_score`."""
+    return F.sqrt(_array_sum(F.transform(vec, lambda x: x * x)))
 
 
-def with_l2_norm(df: DataFrame, vec_col: str = "embedding",
-                 out_col: str = "_norm") -> DataFrame:
-    v = F.col(vec_col).cast("array<double>")
-    return df.withColumn(out_col, F.sqrt(_dot(v, v)))
+def cosine_score(a: str, b: str, norm_a: str, norm_b: str):
+    """The one cosine of the package: a JVM dot (left-to-right sum of
+    ``zip_with`` products) over the two hoisted :func:`l2_norm` columns.
+    Null and ragged vectors give NULL through ``zip_with``; a zero norm
+    gives NULL through ``try_divide`` (a bare ``/`` raises under ANSI)."""
+    dot = _array_sum(F.zip_with(a, b, lambda x, y: x * y))
+    return F.try_divide(dot, F.col(norm_a) * F.col(norm_b))
+
+
+def _sides(corpus: DataFrame, probes: DataFrame, vec_col: str, id_col: str,
+           dim: Optional[int] = None):
+    """Corpus rows as ``(neighbor_id, _cv, _cn)`` and probe rows as
+    ``(probe_id, _pv, _pn)``: vector cast to ``array<double>`` plus its
+    norm.  With ``dim``, rows whose vector is not ``dim`` long (null or
+    ragged) are dropped JVM-side — the approximate paths cannot project
+    them.  A few-split corpus scan is rebalanced so the per-corpus-row
+    work does not serialize on one task (no-op at scale)."""
+    def side(df, id_out, vec_out, norm_out):
+        if dim is not None:
+            df = df.filter(F.size(vec_col) == dim)
+        return (df.select(F.col(id_col).alias(id_out),
+                          F.col(vec_col).cast("array<double>").alias(vec_out))
+                .withColumn(norm_out, l2_norm(vec_out)))
+    return (side(rebalance_scan(corpus), "neighbor_id", "_cv", "_cn"),
+            side(probes, "probe_id", "_pv", "_pn"))
+
+
+def _top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """Score candidate pairs and keep each probe's k best by
+    ``(cosine DESC, neighbor_id ASC)``; NULL cosines rank last."""
+    scored = pairs.withColumn("cosine",
+                              cosine_score("_cv", "_pv", "_cn", "_pn"))
+    pick = Window.partitionBy("probe_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc())
+    return (scored.withColumn("rank", F.row_number().over(pick))
+            .filter(F.col("rank") <= k)
+            .select("probe_id", "rank", "neighbor_id", "cosine"))
 
 
 def cosine_topk(corpus: DataFrame, probes: DataFrame, k: int = 10,
                 vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
     """Exact top-k cosine neighbors for each probe row.  Returns
-    (probe_id, rank, neighbor_id, cosine)."""
-    # the per-corpus-row work below is |probes| cosines — rebalance a
-    # few-split scan so it does not serialize on one task (no-op at scale)
-    c = rebalance_scan(corpus) \
-        .select(F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).cast("array<double>").alias("_cv"))
-    p = probes.select(F.col(id_col).alias("probe_id"),
-                      F.col(vec_col).cast("array<double>").alias("_pv"))
-    pairs = (c.crossJoin(F.broadcast(p))
-             .filter(F.col("neighbor_id") != F.col("probe_id"))
-             .withColumn("cosine", _cosine_pudf("_cv", "_pv")))
-    pick = Window.partitionBy("probe_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (pairs.withColumn("rank", F.row_number().over(pick))
-            .filter(F.col("rank") <= k)
-            .select("probe_id", "rank", "neighbor_id", "cosine"))
+    (probe_id, rank, neighbor_id, cosine).  A null, ragged or all-zero
+    vector is kept with a NULL cosine, ranked last."""
+    c, p = _sides(corpus, probes, vec_col, id_col)
+    return _top_k(c.crossJoin(F.broadcast(p))
+                  .filter(F.col("neighbor_id") != F.col("probe_id")), k)
 
 
 def ivf_train_centers(corpus: DataFrame, vec_col: str = "embedding",
@@ -125,7 +111,10 @@ def ivf_train_centers(corpus: DataFrame, vec_col: str = "embedding",
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    train = corpus.select(
+    # train on the corpus's modal vector width: a null or ragged row
+    # would fail the whole KMeans fit
+    dim = corpus.agg(F.mode(F.size(vec_col))).first()[0]
+    train = corpus.filter(F.size(vec_col) == dim).select(
         array_to_vector(F.col(vec_col).cast("array<double>")).alias("_fv"))
     if sample_fraction < 1.0:
         train = train.sample(sample_fraction, seed=seed)
@@ -146,21 +135,17 @@ def ivf_topk(corpus: DataFrame, probes: DataFrame, k: int = 10,
     Scale shape: the quantizer is tiny (n_cells centroids broadcast in the
     assignment join); the search join hits ~n_probe_cells/n_cells of the
     corpus instead of all of it.  Pass ``centers`` (from
-    ``ivf_train_centers``) to skip training.
+    ``ivf_train_centers``) to skip training.  Rows whose vector is null or
+    not ``centers``-wide cannot be assigned a cell and get no result row.
     """
     if centers is None:
         centers = ivf_train_centers(corpus, vec_col, n_cells, seed,
                                     sample_fraction)
-    else:
-        centers = np.asarray(centers, dtype=np.float64)
-        n_cells = len(centers)
+    centers = np.asarray(centers, dtype=np.float64)
 
     def _cells(df, vec_alias, n_keep):
         """attach the n_keep nearest cell ids per row (tiny centroid matrix
         lives in the plan as a literal via pandas UDF)."""
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
         @pandas_udf(T.ArrayType(T.IntegerType()))
         def nearest_cells(vecs: pd.Series) -> pd.Series:
             mat = np.vstack(vecs.to_numpy())
@@ -168,29 +153,20 @@ def ivf_topk(corpus: DataFrame, probes: DataFrame, k: int = 10,
             order = np.argsort(d, axis=1)[:, :n_keep].astype(np.int32)
             return pd.Series(list(order))
 
-        return df.withColumn("_cells", nearest_cells(vec_alias))
+        # flagged nondeterministic so the optimizer cannot copy the UDF
+        # into the join's inferred not-null filter below this projection,
+        # which evaluated every row's cells twice
+        return df.withColumn("_cells",
+                             nearest_cells.asNondeterministic()(vec_alias))
 
-    # few-split corpus scans would serialize assignment + search on one
-    # task; no-op at production split counts
-    c = rebalance_scan(corpus) \
-        .select(F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).cast("array<double>").alias("_cv"))
+    c, p = _sides(corpus, probes, vec_col, id_col, dim=centers.shape[1])
     c = _cells(c, "_cv", 1).withColumn("_cell", F.col("_cells")[0]) \
         .drop("_cells")
-    p = probes.select(F.col(id_col).alias("probe_id"),
-                      F.col(vec_col).cast("array<double>").alias("_pv"))
     p = _cells(p, "_pv", n_probe_cells) \
         .withColumn("_cell", F.explode("_cells")).drop("_cells")
-
-    cands = (c.join(F.broadcast(p), "_cell")
-             .filter(F.col("neighbor_id") != F.col("probe_id"))
-             .dropDuplicates(["probe_id", "neighbor_id"]))
-    scored = cands.withColumn("cosine", _cosine_pudf("_cv", "_pv"))
-    pick = Window.partitionBy("probe_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(pick))
-            .filter(F.col("rank") <= k)
-            .select("probe_id", "rank", "neighbor_id", "cosine"))
+    return _top_k(c.join(F.broadcast(p), "_cell")
+                  .filter(F.col("neighbor_id") != F.col("probe_id"))
+                  .dropDuplicates(["probe_id", "neighbor_id"]), k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> np.ndarray:
@@ -229,15 +205,10 @@ def lsh_topk(corpus: DataFrame, probes: DataFrame, k: int = 10,
     candidates generated as SCALAR (probe_id, neighbor_id) pairs — the
     dedup across tables shuffles ids only, never embedding arrays — and
     vectors re-attached per-side for the exact re-rank (corpus-side hash
-    join on its own id, probe side broadcast)."""
+    join on its own id, probe side broadcast).  Rows whose vector is null
+    or not ``dim`` long cannot be projected and get no result row."""
     udf = _buckets_udf(dim, n_planes, seed, n_tables)
-    # few-split corpus scans would run the bucket pass and the
-    # bucket-probe join on one task; no-op at production split counts
-    c = rebalance_scan(corpus) \
-        .select(F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).cast("array<double>").alias("_cv"))
-    p = probes.select(F.col(id_col).alias("probe_id"),
-                      F.col(vec_col).cast("array<double>").alias("_pv"))
+    c, p = _sides(corpus, probes, vec_col, id_col, dim=dim)
     cb = c.select("neighbor_id",
                   F.posexplode(udf("_cv")).alias("_tbl", "_bk"))
     pb = p.select("probe_id",
@@ -246,13 +217,8 @@ def lsh_topk(corpus: DataFrame, probes: DataFrame, k: int = 10,
             .filter(F.col("neighbor_id") != F.col("probe_id"))
             .select("probe_id", "neighbor_id")
             .dropDuplicates(["probe_id", "neighbor_id"]))
-    cands = cand.join(c, "neighbor_id").join(F.broadcast(p), "probe_id")
-    scored = cands.withColumn("cosine", _cosine_pudf("_cv", "_pv"))
-    pick = Window.partitionBy("probe_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(pick))
-            .filter(F.col("rank") <= k)
-            .select("probe_id", "rank", "neighbor_id", "cosine"))
+    return _top_k(cand.join(c, "neighbor_id").join(F.broadcast(p),
+                                                   "probe_id"), k)
 
 
 def ann_recall(approx: DataFrame, exact: DataFrame, k: int) -> float:

@@ -14,7 +14,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ..functions.kernels import periodogram_power
+from ..functions.kernels import EVAL_ERRORS, periodogram_power
 from .dmdt import (count_dt_kernel, dmdt_gausses_kernel, dmdt_points_kernel,
                    normalize_dmdt)
 from .grouped import grouped_map
@@ -32,16 +32,22 @@ def periodogram_freq_power(obs: DataFrame, entity_col: str = "doc_id",
                            fast: bool = True) -> DataFrame:
     """(entity, freqs array, power array) — raw Lomb-Scargle grid per
     entity.  fast=True (the reference default) uses the Press-Rybicki FFT
-    evaluator."""
+    evaluator.  An entity whose spectrum cannot be evaluated (one point,
+    zero variance, zero time span) gets no row, like an entity with no
+    usable band in :func:`multiband_power`."""
     out_fields = [
         T.StructField("freqs", T.ArrayType(T.DoubleType()), False),
         T.StructField("power", T.ArrayType(T.DoubleType()), False),
     ]
 
     def fn(t, m):
-        freqs, power = periodogram_power(
-            t, m, resolution=resolution, max_freq_factor=max_freq_factor,
-            nyquist=nyquist, normalization=normalization, fast=fast)
+        try:
+            freqs, power = periodogram_power(
+                t, m, resolution=resolution,
+                max_freq_factor=max_freq_factor, nyquist=nyquist,
+                normalization=normalization, fast=fast)
+        except EVAL_ERRORS:
+            return None
         return [freqs], [power]
 
     return grouped_map(obs, entity_col, [t_col, m_col], out_fields, fn,

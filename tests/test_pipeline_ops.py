@@ -882,18 +882,31 @@ def test_text_review_fixes(spark):
         lsh_candidates(sigs, n_hashes=2, bands=0)
 
 
-def test_cosine_topk_null_and_ragged_embeddings(spark):
-    """A null (or wrong-length) embedding row must rank last as a NULL
-    cosine, not kill the whole job in np.vstack (r5 ADVICE finding —
-    the JVM expression this UDF replaced emitted NULL for such rows)."""
+@pytest.mark.parametrize("op", ["cosine_topk", "lsh_topk", "ivf_topk"])
+def test_topk_null_ragged_and_zero_embeddings(spark, op):
+    """A null (or wrong-length) embedding must not kill the whole job.
+    The exact path ranks it last as a NULL cosine; the approximate paths
+    cannot project it and return no row for it.  An all-zero vector gets
+    a NULL cosine and ranks last on every path — a NaN would sort FIRST
+    under desc() and outrank every real neighbor."""
+    from light_curve_python_spark.operators.similarity import ivf_topk
     rng = np.random.default_rng(3)
     vecs = [list(map(float, rng.normal(size=8))) for _ in range(6)]
     rows = [(i, v) for i, v in enumerate(vecs)]
     rows.append((6, None))                       # null embedding
     rows.append((7, vecs[0][:5]))                # ragged length
+    rows.append((8, [0.0] * 8))                  # all-zero vector
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     probes = df.filter(F.col("vec_id") == 0)
-    got = cosine_topk(df, probes, k=10).toPandas()
+    # approximate parameters that make every projectable row a candidate
+    # (ivf trains its quantizer on this corpus, bad rows included)
+    if op == "cosine_topk":
+        out = cosine_topk(df, probes, k=10)
+    elif op == "lsh_topk":
+        out = lsh_topk(df, probes, k=10, dim=8, n_planes=1, n_tables=16)
+    else:
+        out = ivf_topk(df, probes, k=10, n_cells=2, n_probe_cells=2)
+    got = out.toPandas()
     # valid neighbors come back with finite cosines and correct order
     finite = got[np.isfinite(got.cosine.astype(float))]
     assert set(finite.neighbor_id) == {1, 2, 3, 4, 5}
@@ -904,6 +917,9 @@ def test_cosine_topk_null_and_ragged_embeddings(spark):
     np.testing.assert_array_equal(
         finite.sort_values("rank").neighbor_id.to_numpy(), want)
     # the bad rows rank last with NULL cosine, never first
-    bad = got[got.neighbor_id.isin([6, 7])]
+    bad = got[got.neighbor_id.isin([6, 7, 8])]
     assert bad.cosine.isna().all()
-    assert set(bad["rank"]) == {6, 7}
+    if op == "cosine_topk":
+        assert set(bad["rank"]) == {6, 7, 8}
+    else:
+        assert list(bad.neighbor_id) == [8] and list(bad["rank"]) == [6]

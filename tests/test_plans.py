@@ -9,6 +9,8 @@ against .explain output, not taken on faith.
 - a horizon PIT with a payload is a single Arrow cogroup;
 - the pair engine's stats ride its checkpoint job, and its pair stage
   has one size-derived exchange;
+- similarity searches score pairs in the JVM, with no per-pair Python
+  UDF;
 - an engine ``mapInArrow`` guards its Python workers' per-task zip
   re-read.
 """
@@ -131,6 +133,36 @@ def test_pair_stage_has_one_size_derived_exchange(spark, monkeypatch):
     assert len(exchanges) == 1, final
     key, n = exchanges[0].rsplit(", ", 1)
     assert key.startswith("pk#") and int(n) == 5, final
+
+
+def _python_udfs(df) -> list:
+    # the UDF names of every Python evaluation node in the executed plan
+    return re.findall(r"(?:ArrowEvalPython|BatchEvalPython) \[(\w+)\(",
+                      _plan(df))
+
+
+def test_similarity_scores_pairs_in_the_jvm(spark):
+    """Every similarity search scores its pairs with the JVM cosine: the
+    exact path has no Python evaluation node, and the approximate paths
+    keep only their per-row bucket / cell projection UDF (one per side) —
+    no per-pair Python scorer."""
+    import numpy as np
+
+    from light_curve_python_spark.operators.similarity import (
+        cosine_topk,
+        ivf_topk,
+        lsh_topk,
+    )
+    emb = spark.range(20).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[F.sin(F.col("id") + i) for i in range(4)])
+        .alias("embedding"))
+    probes = emb.filter(F.col("vec_id") < 3)
+    assert _python_udfs(cosine_topk(emb, probes, k=2)) == []
+    lsh = lsh_topk(emb, probes, k=2, dim=4, n_planes=2)
+    assert _python_udfs(lsh) == ["buckets", "buckets"], _plan(lsh)
+    ivf = ivf_topk(emb, probes, k=2, centers=np.eye(4))
+    assert _python_udfs(ivf) == ["nearest_cells"] * 2, _plan(ivf)
 
 
 @pytest.mark.skipif(sys.version_info >= (3, 13),

@@ -36,10 +36,17 @@ def test_periodogram_freq_power(spark, obs):
     # operator default is fast=True (reference default algorithm): parity
     # with the direct evaluator is approximate (<= 1e-4 rel); with
     # fast=False it is exact
-    got = periodogram_freq_power(obs).toPandas().set_index("doc_id")
+    pdf = obs.toPandas()
+    # a constant entity (zero variance) and a one-point entity (zero time
+    # span) get no row instead of failing the job
+    bad = spark.createDataFrame(
+        [("const", float(i), 18.0, 0.1, "g") for i in range(5)]
+        + [("single", 1.0, 18.0, 0.1, "g")], obs.schema)
+    got = periodogram_freq_power(obs.unionByName(bad)).toPandas() \
+        .set_index("doc_id")
+    assert set(got.index) == set(pdf.doc_id)
     got_exact = periodogram_freq_power(obs, fast=False).toPandas() \
         .set_index("doc_id")
-    pdf = obs.toPandas()
     for doc_id, row in got.iterrows():
         g = pdf[pdf.doc_id == doc_id].sort_values("t")
         freqs, power = periodogram_power(g.t.to_numpy(), g.m.to_numpy())
