@@ -2853,148 +2853,89 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_pit_features_kernel(spark, "/root/testdata/sf0.001")
 
 
+# (name, Spark query, DuckDB twin) in driver order: queries() and
+# oracle_sql() both read this one table.  A twin is its SQL string, or a
+# function that builds it when oracle_sql() is called.
+# ORDER MATTERS: the driver gates the FIRST 50 entries only
+# (CORRECTNESS_r03 recorded exactly 50 of the 54 registered, in dict
+# order) and pairs each query with its twin by position.  Entries 1-50
+# are arranged so every operator family keeps a driver-gated row; the
+# tail past 50 holds second/third rows of families already covered, each
+# of which has green driver evidence in CORRECTNESS_r03 and stays gated
+# by the local mirror (tests/test_entry_oracle.py, which runs ALL
+# entries).
+_QUERY_TABLE = (
+    ("tpch_q1", q_tpch_q1, SQL_TPCH_Q1),
+    ("feat_simple_stats", q_feat_simple_stats, SQL_SIMPLE_STATS),
+    ("feat_quantiles_hazen", q_feat_quantiles, SQL_QUANTILES),
+    ("feat_dispersion", q_feat_dispersion, SQL_DISPERSION),
+    ("feat_weighted", q_feat_weighted, SQL_WEIGHTED),
+    ("feat_linear_fit", q_feat_linear_fit, SQL_LINEAR_FIT),
+    ("feat_otsu_split", q_feat_otsu, SQL_OTSU),
+    ("feat_detection_counts", q_feat_detection_counts, SQL_DETECTION),
+    ("pit_features_kernel", q_pit_features_kernel, SQL_PIT_FEATURES),
+    ("pit_features_horizon", q_pit_features_horizon, SQL_PIT_HORIZON),
+    ("feat_nested_input", q_feat_nested, SQL_FEAT_NESTED),
+    ("asof_join", q_asof_join, SQL_ASOF),
+    ("lag_lead", q_lag_lead, SQL_LAG_LEAD),
+    ("backfill_ffill", q_backfill, SQL_BACKFILL),
+    ("rolling_range_1h", q_rolling_1h, SQL_ROLLING_1H),
+    ("sessionize_30m", q_sessionize, SQL_SESSIONIZE),
+    ("bins_1day", q_bins_1day, SQL_BINS),
+    ("transformed_features", q_transformed_features, SQL_TRANSFORMED),
+    ("dedup_exact", q_dedup_exact, SQL_DEDUP_EXACT),
+    ("minhash_signatures", q_minhash_signatures, SQL_MINHASH),
+    ("simhash16", q_simhash16, SQL_SIMHASH),
+    ("nearest_neighbor_jaccard", q_nearest_neighbor_jaccard, SQL_NN_JACCARD),
+    ("cosine_topk", q_cosine_topk, SQL_COSINE_TOPK),
+    ("lsh_topk", q_lsh_topk, _sql_lsh_topk),
+    ("doc_fingerprint", q_doc_fingerprint, SQL_FINGERPRINT),
+    ("text_quality", q_text_quality, SQL_TEXT_QUALITY),
+    ("feat_colors_multiband", q_feat_colors, SQL_COLORS),
+    ("dmdt_map", q_dmdt_map, SQL_DMDT),
+    ("anderson_darling", q_anderson_darling, _sql_anderson_darling),
+    ("chi2_pvar", q_chi2_pvar, _sql_chi2_pvar),
+    ("seq_reduce_end", q_seq_reduce_end, SQL_SEQ_REDUCE_END),
+    ("seq_windows", q_seq_windows, SQL_SEQ_WINDOWS),
+    ("lsh_candidates", q_lsh_candidates, SQL_LSH_CANDIDATES),
+    ("count_dt", q_count_dt, SQL_COUNT_DT),
+    ("periodogram_grid", q_periodogram_grid, SQL_PERIODOGRAM_GRID),
+    ("periodogram_peaks", q_periodogram_peaks, SQL_PERIODOGRAM_PEAKS),
+    ("multiband_power", q_multiband_power, SQL_MULTIBAND_POWER),
+    ("rainbow_fit", q_rainbow_fit, SQL_RAINBOW_FIT),
+    ("bazin_fit", q_bazin_fit, SQL_BAZIN_FIT),
+    ("token_counts", q_token_counts, SQL_TOKEN_COUNTS),
+    ("dedup_groups", q_dedup_groups, SQL_DEDUP_GROUPS),
+    ("stratified_sample", q_stratified_sample, SQL_STRATIFIED_SAMPLE),
+    ("corpus_filter", q_corpus_filter, SQL_CORPUS_FILTER),
+    ("word_bigrams", q_word_bigrams, SQL_WORD_BIGRAMS),
+    ("pack_spans", q_pack_spans, SQL_PACK_SPANS),
+    ("contamination", q_contamination, SQL_CONTAMINATION),
+    ("pii_scrub", q_pii_scrub, SQL_PII_SCRUB),
+    ("lang_id", q_lang_id, _langid_sql),
+    ("multimodal_features", q_multimodal_features, _sql_multimodal),
+    ("pipeline_e2e", q_pipeline_e2e, SQL_PIPELINE_E2E),
+    # ---- entries past the driver's 50-row gate cap ----
+    ("feat_skew_kurtosis", q_feat_skew_kurtosis, SQL_SKEW_KURTOSIS),
+    ("feat_linear_trend", q_feat_linear_trend, SQL_LINEAR_TREND),
+    ("binned_features", q_binned_features, SQL_BINNED_FEATURES),
+    ("seq_reduce_middle", q_seq_reduce_middle, SQL_SEQ_REDUCE_MIDDLE),
+    ("periodogram_folded", q_periodogram_folded, SQL_PERIODOGRAM_FOLDED),
+    ("dmdt_gausses", q_dmdt_gausses, _sql_dmdt_gausses),
+    ("cosine_dup_pairs", q_cosine_dup_pairs, SQL_COSINE_DUP_PAIRS),
+    ("repetition_signals", q_repetition_signals, SQL_REPETITION),
+    ("dmdt_eroded", q_dmdt_eroded, SQL_DMDT_ERODED),
+    ("temperature_mix", q_temperature_mix, SQL_TEMPERATURE_MIX),
+    ("pack_segments", q_pack_segments, SQL_PACK_SEGMENTS),
+)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDER MATTERS: the driver gates the FIRST 50 entries only
-    # (CORRECTNESS_r03 recorded exactly 50 of the 54 registered, in dict
-    # order).  Entries 1-50 are arranged so every operator family keeps a
-    # driver-gated row; the tail past 50 holds second/third rows of
-    # families already covered, each of which has green driver evidence
-    # in CORRECTNESS_r03 and stays gated by the local mirror
-    # (tests/test_entry_oracle.py, which runs ALL entries).
-    q = {
-        "tpch_q1": q_tpch_q1,
-        "feat_simple_stats": q_feat_simple_stats,
-        "feat_quantiles_hazen": q_feat_quantiles,
-        "feat_dispersion": q_feat_dispersion,
-        "feat_weighted": q_feat_weighted,
-        "feat_linear_fit": q_feat_linear_fit,
-        "feat_otsu_split": q_feat_otsu,
-        "feat_detection_counts": q_feat_detection_counts,
-        "pit_features_kernel": q_pit_features_kernel,
-        "pit_features_horizon": q_pit_features_horizon,
-        "feat_nested_input": q_feat_nested,
-        "asof_join": q_asof_join,
-        "lag_lead": q_lag_lead,
-        "backfill_ffill": q_backfill,
-        "rolling_range_1h": q_rolling_1h,
-        "sessionize_30m": q_sessionize,
-        "bins_1day": q_bins_1day,
-        "transformed_features": q_transformed_features,
-        "dedup_exact": q_dedup_exact,
-        "minhash_signatures": q_minhash_signatures,
-        "simhash16": q_simhash16,
-        "nearest_neighbor_jaccard": q_nearest_neighbor_jaccard,
-        "cosine_topk": q_cosine_topk,
-        "lsh_topk": q_lsh_topk,
-        "doc_fingerprint": q_doc_fingerprint,
-        "text_quality": q_text_quality,
-        "feat_colors_multiband": q_feat_colors,
-        "dmdt_map": q_dmdt_map,
-        "anderson_darling": q_anderson_darling,
-        "chi2_pvar": q_chi2_pvar,
-        "seq_reduce_end": q_seq_reduce_end,
-        "seq_windows": q_seq_windows,
-        "lsh_candidates": q_lsh_candidates,
-        "count_dt": q_count_dt,
-        "periodogram_grid": q_periodogram_grid,
-        "periodogram_peaks": q_periodogram_peaks,
-        "multiband_power": q_multiband_power,
-        "rainbow_fit": q_rainbow_fit,
-        "bazin_fit": q_bazin_fit,
-        "token_counts": q_token_counts,
-        "dedup_groups": q_dedup_groups,
-        "stratified_sample": q_stratified_sample,
-        "corpus_filter": q_corpus_filter,
-        "word_bigrams": q_word_bigrams,
-        "pack_spans": q_pack_spans,
-        "contamination": q_contamination,
-        "pii_scrub": q_pii_scrub,
-        "lang_id": q_lang_id,
-        "multimodal_features": q_multimodal_features,
-        "pipeline_e2e": q_pipeline_e2e,
-        # ---- entries past the driver's 50-row gate cap ----
-        "feat_skew_kurtosis": q_feat_skew_kurtosis,
-        "feat_linear_trend": q_feat_linear_trend,
-        "binned_features": q_binned_features,
-        "seq_reduce_middle": q_seq_reduce_middle,
-        "periodogram_folded": q_periodogram_folded,
-        "dmdt_gausses": q_dmdt_gausses,
-        "cosine_dup_pairs": q_cosine_dup_pairs,
-        "repetition_signals": q_repetition_signals,
-        "dmdt_eroded": q_dmdt_eroded,
-        "temperature_mix": q_temperature_mix,
-        "pack_segments": q_pack_segments,
-    }
-    return {name: _shipped(fn) for name, fn in q.items()}
+    return {name: _shipped(fn) for name, fn, _ in _QUERY_TABLE}
 
 
 def oracle_sql() -> dict[str, str]:
-    # same order as queries() — the driver pairs rows positionally up to
-    # its 50-row cap
-    sqls = {
-        "tpch_q1": SQL_TPCH_Q1,
-        "feat_simple_stats": SQL_SIMPLE_STATS,
-        "feat_quantiles_hazen": SQL_QUANTILES,
-        "feat_dispersion": SQL_DISPERSION,
-        "feat_weighted": SQL_WEIGHTED,
-        "feat_linear_fit": SQL_LINEAR_FIT,
-        "feat_otsu_split": SQL_OTSU,
-        "feat_detection_counts": SQL_DETECTION,
-        "pit_features_kernel": SQL_PIT_FEATURES,
-        "pit_features_horizon": SQL_PIT_HORIZON,
-        "feat_nested_input": SQL_FEAT_NESTED,
-        "asof_join": SQL_ASOF,
-        "lag_lead": SQL_LAG_LEAD,
-        "backfill_ffill": SQL_BACKFILL,
-        "rolling_range_1h": SQL_ROLLING_1H,
-        "sessionize_30m": SQL_SESSIONIZE,
-        "bins_1day": SQL_BINS,
-        "transformed_features": SQL_TRANSFORMED,
-        "dedup_exact": SQL_DEDUP_EXACT,
-        "minhash_signatures": SQL_MINHASH,
-        "simhash16": SQL_SIMHASH,
-        "nearest_neighbor_jaccard": SQL_NN_JACCARD,
-        "cosine_topk": SQL_COSINE_TOPK,
-        "lsh_topk": _sql_lsh_topk(),
-        "doc_fingerprint": SQL_FINGERPRINT,
-        "text_quality": SQL_TEXT_QUALITY,
-        "feat_colors_multiband": SQL_COLORS,
-        "dmdt_map": SQL_DMDT,
-        "anderson_darling": _sql_anderson_darling(),
-        "chi2_pvar": _sql_chi2_pvar(),
-        "seq_reduce_end": SQL_SEQ_REDUCE_END,
-        "seq_windows": SQL_SEQ_WINDOWS,
-        "lsh_candidates": SQL_LSH_CANDIDATES,
-        "count_dt": SQL_COUNT_DT,
-        "periodogram_grid": SQL_PERIODOGRAM_GRID,
-        "periodogram_peaks": SQL_PERIODOGRAM_PEAKS,
-        "multiband_power": SQL_MULTIBAND_POWER,
-        "rainbow_fit": SQL_RAINBOW_FIT,
-        "bazin_fit": SQL_BAZIN_FIT,
-        "token_counts": SQL_TOKEN_COUNTS,
-        "dedup_groups": SQL_DEDUP_GROUPS,
-        "stratified_sample": SQL_STRATIFIED_SAMPLE,
-        "corpus_filter": SQL_CORPUS_FILTER,
-        "word_bigrams": SQL_WORD_BIGRAMS,
-        "pack_spans": SQL_PACK_SPANS,
-        "contamination": SQL_CONTAMINATION,
-        "pii_scrub": SQL_PII_SCRUB,
-        "lang_id": _langid_sql(),
-        "multimodal_features": _sql_multimodal(),
-        "pipeline_e2e": SQL_PIPELINE_E2E,
-        # ---- entries past the driver's 50-row gate cap ----
-        "feat_skew_kurtosis": SQL_SKEW_KURTOSIS,
-        "feat_linear_trend": SQL_LINEAR_TREND,
-        "binned_features": SQL_BINNED_FEATURES,
-        "seq_reduce_middle": SQL_SEQ_REDUCE_MIDDLE,
-        "periodogram_folded": SQL_PERIODOGRAM_FOLDED,
-        "dmdt_gausses": _sql_dmdt_gausses(),
-        "cosine_dup_pairs": SQL_COSINE_DUP_PAIRS,
-        "repetition_signals": SQL_REPETITION,
-        "dmdt_eroded": SQL_DMDT_ERODED,
-        "temperature_mix": SQL_TEMPERATURE_MIX,
-        "pack_segments": SQL_PACK_SEGMENTS,
-    }
     # identical epsilon nudge as the Spark-side _r() helper (see EPS_ROUND)
-    return {k: v.replace("ROUND(", f"ROUND({EPS_ROUND} + ")
-            for k, v in sqls.items()}
+    return {name: (sql() if callable(sql) else sql)
+            .replace("ROUND(", f"ROUND({EPS_ROUND} + ")
+            for name, _, sql in _QUERY_TABLE}

@@ -18,10 +18,11 @@ one pass:
   (StetsonK / Roms absolute deviations around window-dependent centers,
   Cusum ptp).
 
-Numerically: cumulative-sum forms differ from the two-pass kernel forms by
-O(1e-12) relative — asserted against ``evaluate_many`` at rtol 1e-9 in
-tests/test_battery.py.  fill_value/min_obs semantics identical to
-``evaluate_kernel``.
+Numerically: cumulative-sum forms differ from the kernels' two-pass
+``WindowContext`` forms by O(1e-12) relative — asserted against
+``evaluate_many`` at rtol 1e-9 in tests/test_battery.py.  fill_value/min_obs
+semantics are those of ``evaluate_kernel``, which also evaluates every
+kernel outside ``SUPPORTED`` on each probe's sliced window.
 """
 
 from __future__ import annotations

@@ -28,7 +28,7 @@ from typing import Callable, Optional, Sequence, Tuple
 
 import numpy as np
 
-from .kernels import Kernel, _register
+from .kernels import Kernel, _register, on_arrays
 
 __all__ = ["levenberg_marquardt", "lm_errors", "norm_logcdf",
            "bazin_model", "villar_model", "linexp_model", "LnPrior",
@@ -510,8 +510,8 @@ def _fit_kernel(key: str, model: Callable, param_names: Sequence[str],
             prior_param = [pr.spec for pr in priors]
         else:
             prior_param = None
-        return Kernel(key=key, names=names, func=fn, min_obs=n_par + 2,
-                      needs_sigma=True,
+        return Kernel(key=key, names=names, func=on_arrays(fn),
+                      min_obs=n_par + 2, needs_sigma=True,
                       params={"init": init, "bounds": bounds,
                               "max_iter": max_iter,
                               "ln_prior": prior_param})

@@ -1,12 +1,18 @@
 """Vectorized numpy feature kernels — the executable spec of every reference
 feature, re-implemented from the published formulas.
 
-Each kernel is a pure function ``(t, m, sigma) -> np.ndarray[size]`` over ONE
-entity's time-sorted observation window.  These run executor-side inside
-Arrow-batched grouped pandas UDFs (see ``operators/extract.py``); they are the
-Spark analogue of the reference's per-curve evaluators.
+Each kernel is ONE pure function ``WindowContext -> np.ndarray[size]`` over
+one entity's time-sorted observation window.  The context computes the
+shared intermediates (sort, diffs, moments, weights) lazily and once, so a
+battery evaluated by ``evaluate_many`` pays for each of them once — the
+reference's Extractor fusion (features/extractor.py:36-41).  Kernels with no
+shared intermediates (periodogram, detection counters, model fits) wrap a
+``(t, m, sigma)`` function with ``on_arrays``.  Executor-side the kernels run
+inside the ``mapInArrow`` / ``applyInArrow`` callbacks of
+``operators/grouped.py`` and ``operators/extract.py``; they are the Spark
+analogue of the reference's per-curve evaluators.
 
-Formula citations (reference = /root/reference/light-curve/):
+Formula citations (reference = the light-curve repository):
  - pure-Python formulas under ``light_curve/light_curve_py/features/`` are the
    semantic ground truth (the reference itself asserts Rust ≈ pure-Python in
    ``tests/test_w_bench.py:179-184``);
@@ -32,7 +38,9 @@ from .special import chi2_sf, hazen_quantile, ndtr
 __all__ = [
     "Kernel",
     "KERNEL_FACTORIES",
+    "WindowContext",
     "make_kernel",
+    "on_arrays",
     "default_kernels",
     "evaluate_kernel",
     "evaluate_many",
@@ -40,11 +48,12 @@ __all__ = [
 
 
 class WindowContext:
-    """Shared per-window intermediates, computed lazily ONCE and reused by
-    every kernel in a battery — the engine's analogue of the reference's
-    Extractor single-pass fusion (features/extractor.py:36-41).  Kernels may
-    provide a ``ctx_func`` consuming this; results are identical to their
-    standalone ``func`` (asserted in tests)."""
+    """One window's arrays plus its shared intermediates, each computed
+    lazily ONCE and reused by every kernel of a battery — the engine's
+    analogue of the reference's Extractor single-pass fusion
+    (features/extractor.py:36-41).  Every ``Kernel.func`` takes one;
+    ``evaluate_many`` shares one across its kernels and ``evaluate_kernel``
+    builds one when the caller passes none."""
 
     __slots__ = ("t", "m", "sigma", "_cache")
 
@@ -141,20 +150,26 @@ def _hazen_sorted(sm: np.ndarray, qs) -> np.ndarray:
 
 @dataclass(frozen=True)
 class Kernel:
-    """One feature extractor: a pure function over a sorted window."""
+    """One feature extractor: a pure function of a sorted window's
+    ``WindowContext``."""
 
     key: str                      # canonical registry key, e.g. "beyond_n_std"
     names: Tuple[str, ...]        # output column names (len == size)
-    func: Callable[[np.ndarray, np.ndarray, Optional[np.ndarray]], np.ndarray]
+    func: Callable[[WindowContext], np.ndarray]
     min_obs: int = 1
     needs_sigma: bool = False
     needs_t: bool = True          # False => column pruning may drop t
     params: dict = field(default_factory=dict)
-    ctx_func: Optional[Callable[["WindowContext"], np.ndarray]] = None
 
     @property
     def size(self) -> int:
         return len(self.names)
+
+
+def on_arrays(fn) -> Callable[[WindowContext], np.ndarray]:
+    """``Kernel.func`` for a ``(t, m, sigma)`` function that uses none of
+    the context's shared intermediates."""
+    return lambda c: fn(c.t, c.m, c.sigma)
 
 
 # registry of factories: key -> callable(**params) -> Kernel
@@ -178,15 +193,10 @@ def ensure_lazy_factories(key: str) -> None:
 
 
 def make_kernel(key: str, **params) -> Kernel:
-    import dataclasses
     ensure_lazy_factories(key)
     if key not in KERNEL_FACTORIES:
         raise ValueError(f"unknown feature: {key}")
-    k = KERNEL_FACTORIES[key](**params)
-    ctx_fac = _CTX_IMPLS.get(key)
-    if ctx_fac is not None and k.ctx_func is None:
-        k = dataclasses.replace(k, ctx_func=ctx_fac(**params))
-    return k
+    return KERNEL_FACTORIES[key](**params)
 
 
 # --------------------------------------------------------------------------
@@ -203,55 +213,50 @@ def _simple(key, name, fn, *, min_obs=1, needs_sigma=False, needs_t=True):
 
 # features/amplitude.py:7-9
 _simple("amplitude", "amplitude",
-        lambda t, m, s: np.array([0.5 * (np.max(m) - np.min(m))]), needs_t=False)
+        lambda c: np.array([0.5 * (c.sorted_m[-1] - c.sorted_m[0])]),
+        needs_t=False)
 # features/mean.py:7-9
-_simple("mean", "mean", lambda t, m, s: np.array([np.mean(m)]), needs_t=False)
+_simple("mean", "mean", lambda c: np.array([c.mean]), needs_t=False)
 # features/median.py:7-9
-_simple("median", "median", lambda t, m, s: np.array([np.median(m)]), needs_t=False)
+_simple("median", "median", lambda c: np.array([c.median]), needs_t=False)
 # features/stdev.py:7-9 (ddof=1)
 _simple("standard_deviation", "standard_deviation",
-        lambda t, m, s: np.array([np.std(m, ddof=1)]), min_obs=2, needs_t=False)
+        lambda c: np.array([c.std1]), min_obs=2, needs_t=False)
 # features/meanvar.py:7-9
 _simple("mean_variance", "mean_variance",
-        lambda t, m, s: np.array([np.std(m, ddof=1) / np.mean(m)]), min_obs=2,
-        needs_t=False)
+        lambda c: np.array([c.std1 / c.mean]), min_obs=2, needs_t=False)
 # features/medabsdev.py:7-9
 _simple("median_absolute_deviation", "median_absolute_deviation",
-        lambda t, m, s: np.array([np.median(np.abs(m - np.median(m)))]),
+        lambda c: np.array([np.median(np.abs(c.m - c.median))]),
         needs_t=False)
 # features/weightmean.py:7-9
-_simple("weighted_mean", "weighted_mean",
-        lambda t, m, s: np.array([np.average(m, weights=s ** -2)]),
+_simple("weighted_mean", "weighted_mean", lambda c: np.array([c.wmean]),
         needs_sigma=True, needs_t=False)
 # features/percampl.py:7-10
 _simple("percent_amplitude", "percent_amplitude",
-        lambda t, m, s: np.array(
-            [max(np.max(m) - np.median(m), np.median(m) - np.min(m))]),
+        lambda c: np.array(
+            [max(c.sorted_m[-1] - c.median, c.median - c.sorted_m[0])]),
         needs_t=False)
 # reference Rust-only: observation count / duration / time stats
 # (src/features.rs:4919-4923, :4905, :4998-5004)
 _simple("observation_count", "observation_count",
-        lambda t, m, s: np.array([float(len(m))]), needs_t=False)
-_simple("duration", "duration",
-        lambda t, m, s: np.array([t[-1] - t[0]]))
-_simple("time_mean", "time_mean", lambda t, m, s: np.array([np.mean(t)]))
+        lambda c: np.array([float(c.n)]), needs_t=False)
+_simple("duration", "duration", lambda c: np.array([c.t[-1] - c.t[0]]))
+_simple("time_mean", "time_mean", lambda c: np.array([np.mean(c.t)]))
 _simple("time_standard_deviation", "time_standard_deviation",
-        lambda t, m, s: np.array([np.std(t, ddof=1)]), min_obs=2)
+        lambda c: np.array([np.std(c.t, ddof=1)]), min_obs=2)
 _simple("maximum_time_interval", "maximum_time_interval",
-        lambda t, m, s: np.array([np.max(np.diff(t))]), min_obs=2)
+        lambda c: np.array([c.diff_t.max()]), min_obs=2)
 _simple("minimum_time_interval", "minimum_time_interval",
-        lambda t, m, s: np.array([np.min(np.diff(t))]), min_obs=2)
+        lambda c: np.array([c.diff_t.min()]), min_obs=2)
 
 
 # features/kurtosis.py:7-15 — unbiased G2 with the -3 offset
-def _kurtosis(t, m, s):
-    n = len(m)
-    mean = np.mean(m)
-    st4 = np.std(m, ddof=1) ** 4
-    s4 = np.sum((m - mean) ** 4)
-    val = (n * (n + 1) * s4) / ((n - 1) * (n - 2) * (n - 3) * st4) \
-        - 3 * (n - 1) ** 2 / ((n - 2) * (n - 3))
-    return np.array([val])
+def _kurtosis(c):
+    n = c.n
+    return np.array([(n * (n + 1) * float(np.sum(c.centered ** 4)))
+                     / ((n - 1) * (n - 2) * (n - 3) * c.var1 ** 2)
+                     - 3 * (n - 1) ** 2 / ((n - 2) * (n - 3))])
 
 
 _simple("kurtosis", "kurtosis", _kurtosis, min_obs=4, needs_t=False)
@@ -259,14 +264,11 @@ _simple("kurtosis", "kurtosis", _kurtosis, min_obs=4, needs_t=False)
 
 # features/skew.py:5-11 — scipy.stats.skew(m, bias=False):
 # G1 = g1 * sqrt(n(n-1)) / (n-2), g1 = m3 / m2^1.5 (population moments)
-def _skew(t, m, s):
-    n = len(m)
-    mean = np.mean(m)
-    d = m - mean
-    m2 = np.mean(d ** 2)
-    m3 = np.mean(d ** 3)
-    g1 = m3 / m2 ** 1.5
-    return np.array([g1 * math.sqrt(n * (n - 1)) / (n - 2)])
+def _skew(c):
+    n = c.n
+    return np.array([(float(np.sum(c.centered ** 3)) / n)
+                     / (float(np.dot(c.centered, c.centered)) / n) ** 1.5
+                     * math.sqrt(n * (n - 1)) / (n - 2)])
 
 
 _simple("skew", "skew", _skew, min_obs=3, needs_t=False)
@@ -279,24 +281,20 @@ _simple("skew", "skew", _skew, min_obs=3, needs_t=False)
 @_register("inter_percentile_range")
 def _ipr(quantile: float = 0.25) -> Kernel:
     # features/intpercrange.py:11-20
-    def fn(t, m, s):
-        q1, q2 = hazen_quantile(m, [quantile, 1 - quantile])
-        return np.array([q2 - q1])
     return Kernel(key="inter_percentile_range",
                   names=(f"inter_percentile_range_{quantile:g}",),
-                  func=fn, params={"quantile": quantile}, needs_t=False)
+                  func=lambda c: np.diff(c.hazen([quantile, 1 - quantile])),
+                  params={"quantile": quantile}, needs_t=False)
 
 
 @_register("percent_difference_magnitude_percentile")
 def _pdmp(quantile: float = 0.25) -> Kernel:
     # features/pdiffmperc.py:13-24
-    def fn(t, m, s):
-        med = np.median(m)
-        q1, q2 = hazen_quantile(m, [quantile, 1 - quantile])
-        return np.array([(q2 - q1) / med])
     return Kernel(key="percent_difference_magnitude_percentile",
                   names=(f"percent_difference_magnitude_percentile_{quantile:g}",),
-                  func=fn, params={"quantile": quantile}, needs_t=False)
+                  func=lambda c: np.diff(
+                      c.hazen([quantile, 1 - quantile])) / c.median,
+                  params={"quantile": quantile}, needs_t=False)
 
 
 @_register("magnitude_percentage_ratio")
@@ -304,10 +302,9 @@ def _mpr(quantile_numerator: float = 0.4,
          quantile_denominator: float = 0.05) -> Kernel:
     # features/magnpratio.py:12-24
     qn, qd = quantile_numerator, quantile_denominator
-    def fn(t, m, s):
-        n1, n2 = hazen_quantile(m, [qn, 1 - qn])
-        d1, d2 = hazen_quantile(m, [qd, 1 - qd])
-        return np.array([(n2 - n1) / (d2 - d1)])
+    def fn(c):
+        return np.array([float(np.diff(c.hazen([qn, 1 - qn]))[0])
+                         / float(np.diff(c.hazen([qd, 1 - qd]))[0])])
     return Kernel(key="magnitude_percentage_ratio",
                   names=(f"magnitude_percentage_ratio_{qn:g}_{qd:g}",),
                   func=fn, params={"quantile_numerator": qn,
@@ -317,10 +314,10 @@ def _mpr(quantile_numerator: float = 0.4,
 @_register("median_buffer_range_percentage")
 def _mbrp(quantile: float = 0.1) -> Kernel:
     # features/medbufrperc.py:13-18
-    def fn(t, m, s):
-        med = np.median(m)
-        width = quantile * (np.max(m) - np.min(m)) / 2
-        return np.array([np.count_nonzero(np.abs(med - m) < width) / len(m)])
+    def fn(c):
+        width = quantile * (c.sorted_m[-1] - c.sorted_m[0]) / 2
+        return np.array([np.count_nonzero(np.abs(c.median - c.m) < width)
+                         / c.n])
     return Kernel(key="median_buffer_range_percentage",
                   names=(f"median_buffer_range_percentage_{quantile:g}",),
                   func=fn, params={"quantile": quantile}, needs_t=False)
@@ -333,111 +330,61 @@ def _mbrp(quantile: float = 0.1) -> Kernel:
 @_register("beyond_n_std")
 def _beyond(nstd: float = 1.0) -> Kernel:
     # features/beyondnstd.py:12-16
-    def fn(t, m, s):
-        mean = np.mean(m)
-        std = np.std(m, ddof=1)
-        return np.array(
-            [np.count_nonzero(np.abs(m - mean) > nstd * std) / len(m)])
     return Kernel(key="beyond_n_std", names=(f"beyond_{nstd:g}_std",),
-                  func=fn, min_obs=2, params={"nstd": nstd}, needs_t=False)
+                  func=lambda c: np.array(
+                      [np.count_nonzero(np.abs(c.centered) > nstd * c.std1)
+                       / c.n]),
+                  min_obs=2, params={"nstd": nstd}, needs_t=False)
 
 
-def _stetson_k(t, m, s):
-    # features/stetsonk.py:7-12
-    wmean = np.average(m, weights=s ** -2)
-    resid = (m - wmean) / s
-    return np.array([np.sum(np.abs(resid)) / np.sqrt(len(m) * np.sum(resid ** 2))])
-
-
-_simple("stetson_k", "stetson_k", _stetson_k, min_obs=2, needs_sigma=True,
-        needs_t=False)
-
-
-def _excess_variance(t, m, s):
-    # features/excvar.py:7-12
-    mean = np.mean(m)
-    return np.array([(np.std(m, ddof=1) ** 2 - np.mean(s ** 2)) / mean ** 2])
-
-
-_simple("excess_variance", "excess_variance", _excess_variance, min_obs=2,
-        needs_sigma=True, needs_t=False)
-
-
-def _reduced_chi2(t, m, s):
-    # features/redchi2.py:7-13
-    w = s ** -2
-    wmean = np.average(m, weights=w)
-    return np.array([np.sum((m - wmean) ** 2 * w) / (len(m) - 1)])
-
-
-_simple("reduced_chi2", "reduced_chi2", _reduced_chi2, min_obs=2,
-        needs_sigma=True, needs_t=False)
-
-
-def _chi2_pvar(t, m, s):
-    """p-value of the chi2 variability test: sf(sum(((m-wmean)/sigma)^2), n-1).
-
-    Rust-only feature (src/features.rs:3663); formula per the chi-squared
-    variability test the reference documents for it.
-    """
-    w = s ** -2
-    wmean = np.average(m, weights=w)
-    chi2 = np.sum((m - wmean) ** 2 * w)
-    return np.array([float(chi2_sf(chi2, len(m) - 1))])
-
-
-_simple("chi2_pvar", "chi2_pvar", _chi2_pvar, min_obs=2, needs_sigma=True,
-        needs_t=False)
-
-
-def _roms(t, m, s):
-    # features/roms.py:21-25
-    med = np.median(m)
-    return np.array([np.sum(np.abs(m - med) / s) / (len(m) - 1)])
-
-
-_simple("roms", "roms", _roms, min_obs=2, needs_sigma=True, needs_t=False)
-
-
-def _cusum(t, m, s):
-    # features/cusum.py:7-12
-    mean = np.mean(m)
-    std = np.std(m, ddof=1)
-    c = np.cumsum(m - mean) / (len(m) * std)
-    return np.array([np.ptp(c)])
-
-
-_simple("cusum", "cusum", _cusum, min_obs=2, needs_t=False)
-
-
-def _eta(t, m, s):
-    # features/eta.py:7-11 (py declares size 2 by a bug; value is scalar, Rust
-    # size is 1 — we follow Rust)
-    n = len(m)
-    var = np.var(m, ddof=1)
-    return np.array([np.sum(np.diff(m) ** 2) / ((n - 1) * var)])
-
-
-_simple("eta", "eta", _eta, min_obs=2, needs_t=False)
-
-
-def _eta_e(t, m, s):
-    # features/etae.py:7-12
-    n = len(m)
-    var = np.var(m, ddof=1)
-    ssum = np.sum((np.diff(m) / np.diff(t)) ** 2)
-    return np.array([ssum * (t[n - 1] - t[0]) ** 2 / ((n - 1) ** 3 * var)])
-
-
-_simple("eta_e", "eta_e", _eta_e, min_obs=2)
-
-
-def _maximum_slope(t, m, s):
-    # features/maxslope.py:7-11
-    return np.array([np.max(np.abs(np.diff(m) / np.diff(t)))])
-
-
-_simple("maximum_slope", "maximum_slope", _maximum_slope, min_obs=2)
+# features/stetsonk.py:7-12
+_simple("stetson_k", "stetson_k",
+        lambda c: np.array([float(np.sum(np.abs(c.resid)))
+                            / math.sqrt(c.n * float(np.dot(c.resid,
+                                                           c.resid)))]),
+        min_obs=2, needs_sigma=True, needs_t=False)
+# features/excvar.py:7-12
+_simple("excess_variance", "excess_variance",
+        lambda c: np.array(
+            [(c.var1 - float(np.mean(c.sigma ** 2))) / c.mean ** 2]),
+        min_obs=2, needs_sigma=True, needs_t=False)
+# features/redchi2.py:7-13
+_simple("reduced_chi2", "reduced_chi2",
+        lambda c: np.array([float(np.dot(c.resid, c.resid)) / (c.n - 1)]),
+        min_obs=2, needs_sigma=True, needs_t=False)
+# p-value of the chi2 variability test: sf(sum(((m-wmean)/sigma)^2), n-1).
+# Rust-only feature (src/features.rs:3663); formula per the chi-squared
+# variability test the reference documents for it.
+_simple("chi2_pvar", "chi2_pvar",
+        lambda c: np.array(
+            [float(chi2_sf(float(np.dot(c.resid, c.resid)), c.n - 1))]),
+        min_obs=2, needs_sigma=True, needs_t=False)
+# features/roms.py:21-25
+_simple("roms", "roms",
+        lambda c: np.array(
+            [float(np.sum(np.abs(c.m - c.median) / c.sigma)) / (c.n - 1)]),
+        min_obs=2, needs_sigma=True, needs_t=False)
+# features/cusum.py:7-12
+_simple("cusum", "cusum",
+        lambda c: np.array(
+            [float(np.ptp(np.cumsum(c.centered))) / (c.n * c.std1)]),
+        min_obs=2, needs_t=False)
+# features/eta.py:7-11 (py declares size 2 by a bug; value is scalar, Rust
+# size is 1 — we follow Rust)
+_simple("eta", "eta",
+        lambda c: np.array(
+            [float(np.dot(c.diff_m, c.diff_m)) / ((c.n - 1) * c.var1)]),
+        min_obs=2, needs_t=False)
+# features/etae.py:7-12
+_simple("eta_e", "eta_e",
+        lambda c: np.array([float(np.sum((c.diff_m / c.diff_t) ** 2))
+                            * (c.t[-1] - c.t[0]) ** 2
+                            / ((c.n - 1) ** 3 * c.var1)]),
+        min_obs=2)
+# features/maxslope.py:7-11
+_simple("maximum_slope", "maximum_slope",
+        lambda c: np.array([float(np.max(np.abs(c.diff_m / c.diff_t)))]),
+        min_obs=2)
 
 
 @_register("peak_to_peak_var")
@@ -450,65 +397,67 @@ def _ptp_var(nstd: float = 1.0) -> Kernel:
         b = np.min(m + nstd * s)
         return np.array([(a - b) / (a + b)])
     return Kernel(key="peak_to_peak_var", names=("peak_to_peak_var",),
-                  func=fn, min_obs=2, needs_sigma=True, needs_t=False,
-                  params={"nstd": nstd})
+                  func=on_arrays(fn), min_obs=2, needs_sigma=True,
+                  needs_t=False, params={"nstd": nstd})
 
 
-def _anderson_darling_normal(t, m, s):
+def _anderson_darling_normal(c):
     """features/adnormal.py:5-13 — scipy.stats.anderson(m).statistic with the
     (1 + 4/n - 25/n^2) finite-sample factor.  scipy standardizes with
     mean / std(ddof=1) and uses A2 = -n - mean((2i-1) * (logΦ(y_i) +
     log(1-Φ(y_{n+1-i}))))."""
-    n = len(m)
-    y = np.sort(m)
-    return _ad_from_sorted(y, np.mean(y), np.std(y, ddof=1), n)
+    n = c.n
+    if c.std1 == 0:
+        raise ValueError("zero variance")
+    z = (c.sorted_m - c.mean) / c.std1
+    cdf = ndtr(z)
+    # clip to avoid log(0) for extreme tails (scipy relies on log cdf accuracy)
+    eps = np.finfo(np.float64).tiny
+    logcdf = np.log(np.clip(cdf, eps, None))
+    logsf = np.log(np.clip(1.0 - cdf, eps, None))
+    i = np.arange(1, n + 1)
+    a2 = -n - np.sum((2 * i - 1.0) / n * (logcdf + logsf[::-1]))
+    return np.array([a2 * (1 + 4.0 / n - 25.0 / n ** 2)])
 
 
 _simple("anderson_darling_normal", "anderson_darling_normal",
         _anderson_darling_normal, min_obs=4, needs_t=False)
-
-
-def _lafler_kinman(t, m, s):
-    """Lafler–Kinman string length (Rust-only, src/features.rs:3902-3906):
-    sum(diff(m)^2) / sum((m - mean)^2) over the time-sorted series."""
-    mean = np.mean(m)
-    denom = np.sum((m - mean) ** 2)
-    return np.array([np.sum(np.diff(m) ** 2) / denom])
-
-
+# Lafler–Kinman string length (Rust-only, src/features.rs:3902-3906):
+# sum(diff(m)^2) / sum((m - mean)^2) over the time-sorted series
 _simple("lafler_kinman_string_length", "lafler_kinman_string_length",
-        _lafler_kinman, min_obs=2, needs_t=False)
+        lambda c: np.array([float(np.dot(c.diff_m, c.diff_m))
+                            / float(np.dot(c.centered, c.centered))]),
+        min_obs=2, needs_t=False)
 
 
 # --------------------------------------------------------------------------
 # ordinary least squares (north-rule targets)
 # --------------------------------------------------------------------------
 
-def _linear_fit(t, m, s):
+def _linear_fit(c):
     """features/linfit.py:8-21 — weighted OLS of m on [t, 1], weights 1/sigma.
 
     Closed form matching np.linalg.lstsq on the sigma-scaled design
     (features/_lstsq.py:4-16): rows of A=[t,1] and m are divided by sigma.
     """
-    n = len(t)
+    n = c.n
     if n < 3:
         raise ValueError("need >= 3 points")
-    w = s ** -2.0
-    S = np.sum(w)
-    St = np.sum(w * t)
-    Sm = np.sum(w * m)
-    Stt = np.sum(w * t * t)
-    Stm = np.sum(w * t * m)
-    Smm = np.sum(w * m * m)
+    w, t, m = c.w, c.t, c.m
+    S = c.wsum
+    wt = w * t
+    St = float(np.sum(wt))
+    Sm = float(np.dot(w, m))
+    Stt = float(np.dot(wt, t))
+    Stm = float(np.dot(wt, m))
+    Smm = float(np.dot(w * m, m))
     denom = S * Stt - St * St
     slope = (S * Stm - St * Sm) / denom
     intercept = (Sm - slope * St) / S
     chi2 = Smm - intercept * Sm - slope * Stm  # residual identity for OLS
-    red_chi2 = chi2 / (n - 2)
-    weighted_t2 = Stt / S
-    weighted_t = (St / S) ** 2
-    slope_sigma = math.sqrt(1.0 / ((weighted_t2 - weighted_t) * S))
-    return np.array([slope, slope_sigma, red_chi2])
+    return np.array([slope,
+                     math.sqrt(1.0 / ((Stt / S - (St / S) ** 2) * S)),
+                     chi2 / (n - 2)])
 
 
 @_register("linear_fit")
@@ -519,23 +468,20 @@ def _linear_fit_factory() -> Kernel:
                   func=_linear_fit, min_obs=3, needs_sigma=True)
 
 
-def _linear_trend(t, m, s):
+def _linear_trend(c):
     """features/lintrend.py:8-17 — unweighted OLS; sxx = sum((t-mean)^2)
     (np.var(t, ddof=n-1))."""
-    n = len(t)
+    n = c.n
     if n < 3:
         raise ValueError("need >= 3 points")
-    tbar = np.mean(t)
-    mbar = np.mean(m)
-    dt = t - tbar
-    dm = m - mbar
-    sxx = np.sum(dt * dt)
-    sxy = np.sum(dt * dm)
-    syy = np.sum(dm * dm)
+    dt = c.t - np.mean(c.t)
+    dm = c.centered
+    sxx = float(np.dot(dt, dt))
+    sxy = float(np.dot(dt, dm))
+    syy = float(np.dot(dm, dm))
     slope = sxy / sxx
-    chi2 = syy - slope * sxy
-    red_chi2 = chi2 / (n - 2)
-    return np.array([slope, math.sqrt(red_chi2 / sxx), math.sqrt(red_chi2)])
+    red = (syy - slope * sxy) / (n - 2)
+    return np.array([slope, math.sqrt(red / sxx), math.sqrt(red)])
 
 
 @_register("linear_trend")
@@ -565,42 +511,18 @@ def _otsu_threshold_arg(sorted_m: np.ndarray):
     return arg, mean0, mean1
 
 
-def _otsu_from_sorted(ms: np.ndarray, n: int) -> np.ndarray:
-    """Shared Otsu-split body over a pre-sorted window — the func and ctx
-    forms must stay numerically identical, so there is exactly one."""
+def _otsu_split(c):
+    # features/otsusplit.py:25-40
+    if c.n < 2:
+        raise ValueError("need >= 2 points")
+    ms = c.sorted_m
     arg, mean0, mean1 = _otsu_threshold_arg(ms)
     lower = ms[: arg + 1]
     upper = ms[arg + 1:]
     std_lower = 0.0 if len(lower) == 1 else np.std(lower, ddof=1)
     std_upper = 0.0 if len(upper) == 1 else np.std(upper, ddof=1)
     return np.array([mean1[arg] - mean0[arg], std_lower, std_upper,
-                     (arg + 1) / n])
-
-
-def _ad_from_sorted(y: np.ndarray, mean: float, std: float,
-                    n: int) -> np.ndarray:
-    """Shared AndersonDarlingNormal body over a pre-sorted window (the
-    mean/std come from the caller — two-pass in the func form, prefix-sum
-    in the ctx form, equal to ulps)."""
-    if std == 0:
-        raise ValueError("zero variance")
-    z = (y - mean) / std
-    cdf = ndtr(z)
-    # clip to avoid log(0) for extreme tails (scipy relies on log cdf accuracy)
-    eps = np.finfo(np.float64).tiny
-    logcdf = np.log(np.clip(cdf, eps, None))
-    logsf = np.log(np.clip(1.0 - cdf, eps, None))
-    i = np.arange(1, n + 1)
-    a2 = -n - np.sum((2 * i - 1.0) / n * (logcdf + logsf[::-1]))
-    return np.array([a2 * (1 + 4.0 / n - 25.0 / n ** 2)])
-
-
-def _otsu_split(t, m, s):
-    # features/otsusplit.py:25-40
-    n = len(m)
-    if n < 2:
-        raise ValueError("need >= 2 points")
-    return _otsu_from_sorted(np.sort(m), n)
+                     (arg + 1) / c.n])
 
 
 def otsu_threshold(m: np.ndarray) -> float:
@@ -639,7 +561,7 @@ def _flux_nndbfd(signal_to_noise: float = 5.0,
         return np.array([float(first)])
     return Kernel(key="flux_n_not_det_before_fd",
                   names=("flux_n_non_detections_before_fd",),
-                  func=fn, min_obs=2, needs_sigma=True,
+                  func=on_arrays(fn), min_obs=2, needs_sigma=True,
                   params={"signal_to_noise": signal_to_noise,
                           "strictly_fainter": strictly_fainter})
 
@@ -661,7 +583,7 @@ def _magn_nndbfd(sigma_non_detection: float = np.inf,
         return np.array([float(first)])
     return Kernel(key="magnitude_n_not_det_before_fd",
                   names=("magn_n_non_detections_before_fd",),
-                  func=fn, min_obs=2, needs_sigma=True,
+                  func=on_arrays(fn), min_obs=2, needs_sigma=True,
                   params={"sigma_non_detection": sigma_non_detection,
                           "strictly_fainter": strictly_fainter})
 
@@ -919,8 +841,8 @@ def _periodogram_factory(peaks: int = 1, resolution: float = 10.0,
                 None if s is None else s[ordr], fill_value=np.nan))
         return np.concatenate(parts)
 
-    return Kernel(key="periodogram", names=names, func=fn, min_obs=3,
-                  needs_sigma=any(k.needs_sigma for k in fold_kernels),
+    return Kernel(key="periodogram", names=names, func=on_arrays(fn),
+                  min_obs=3, needs_sigma=any(k.needs_sigma for k in fold_kernels),
                   params={"peaks": peaks, "resolution": resolution,
                           "max_freq_factor": max_freq_factor,
                           "nyquist": nyquist, "normalization": normalization,
@@ -928,132 +850,6 @@ def _periodogram_factory(peaks: int = 1, resolution: float = 10.0,
                           "freqs": None if freqs is None else tuple(freqs),
                           "features": tuple(features),
                           "phase_features": tuple(phase_features)})
-
-
-# --------------------------------------------------------------------------
-# fused (shared-context) implementations — numerically identical to the
-# standalone funcs above, asserted in tests/test_kernels.py
-# --------------------------------------------------------------------------
-
-def _ctx_linear_fit(ctx: WindowContext) -> np.ndarray:
-    n = ctx.n
-    if n < 3:
-        raise ValueError("need >= 3 points")
-    w, t, m = ctx.w, ctx.t, ctx.m
-    S = ctx.wsum
-    wt = w * t
-    St = float(np.sum(wt))
-    Sm = float(np.dot(w, m))
-    Stt = float(np.dot(wt, t))
-    Stm = float(np.dot(wt, m))
-    Smm = float(np.dot(w * m, m))
-    denom = S * Stt - St * St
-    slope = (S * Stm - St * Sm) / denom
-    intercept = (Sm - slope * St) / S
-    chi2 = Smm - intercept * Sm - slope * Stm
-    return np.array([slope,
-                     math.sqrt(1.0 / ((Stt / S - (St / S) ** 2) * S)),
-                     chi2 / (n - 2)])
-
-
-def _ctx_linear_trend(ctx: WindowContext) -> np.ndarray:
-    n = ctx.n
-    if n < 3:
-        raise ValueError("need >= 3 points")
-    dt = ctx.t - np.mean(ctx.t)
-    dm = ctx.centered
-    sxx = float(np.dot(dt, dt))
-    sxy = float(np.dot(dt, dm))
-    syy = float(np.dot(dm, dm))
-    slope = sxy / sxx
-    red = (syy - slope * sxy) / (n - 2)
-    return np.array([slope, math.sqrt(red / sxx), math.sqrt(red)])
-
-
-def _ctx_otsu(ctx: WindowContext) -> np.ndarray:
-    if ctx.n < 2:
-        raise ValueError("need >= 2 points")
-    return _otsu_from_sorted(ctx.sorted_m, ctx.n)
-
-
-def _ctx_anderson(ctx: WindowContext) -> np.ndarray:
-    return _ad_from_sorted(ctx.sorted_m, ctx.mean, ctx.std1, ctx.n)
-
-
-_CTX_IMPLS: Dict[str, Callable[..., Callable]] = {
-    "amplitude": lambda: lambda c: np.array(
-        [0.5 * (c.sorted_m[-1] - c.sorted_m[0])]),
-    "mean": lambda: lambda c: np.array([c.mean]),
-    "median": lambda: lambda c: np.array([c.median]),
-    "standard_deviation": lambda: lambda c: np.array([c.std1]),
-    "mean_variance": lambda: lambda c: np.array([c.std1 / c.mean]),
-    "median_absolute_deviation": lambda: lambda c: np.array(
-        [np.median(np.abs(c.m - c.median))]),
-    "weighted_mean": lambda: lambda c: np.array([c.wmean]),
-    "percent_amplitude": lambda: lambda c: np.array(
-        [max(c.sorted_m[-1] - c.median, c.median - c.sorted_m[0])]),
-    "observation_count": lambda: lambda c: np.array([float(c.n)]),
-    "duration": lambda: lambda c: np.array([c.t[-1] - c.t[0]]),
-    "time_mean": lambda: lambda c: np.array([np.mean(c.t)]),
-    "time_standard_deviation": lambda: lambda c: np.array(
-        [np.std(c.t, ddof=1)]),
-    "maximum_time_interval": lambda: lambda c: np.array([c.diff_t.max()]),
-    "minimum_time_interval": lambda: lambda c: np.array([c.diff_t.min()]),
-    "kurtosis": lambda: lambda c: np.array(
-        [(c.n * (c.n + 1) * float(np.sum(c.centered ** 4)))
-         / ((c.n - 1) * (c.n - 2) * (c.n - 3) * c.var1 ** 2)
-         - 3 * (c.n - 1) ** 2 / ((c.n - 2) * (c.n - 3))]),
-    "skew": lambda: lambda c: np.array(
-        [(float(np.sum(c.centered ** 3)) / c.n)
-         / (float(np.dot(c.centered, c.centered)) / c.n) ** 1.5
-         * math.sqrt(c.n * (c.n - 1)) / (c.n - 2)]),
-    "inter_percentile_range": lambda quantile=0.25: lambda c: np.diff(
-        c.hazen([quantile, 1 - quantile])),
-    "percent_difference_magnitude_percentile":
-        lambda quantile=0.25: lambda c: np.diff(
-            c.hazen([quantile, 1 - quantile])) / c.median,
-    "magnitude_percentage_ratio":
-        lambda quantile_numerator=0.4, quantile_denominator=0.05:
-        lambda c: np.array(
-            [float(np.diff(c.hazen([quantile_numerator,
-                                    1 - quantile_numerator]))[0])
-             / float(np.diff(c.hazen([quantile_denominator,
-                                      1 - quantile_denominator]))[0])]),
-    "median_buffer_range_percentage": lambda quantile=0.1: lambda c: np.array(
-        [np.count_nonzero(
-            np.abs(c.median - c.m)
-            < quantile * (c.sorted_m[-1] - c.sorted_m[0]) / 2) / c.n]),
-    "beyond_n_std": lambda nstd=1.0: lambda c: np.array(
-        [np.count_nonzero(np.abs(c.centered) > nstd * c.std1) / c.n]),
-    "stetson_k": lambda: lambda c: np.array(
-        [float(np.sum(np.abs(c.resid)))
-         / math.sqrt(c.n * float(np.dot(c.resid, c.resid)))]),
-    "excess_variance": lambda: lambda c: np.array(
-        [(c.var1 - float(np.mean(c.sigma ** 2))) / c.mean ** 2]),
-    "reduced_chi2": lambda: lambda c: np.array(
-        [float(np.dot(c.resid, c.resid)) / (c.n - 1)]),
-    "chi2_pvar": lambda: lambda c: np.array(
-        [float(chi2_sf(float(np.dot(c.resid, c.resid)), c.n - 1))]),
-    "roms": lambda: lambda c: np.array(
-        [float(np.sum(np.abs(c.m - c.median) / c.sigma)) / (c.n - 1)]),
-    "cusum": lambda: lambda c: np.array(
-        [float(np.ptp(np.cumsum(c.centered))) / (c.n * c.std1)]),
-    "eta": lambda: lambda c: np.array(
-        [float(np.dot(c.diff_m, c.diff_m)) / ((c.n - 1) * c.var1)]),
-    "eta_e": lambda: lambda c: np.array(
-        [float(np.sum((c.diff_m / c.diff_t) ** 2))
-         * (c.t[-1] - c.t[0]) ** 2 / ((c.n - 1) ** 3 * c.var1)]),
-    "maximum_slope": lambda: lambda c: np.array(
-        [float(np.max(np.abs(c.diff_m / c.diff_t)))]),
-    "lafler_kinman_string_length": lambda: lambda c: np.array(
-        [float(np.dot(c.diff_m, c.diff_m))
-         / float(np.dot(c.centered, c.centered))]),
-    "linear_fit": lambda: _ctx_linear_fit,
-    "linear_trend": lambda: _ctx_linear_trend,
-    "otsu_split": lambda: _ctx_otsu,
-    "anderson_darling_normal": lambda: _ctx_anderson,
-}
-
 
 # --------------------------------------------------------------------------
 # evaluation helpers (fill_value semantics of features/_base.py:28-43)
@@ -1069,20 +865,19 @@ def evaluate_kernel(kernel: Kernel, t, m, sigma=None,
                     fill_value: Optional[float] = np.nan,
                     ctx: Optional[WindowContext] = None) -> np.ndarray:
     """Evaluate with the reference's fill semantics: errors / non-finite
-    output => vector of fill_value (raise when fill_value is None).  When a
-    shared WindowContext is supplied and the kernel has a fused impl, common
-    intermediates are reused across the battery."""
+    output => vector of fill_value (raise when fill_value is None).  A
+    battery passes its shared ``ctx`` over the same window so common
+    intermediates are computed once; without one, a context is built."""
     try:
         if len(m) < kernel.min_obs:
             raise ValueError(
                 f"{kernel.key} requires >= {kernel.min_obs} observations")
         if kernel.needs_sigma and sigma is None:
             raise ValueError(f"{kernel.key} requires sigma")
+        if ctx is None:
+            ctx = WindowContext(t, m, sigma)
         with np.errstate(all="ignore"):
-            if ctx is not None and kernel.ctx_func is not None:
-                out = np.asarray(kernel.ctx_func(ctx), dtype=np.float64)
-            else:
-                out = np.asarray(kernel.func(t, m, sigma), dtype=np.float64)
+            out = np.asarray(kernel.func(ctx), dtype=np.float64)
         if np.any(~np.isfinite(out)):
             raise ValueError("non-finite output")
         return out
@@ -1090,7 +885,6 @@ def evaluate_kernel(kernel: Kernel, t, m, sigma=None,
         if fill_value is None:
             raise
         return np.full(kernel.size, float(fill_value))
-
 
 def default_kernels(keys: Optional[Sequence[str]] = None) -> list:
     """Instantiate kernels with default params for the given registry keys

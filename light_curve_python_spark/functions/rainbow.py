@@ -49,7 +49,7 @@ from typing import Dict, Optional, Sequence
 import numpy as np
 
 from .fits import LnPrior, levenberg_marquardt
-from .kernels import Kernel, _register
+from .kernels import Kernel, _register, on_arrays
 
 __all__ = ["rainbow_model", "rainbow_fit_arrays", "RAINBOW_PARAM_NAMES",
            "rainbow_param_names", "BOLOMETRIC_TERMS", "TEMPERATURE_TERMS"]
@@ -631,7 +631,7 @@ def _rainbow_factory(band_wave_cm: Optional[Dict[str, float]] = None,
             "rainbow_fit needs the band column; evaluate via "
             "operators.spectral.rainbow_fit")
 
-    return Kernel(key="rainbow_fit", names=names, func=fn,
+    return Kernel(key="rainbow_fit", names=names, func=on_arrays(fn),
                   min_obs=n_par + 1, needs_sigma=True,
                   params={"band_wave_cm": dict(band_wave_cm),
                           "with_baseline": with_baseline,

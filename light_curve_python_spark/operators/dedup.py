@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..plans.balance import rebalance_scan, spread
+from .text import word_ngrams
 
 __all__ = ["content_digest",
            "exact_dedup", "shingle", "minhash_signatures", "lsh_candidates",
@@ -77,23 +78,16 @@ def _shingle_stream(df: DataFrame, text_col: str, k: int, id_col: str,
                     distinct: bool) -> DataFrame:
     """(id, sh) word k-gram stream — THE one tokenize/window pipeline
     behind shingle() and minhash_signatures (the only intended
-    difference is the in-row dedup).  element_at, not slice(): the
-    per-element slice allocated a k-array per shingle inside the
-    interpreted HOF (3x the whole stage at sf1: 1.73 s -> 0.59 s for
-    2.6M shingles).  ``rebalance_scan`` spreads the explode across the
-    cluster when the corpus scan has fewer splits than cores (no-op at
-    production scale)."""
+    difference is the in-row dedup): single-space tokens, then
+    :func:`~.text.word_ngrams`.  ``rebalance_scan`` spreads the explode
+    across the cluster when the corpus scan has fewer splits than cores
+    (no-op at production scale)."""
     base = rebalance_scan(df.select(id_col, text_col))
     ws = F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
-    arrs = base.select(id_col, ws.alias("_ws"))
-    n = F.size("_ws") - (k - 1)
-    sh_arr = F.transform(
-        F.sequence(F.lit(1), n),
-        lambda i: F.concat_ws(" ", *[F.element_at("_ws", i + j)
-                                     for j in range(k)]))
+    sh_arr = word_ngrams(F.col("_ws"), k)
     if distinct:
         sh_arr = F.array_distinct(sh_arr)
-    return (arrs.filter(n >= 1)
+    return (base.select(id_col, ws.alias("_ws"))
             .select(id_col, F.explode(sh_arr).alias("sh")))
 
 

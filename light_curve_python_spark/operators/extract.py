@@ -134,19 +134,16 @@ class FeatureExtractor:
                 "(a duplicate-name schema fails deep inside the "
                 "executors otherwise)")
 
-    def _eval_window(self, t, m, s) -> np.ndarray:
-        if self.bands is None:
+    def _eval(self, t, m, s, codes=None) -> np.ndarray:
+        """One window's feature row; with band ``codes`` (banded
+        extractors) the battery runs once per band, in ``self.bands``
+        order."""
+        if codes is None:
             return evaluate_many(self.kernels, t, m, s, self.fill_value)
-        raise AssertionError("banded path uses _eval_window_banded")
-
-    def _eval_window_banded(self, t, m, s, band_codes) -> np.ndarray:
-        outs = []
-        for bi in range(len(self.bands)):
-            mask = band_codes == bi
-            outs.append(evaluate_many(
-                self.kernels, t[mask], m[mask],
-                None if s is None else s[mask], self.fill_value))
-        return np.concatenate(outs)
+        masks = [codes == bi for bi in range(len(self.bands))]
+        return np.concatenate([
+            self._eval(t[k], m[k], None if s is None else s[k])
+            for k in masks])
 
     def _band_codes(self, vals) -> np.ndarray:
         codes = pd.Categorical(vals, categories=self.bands).codes
@@ -195,12 +192,9 @@ class FeatureExtractor:
 
         def fn(t, m, *rest):
             s = rest[0] if has_sigma else None
-            if this.bands is None:
-                vec = this._eval_window(t, m, s)
-            else:
-                vec = this._eval_window_banded(t, m, s,
-                                               this._band_codes(rest[-1]))
-            return vec[:, None]
+            codes = (this._band_codes(rest[-1])
+                     if this.bands is not None else None)
+            return this._eval(t, m, s, codes)[:, None]
         return fn
 
     # ---- point-in-time extraction ----------------------------------------
@@ -309,12 +303,9 @@ class FeatureExtractor:
                 feats = np.empty((len(ts), len(feature_names)))
                 for j, (lo, hi) in enumerate(zip(starts, ends)):
                     sl = slice(lo, hi)
-                    sw = None if s is None else s[sl]
-                    if codes is None:
-                        feats[j] = this._eval_window(t[sl], m[sl], sw)
-                    else:
-                        feats[j] = this._eval_window_banded(
-                            t[sl], m[sl], sw, codes[sl])
+                    feats[j] = this._eval(
+                        t[sl], m[sl], None if s is None else s[sl],
+                        None if codes is None else codes[sl])
             cols = [probes_t.column(n).combine_chunks()
                     for n in probe_names] + \
                    [pa.array(feats[:, i], from_pandas=True)

@@ -360,20 +360,24 @@ def test_all_registry_keys_instantiate(curve):
         assert len(k.names) == k.size
 
 
-def test_ctx_fused_equals_plain(curve):
-    """Fused shared-context implementations == standalone funcs (allclose at
-    float-noise level) for every kernel that has one."""
-    from light_curve_python_spark.functions.kernels import (
-        _CTX_IMPLS, WindowContext)
+def test_single_kernel_equals_fused_block(curve):
+    """Every kernel has one formula: evaluating it alone gives, bit for
+    bit, its block of the fused battery — on the random curve, a
+    constant-m curve (zero-variance fills) and a 3-point curve (min_obs
+    fills)."""
+    import light_curve_python_spark.functions.fits  # noqa: F401 (registers)
     t, m, s = curve
-    ctx = WindowContext(t, m, s)
-    for key in _CTX_IMPLS:
-        k = make_kernel(key)
-        assert k.ctx_func is not None
-        a = np.asarray(k.func(t, m, s), dtype=np.float64)
-        b = np.asarray(k.ctx_func(ctx), dtype=np.float64)
-        np.testing.assert_allclose(a, b, rtol=1e-12, equal_nan=True,
-                                   err_msg=key)
+    ks = [make_kernel(k) for k in KERNEL_FACTORIES if k != "rainbow_fit"]
+    for tt, mm, ss in [(t, m, s), (t, np.full_like(m, 18.5), s),
+                       (t[:3], m[:3], s[:3])]:
+        fused = evaluate_many(ks, tt, mm, ss)
+        col = 0
+        for k in ks:
+            alone = evaluate_kernel(k, tt, mm, ss)
+            np.testing.assert_array_equal(
+                alone.view(np.uint64),
+                fused[col:col + k.size].view(np.uint64), err_msg=k.key)
+            col += k.size
 
 
 def test_fast_periodogram_matches_direct():

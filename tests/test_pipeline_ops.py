@@ -494,6 +494,25 @@ def test_word_bigrams_counts(spark):
     assert set(top.bigram) == {"a b", "b a"}
 
 
+def test_word_ngrams_short_and_null_arrays(spark):
+    """k-grams of consecutive words; fewer than k words (or a null array)
+    give an empty array, never a reversed sequence."""
+    from pyspark.sql import functions as F
+
+    from light_curve_python_spark.operators.text import word_ngrams
+    rows = [(0, []), (1, ["a"]), (2, ["a", "b"]), (3, ["a", "b", "c"]),
+            (4, None)]
+    df = spark.createDataFrame(rows, "id int, w array<string>")
+    got = {r.id: (r.g1, r.g2, r.g3) for r in df.select(
+        "id", *[word_ngrams(F.col("w"), k).alias(f"g{k}")
+                for k in (1, 2, 3)]).collect()}
+    for i, w in rows:
+        w = w or []
+        assert got[i] == tuple(
+            [" ".join(w[j:j + k]) for j in range(len(w) - k + 1)]
+            for k in (1, 2, 3)), i
+
+
 def test_ngram_contamination(spark):
     from light_curve_python_spark.operators.dedup import ngram_contamination
     train = spark.createDataFrame(
