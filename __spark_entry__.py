@@ -237,7 +237,10 @@ def _hz(q: float) -> str:
 
 
 def q_feat_quantiles(spark, sf_dir):
-    return _round6(SQ.quantile_family(_ev(spark, sf_dir), "user_id", "m"))
+    """The Hazen-quantile family (kernels.py, default parameters)."""
+    return _curve_feature_rows(spark, sf_dir, [
+        "inter_percentile_range", "percent_difference_magnitude_percentile",
+        "magnitude_percentage_ratio", "median_buffer_range_percentage"])
 
 
 SQL_QUANTILES = f"""
@@ -1240,29 +1243,57 @@ DMDT = dict(lgdt_min=-4.0, lgdt_max=1.5, n_dt=12)
 _DMDT_N_DM = 10
 
 
+def _dmdt_dt_edges():
+    from light_curve_python_spark.operators.dmdt import log_dt_edges
+    return log_dt_edges(DMDT["lgdt_min"], DMDT["lgdt_max"], DMDT["n_dt"])
+
+
 def _dmdt_dm_edges():
     from light_curve_python_spark.operators.dmdt import (asinh_edges,
                                                          grid_edges)
     return grid_edges(asinh_edges(-500.0, 500.0, _DMDT_N_DM), "asis")
 
 
+def _dmdt_cells(maps, value):
+    """One ``(user_id, dt_bin, dm_bin, value)`` row per cell of each
+    row-major map of a ``dmdt_maps`` frame."""
+    cells = maps.select("user_id", "n_dm",
+                        F.posexplode("dmdt").alias("pos", value))
+    return cells.select(
+        "user_id", F.expr("pos div n_dm").alias("dt_bin"),
+        (F.col("pos") % F.col("n_dm")).cast("long").alias("dm_bin"), value)
+
+
+def _dmdt_points(obs):
+    """Sparse points map per user: the cells that hold pairs, as
+    ``(user_id, dt_bin, dm_bin, pair_count)`` with 0-based bins."""
+    from light_curve_python_spark.operators.spectral import dmdt_maps
+    maps = dmdt_maps(obs, entity_col="user_id", dt_edges=_dmdt_dt_edges(),
+                     dm_edges=_dmdt_dm_edges())
+    return (_dmdt_cells(maps, "pair_count")
+            .filter(F.col("pair_count") > 0)
+            .withColumn("pair_count", F.col("pair_count").cast("long")))
+
+
 def q_dmdt_map(spark, sf_dir):
-    from light_curve_python_spark.operators.dmdt import dmdt_points_sql
-    ev = _ev(spark, sf_dir)
-    return dmdt_points_sql(ev, entity="user_id", **DMDT,
-                           dm_edges=_dmdt_dm_edges())
+    """Points dm-dt map per user (operators/spectral.py dmdt_maps,
+    reference dmdt.rs:156-242) on an lg-dt x asinh-dm grid, one row per
+    cell that holds pairs."""
+    return _dmdt_points(_ev(spark, sf_dir))
 
 
-def _sql_dmdt():
-    from light_curve_python_spark.operators.dmdt import (edge_bin_sql,
-                                                         sql_double_lit)
+def _sql_dmdt(ctes="", src="ev"):
+    """DuckDB twin of a points map over the ``src`` CTE (``ctes`` follow
+    ``ev``): self-join on t2 > t1, floor lg-dt bins, literal-border dm
+    bins."""
+    from light_curve_python_spark.operators.dmdt import edge_bin_sql
     lg_step = sql_double_lit(
         (DMDT['lgdt_max'] - DMDT['lgdt_min']) / DMDT['n_dt'])
     lg_min = sql_double_lit(DMDT['lgdt_min'])
     return f"""
-WITH ev AS ({EV_SQL}),
+WITH ev AS ({EV_SQL}),{ctes}
 pairs AS (SELECT a.user_id, b.t - a.t AS dt, b.m - a.m AS dm
-          FROM ev a JOIN ev b
+          FROM {src} a JOIN {src} b
             ON a.user_id = b.user_id AND b.t > a.t),
 binned AS (SELECT user_id,
     floor((log10(dt) - ({lg_min})) / {lg_step}) AS dt_bin,
@@ -1290,24 +1321,14 @@ def q_dmdt_eroded(spark, sf_dir):
     survivors.  Deterministic md5-rank erosion instead of seeded rand() —
     retry/partitioning-stable AND exactly reproducible in the DuckDB twin,
     so this randomized op gets a full hash-gated oracle row."""
-    from light_curve_python_spark.operators.dmdt import (dmdt_points_sql,
-                                                         erode_observations)
+    from light_curve_python_spark.operators.dmdt import erode_observations
     ev = _ev(spark, sf_dir).select("user_id", "event_id", "t", "m")
-    eroded = erode_observations(ev, "user_id", key_cols=["event_id"],
-                                **ERODE)
-    return dmdt_points_sql(eroded, entity="user_id", **DMDT,
-                           dm_edges=_dmdt_dm_edges())
+    return _dmdt_points(erode_observations(ev, "user_id",
+                                           key_cols=["event_id"], **ERODE))
 
 
-def _sql_dmdt_eroded():
-    # the erosion CTE chain + the SQL_DMDT tail over the eroded set
-    from light_curve_python_spark.operators.dmdt import (edge_bin_sql,
-                                                         sql_double_lit)
-    lg_step = sql_double_lit(
-        (DMDT['lgdt_max'] - DMDT['lgdt_min']) / DMDT['n_dt'])
-    lg_min = sql_double_lit(DMDT['lgdt_min'])
-    return f"""
-WITH ev AS ({EV_SQL}),
+# the erosion CTE chain; the SQL_DMDT tail runs over its survivors
+SQL_DMDT_ERODED = _sql_dmdt(f"""
 h AS (SELECT user_id, event_id, t, m,
         md5('{ERODE['seed']}:' || CAST(user_id AS VARCHAR) || ':'
             || CAST(event_id AS VARCHAR)) AS _h,
@@ -1319,24 +1340,7 @@ r AS (SELECT *, row_number() OVER (PARTITION BY user_id
 er AS (SELECT user_id, t, m FROM r
        WHERE _rk <= _n
              - CAST(round({sql_double_lit(ERODE['drop_nobs'])} * _n)
-                    AS BIGINT)),
-pairs AS (SELECT a.user_id, b.t - a.t AS dt, b.m - a.m AS dm
-          FROM er a JOIN er b
-            ON a.user_id = b.user_id AND b.t > a.t),
-binned AS (SELECT user_id,
-    floor((log10(dt) - ({lg_min})) / {lg_step}) AS dt_bin,
-    {edge_bin_sql('dm', _dmdt_dm_edges())} AS dm_bin
-  FROM pairs)
-SELECT user_id, CAST(dt_bin AS BIGINT) AS dt_bin,
-       CAST(dm_bin AS BIGINT) AS dm_bin, count(*) AS pair_count
-FROM binned
-WHERE dt_bin >= 0 AND dt_bin < {DMDT['n_dt']}
-  AND dm_bin >= 0 AND dm_bin < {_DMDT_N_DM}
-GROUP BY user_id, dt_bin, dm_bin
-"""
-
-
-SQL_DMDT_ERODED = _sql_dmdt_eroded()
+                    AS BIGINT)),""", "er")
 
 
 def _seq_exploded(out, extra=()):
@@ -1483,12 +1487,22 @@ FROM banded a JOIN banded c
 
 
 def q_count_dt(spark, sf_dir):
-    """count_dt — 1-D lg-dt pair histogram (ref src/dmdt.rs:88-154), sparse
-    per-entity form over the same grid as dmdt_map."""
-    from light_curve_python_spark.operators.dmdt import count_dt_sql
-    ev = _ev(spark, sf_dir)
-    return count_dt_sql(ev, entity="user_id", lgdt_min=DMDT["lgdt_min"],
-                        lgdt_max=DMDT["lgdt_max"], n_dt=DMDT["n_dt"])
+    """count_dt — 1-D lg-dt pair histogram (ref src/dmdt.rs:88-154) over
+    the dmdt_map dt grid, one row per nonzero bin of each user."""
+    import numpy as np
+    from light_curve_python_spark.operators.dmdt import count_dt_kernel
+    from light_curve_python_spark.operators.grouped import grouped_map
+    dt_edges = _dmdt_dt_edges()
+    out_fields = [T.StructField("dt_bin", T.LongType(), False),
+                  T.StructField("pair_count", T.LongType(), False)]
+
+    def fn(t):
+        hist = count_dt_kernel(t, dt_edges)
+        nz = np.flatnonzero(hist)
+        return nz, hist[nz].astype(np.int64)
+
+    return grouped_map(_ev(spark, sf_dir), "user_id", ["t"], out_fields, fn,
+                       order_cols=("t",))
 
 
 SQL_COUNT_DT = f"""
@@ -1570,15 +1584,17 @@ def _erfc_sql(x: str) -> str:
             f"ELSE {vlarge} END) END")
 
 
-def _curve_feature_rows(spark, sf_dir, feature, names):
-    """One feature over each user's whole event curve
-    (FeatureExtractor.extract), without the fill rows — too few points,
-    zero variance, zero time span: SQL NULL, the groups the DuckDB twins
-    exclude — and with the kernel outputs in ``names`` renamed and
-    rounded."""
-    out = FeatureExtractor([feature]).extract(_ev(spark, sf_dir),
-                                              entity_col="user_id")
-    return out.filter(F.col(next(iter(names))).isNotNull()).select(
+def _curve_feature_rows(spark, sf_dir, features, names=None):
+    """``features`` over each user's whole event curve
+    (FeatureExtractor.extract), with the kernel outputs in ``names`` (all
+    of them when None) renamed and rounded.  Users whose first named
+    output is a fill — too few points, zero variance, zero time span, no
+    detection: SQL NULL, the groups the DuckDB twins exclude — are
+    dropped."""
+    ex = FeatureExtractor(features)
+    names = names or {k: k for k in ex.names}
+    out = ex.extract(_ev(spark, sf_dir), entity_col="user_id")
+    return out.filter(F.col(f"`{next(iter(names))}`").isNotNull()).select(
         "user_id", *[_r(k, 6).alias(v) for k, v in names.items()])
 
 
@@ -1588,7 +1604,7 @@ def q_anderson_darling(spark, sf_dir):
     hash gate by evaluating the engine's own Cody erfc in DuckDB
     (_erfc_sql) inside the textbook sorted-logcdf sum.  Degenerate groups
     (n < 4 or zero variance) excluded in both engines."""
-    return _curve_feature_rows(spark, sf_dir, "anderson_darling_normal",
+    return _curve_feature_rows(spark, sf_dir, ["anderson_darling_normal"],
                                {"anderson_darling_normal": "a2"})
 
 
@@ -1631,7 +1647,7 @@ def q_chi2_pvar(spark, sf_dir):
     fraction with identical iteration arithmetic and convergence tests —
     as recursive CTEs, so even the iterative special function carries a
     full hash gate."""
-    return _curve_feature_rows(spark, sf_dir, "chi2_pvar",
+    return _curve_feature_rows(spark, sf_dir, ["chi2_pvar"],
                                {"chi2_pvar": "pvar"})
 
 
@@ -1708,20 +1724,11 @@ def q_dmdt_gausses(spark, sf_dir):
     (generated from the package's coefficients — see _erf_sql) over the
     same pair set, so the iterative-free but erf-heavy kernel gets a full
     hash gate."""
-    import numpy as np
     from light_curve_python_spark.operators.spectral import dmdt_maps
-    dt_edges = 10.0 ** np.linspace(DMDT["lgdt_min"], DMDT["lgdt_max"],
-                                   DMDT["n_dt"] + 1)
-    n_dm = len(GAUSS_DM_EDGES) - 1
     maps = dmdt_maps(_ev(spark, sf_dir), entity_col="user_id",
-                     sigma_col="sigma", dt_edges=dt_edges,
+                     sigma_col="sigma", dt_edges=_dmdt_dt_edges(),
                      dm_edges=GAUSS_DM_EDGES, gausses=True)
-    cells = maps.select("user_id",
-                        F.posexplode("dmdt").alias("pos", "mass"))
-    return cells.select("user_id",
-                        F.expr(f"pos div {n_dm}").alias("dt_bin"),
-                        (F.col("pos") % n_dm).cast("long").alias("dm_bin"),
-                        _r("mass", 6).alias("mass"))
+    return _dmdt_cells(maps, "mass").withColumn("mass", _r("mass", 6))
 
 
 def _sql_dmdt_gausses() -> str:
@@ -1885,7 +1892,7 @@ def q_periodogram_peaks(spark, sf_dir):
     interior-local-max peak pick (strongest first, argmax fallback), and
     the (P - mean)/std(ddof=1) S/N — the full output contract in SQL."""
     return _curve_feature_rows(
-        spark, sf_dir, ("periodogram", {"peaks": 1, "fast": False}),
+        spark, sf_dir, [("periodogram", {"peaks": 1, "fast": False})],
         {"period_0": "period_0", "period_s_to_n_0": "s_to_n_0"})
 
 
@@ -1978,8 +1985,8 @@ def q_periodogram_folded(spark, sf_dir):
     ``period_folded_`` output, reproduced in SQL end to end (grid → power
     → peak → fold → consecutive-pair sum)."""
     return _curve_feature_rows(
-        spark, sf_dir, ("periodogram", {"peaks": 1, "fast": False,
-                                        "phase_features": ("eta",)}),
+        spark, sf_dir, [("periodogram", {"peaks": 1, "fast": False,
+                                         "phase_features": ("eta",)})],
         {"period_folded_eta": "folded_eta"})
 
 

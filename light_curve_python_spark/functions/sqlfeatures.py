@@ -1,14 +1,25 @@
-"""Native Spark-SQL implementations of the SQL-expressible features.
+"""Spark-SQL forms of the aggregate-only feature families, the Otsu split
+and the flux detection counter.
 
-Every function here is the JVM-side (whole-stage-codegen, no Python) twin of a
-numpy kernel in ``kernels.py`` — same formulas, same names.  They exist for
-two reasons:
+Every function here is the JVM-side (whole-stage-codegen, no Python) twin of
+numpy kernels in ``kernels.py`` — same formulas, same names — and the engine
+of its ``feat_*`` entry row.  A family keeps a JVM form only where that is
+measured no slower than the kernel path (``FeatureExtractor.extract``);
+the Hazen quantiles and the dm-dt maps run on the kernels.  Medians of 10
+alternating JVM/kernel pairs, local[4], noop sink:
 
-1. at 100 TB, features expressible as built-in aggregates/windows should never
-   pay the Python-worker round trip (SURVEY.md §4: "we must not emit one UDF
-   per feature" — here we emit zero UDFs);
-2. they are the driver's DuckDB-oracle surface: identical ANSI formulas run on
-   both engines (__spark_entry__.py).
+- sf0.1 (100k events, 1500 users): simple_stats 0.94/0.98 s,
+  weighted_stats 0.63/0.73, skew_kurtosis 0.44/0.56, linear_fit_sql
+  0.46/0.59, linear_trend_sql 0.56/0.60, dispersion_stats 0.82/0.76 (5 of
+  10 pairs each way);
+- sf1-like (1M events, 15000 users, scripts/gen_sflike.py):
+  otsu_split_sql 1.99/2.41 s, detection_counts_sql 1.60/2.29 s (kernel
+  slower in 9 and 10 of 10 pairs; at sf0.1 0.78/0.61 and 0.48/0.48).
+
+These are also the paths that match the DuckDB twins bit for bit after
+ROUND(6) at sf0.1: the kernel path moves ``eta_e`` (~2.9e8) and
+``linear_fit_reduced_chi2`` (~2.9e5) by one unit in the 6th decimal on one
+entity each, where only formula-identical summation agrees.
 
 All take a long-format observations DataFrame and return one row per entity.
 Multi-stage features (windows then aggregate) keep the same partitioning key
@@ -17,15 +28,13 @@ throughout, so Catalyst reuses the single entity shuffle across stages.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = [
-    "simple_stats", "hazen_quantiles", "quantile_family", "dispersion_stats",
-    "weighted_stats", "skew_kurtosis", "linear_fit_sql", "linear_trend_sql",
-    "otsu_split_sql", "detection_counts_sql",
+    "simple_stats", "dispersion_stats", "weighted_stats", "skew_kurtosis",
+    "linear_fit_sql", "linear_trend_sql", "otsu_split_sql",
+    "detection_counts_sql",
 ]
 
 
@@ -58,65 +67,6 @@ def simple_stats(obs: DataFrame, entity: str = "user_id", t: str = "t",
         F.max("_dt").alias("maximum_time_interval"),
         F.min("_dt").alias("minimum_time_interval"),
     )
-
-
-def hazen_quantiles(obs: DataFrame, qs: Sequence[float],
-                    entity: str = "user_id", m: str = "m",
-                    prefix: str = "q_") -> DataFrame:
-    """Per-entity quantiles with Hazen plotting positions (exact mquantiles
-    alphap=betap=0.5 parity — Spark's ``percentile`` is type-7, so this is a
-    ranked-window construction instead): pos = clip(q·n + ½, 1, n),
-    v = (1−g)·x[⌊pos⌋] + g·x[⌊pos⌋+1]."""
-    rn = F.row_number().over(Window.partitionBy(entity).orderBy(F.col(m).asc()))
-    n = F.count("*").over(_w(entity))
-    ranked = obs.select(entity, F.col(m).alias("_v"),
-                        rn.alias("_rn"), n.alias("_n"))
-    # lo/g depend only on n (constant per entity): F.max(g) keeps them inside
-    # a single aggregation pass
-    staged = ranked.withColumn("_nd", F.col("_n").cast("double"))
-    agg_exprs = []
-    for q in qs:
-        pos = F.least(F.greatest(F.lit(q) * F.col("_nd") + F.lit(0.5),
-                                 F.lit(1.0)), F.col("_nd"))
-        lo = F.floor(pos)
-        g = pos - lo
-        v_lo = F.max(F.when(F.col("_rn") == lo, F.col("_v")))
-        v_hi = F.coalesce(F.max(F.when(F.col("_rn") == lo + 1, F.col("_v"))),
-                          F.max(F.when(F.col("_rn") == lo, F.col("_v"))))
-        agg_exprs.append((v_lo * (1 - F.max(g)) + v_hi * F.max(g))
-                         .alias(f"{prefix}{q:g}"))
-    return staged.groupBy(entity).agg(*agg_exprs)
-
-
-def quantile_family(obs: DataFrame, entity: str = "user_id",
-                    m: str = "m") -> DataFrame:
-    """inter_percentile_range(0.25) / percent_difference_magnitude_percentile
-    (0.25) / magnitude_percentage_ratio(0.4, 0.05) /
-    median_buffer_range_percentage(0.1) from Hazen quantiles."""
-    qs = hazen_quantiles(obs, [0.05, 0.25, 0.4, 0.6, 0.75, 0.95], entity, m)
-    med = obs.groupBy(entity).agg(
-        F.percentile(F.col(m), F.lit(0.5)).alias("_med"),
-        F.max(m).alias("_max"), F.min(m).alias("_min"))
-    mbrp = (
-        obs.join(med, entity)
-        .groupBy(entity)
-        .agg((F.count(F.when(
-            F.abs(F.col("_med") - F.col(m))
-            < 0.1 * (F.col("_max") - F.col("_min")) / 2, 1))
-            / F.count("*")).alias("median_buffer_range_percentage_0.1")))
-    return (
-        qs.join(med, entity).join(mbrp, entity)
-        .select(
-            entity,
-            (F.col("`q_0.75`") - F.col("`q_0.25`"))
-            .alias("inter_percentile_range_0.25"),
-            ((F.col("`q_0.75`") - F.col("`q_0.25`")) / F.col("_med"))
-            .alias("percent_difference_magnitude_percentile_0.25"),
-            ((F.col("`q_0.6`") - F.col("`q_0.4`"))
-             / (F.col("`q_0.95`") - F.col("`q_0.05`")))
-            .alias("magnitude_percentage_ratio_0.4_0.05"),
-            F.col("`median_buffer_range_percentage_0.1`"),
-        ))
 
 
 def dispersion_stats(obs: DataFrame, entity: str = "user_id", t: str = "t",

@@ -2,21 +2,21 @@
 (/root/reference/light-curve/src/dmdt.rs, see SURVEY.md §2.11).
 
 For every observation pair (i < j) of one entity: a 2-D histogram of
-(lg Δt, Δm).  Two execution shapes:
-
-- ``dmdt_points_sql``: sparse DataFrame form — per-entity self-join on
-  ``t2 > t1`` + width_bucket bucketing, one shuffle, exactly SQL-expressible
-  (the DuckDB oracle runs the same query).  O(pairs) rows but pairs live only
-  inside the join, the output is per-bucket counts.
-- ``dmdt_points_kernel`` / ``dmdt_gausses_kernel``: dense numpy per-curve
-  maps (reference ``points``/``gausses``, dmdt.rs:156-242 / :287-420) for
-  the grouped-extraction path; ``gausses`` smears each pair over the dm bins
-  with the Gaussian CDF (erf), per-pair normalized.
+(lg Δt, Δm).  The kernels here are dense numpy per-curve maps
+(reference ``points``/``gausses``/``count_dt``, dmdt.rs:88-242 /
+:287-420); ``operators/spectral.py`` ``dmdt_maps`` runs them once per
+entity through ``grouped_map``.  ``gausses`` smears each pair over the dm
+bins with the Gaussian CDF (erf), per-pair normalized.  Pairs are visited
+in ``np.triu_indices`` order in bounded blocks (``_pair_blocks``), so a
+long curve never holds all n(n-1)/2 pair indices at once.
 
 Normalizations (dmdt.rs:68-86): 'dt' divides each lg-dt row by that dt
 bin's TOTAL pair count — ``count_dt`` over all pairs, including pairs whose
 dm falls outside the dm grid (and, for gausses, mass outside the span);
 zero-count rows divide by 1.  'max' divides by the global maximum.
+
+``edge_bin_sql`` / ``sql_double_lit`` write the same half-open binning and
+the same border doubles as DuckDB SQL, for the entry queries' oracle twins.
 """
 
 from __future__ import annotations
@@ -33,7 +33,6 @@ from ..functions.special import erf
 __all__ = ["log_dt_edges", "linear_edges", "asinh_edges", "grid_edges",
            "from_borders", "dmdt_points_kernel",
            "dmdt_gausses_kernel", "count_dt_kernel", "normalize_dmdt",
-           "dmdt_points_sql", "count_dt_sql", "edge_bin_expr",
            "edge_bin_sql", "sql_double_lit", "erode_observations"]
 
 
@@ -112,9 +111,31 @@ def from_borders(min_lgdt: float, max_lgdt: float, lgdt_size: int,
             linear_edges(-max_abs_dm, max_abs_dm, dm_size))
 
 
-def _pairs(t: np.ndarray, m: np.ndarray):
-    i, j = np.triu_indices(len(t), k=1)
-    return t[j] - t[i], m[j] - m[i]
+# pair budget of one _pair_blocks block: the kernels' temporaries cost about
+# 50 bytes per pair (times the dm width for gausses), so a block stays near
+# 50 MB however long the curve
+_PAIR_BLOCK = 1 << 20
+
+
+def _pair_blocks(n: int, width: int = 1):
+    """The i < j pairs of an ``n``-point curve as ``(i, j)`` index arrays,
+    in ``np.triu_indices(n, k=1)`` order, cut into blocks of whole rows
+    ``i`` of at most ``_PAIR_BLOCK // width`` pairs (a longer row is a
+    block of its own).  Accumulating block after block keeps the order of
+    the one-shot form, so the maps are bitwise identical to it."""
+    counts = np.arange(n - 1, 0, -1)          # pairs of row i: n - 1 - i
+    ends = np.cumsum(counts)
+    budget = max(_PAIR_BLOCK // width, 1)
+    i0, done = 0, 0
+    while i0 < n - 1:
+        i1 = max(int(np.searchsorted(ends, done + budget, side="right")),
+                 i0 + 1)
+        c = counts[i0:i1]
+        i = np.repeat(np.arange(i0, i1), c)
+        first = np.repeat(ends[i0:i1] - c - done, c)  # block offset of row
+        yield i, np.arange(len(i)) - first + i + 1
+        done = int(ends[i1 - 1])
+        i0 = i1
 
 
 def _bin_exclusive(x: np.ndarray, edges: np.ndarray) -> np.ndarray:
@@ -133,12 +154,16 @@ def dmdt_points_kernel(t: np.ndarray, m: np.ndarray,
                        dm_edges: np.ndarray) -> np.ndarray:
     """Dense (n_dt, n_dm) pair-count map (dmdt.rs:156-242); all intervals
     half-open per the reference's [min; max) grid contract."""
-    dt, dm = _pairs(np.asarray(t, float), np.asarray(m, float))
-    i = _bin_exclusive(dt, np.asarray(dt_edges, float))
-    j = _bin_exclusive(dm, np.asarray(dm_edges, float))
-    ok = (i >= 0) & (j >= 0)
+    t = np.asarray(t, float)
+    m = np.asarray(m, float)
+    dt_edges = np.asarray(dt_edges, float)
+    dm_edges = np.asarray(dm_edges, float)
     hist = np.zeros((len(dt_edges) - 1, len(dm_edges) - 1))
-    np.add.at(hist, (i[ok], j[ok]), 1.0)
+    for i, j in _pair_blocks(len(t)):
+        a = _bin_exclusive(t[j] - t[i], dt_edges)
+        b = _bin_exclusive(m[j] - m[i], dm_edges)
+        ok = (a >= 0) & (b >= 0)
+        np.add.at(hist, (a[ok], b[ok]), 1.0)
     return hist
 
 
@@ -151,17 +176,16 @@ def dmdt_gausses_kernel(t: np.ndarray, m: np.ndarray, sigma: np.ndarray,
     t = np.asarray(t, float)
     m = np.asarray(m, float)
     sigma = np.asarray(sigma, float)
-    i, j = np.triu_indices(len(t), k=1)
-    dt = t[j] - t[i]
-    dm = m[j] - m[i]
-    s = np.sqrt(sigma[i] ** 2 + sigma[j] ** 2)
     out = np.zeros((len(dt_edges) - 1, len(dm_edges) - 1))
-    row = np.searchsorted(dt_edges, dt, side="right") - 1
-    ok = (row >= 0) & (row < out.shape[0])
-    z = (dm_edges[None, :] - dm[ok, None]) / (math.sqrt(2.0) * s[ok, None])
-    cdf = 0.5 * (1.0 + erf(z))
-    mass = np.diff(cdf, axis=1)
-    np.add.at(out, row[ok], mass)
+    for i, j in _pair_blocks(len(t), len(dm_edges)):
+        dm = m[j] - m[i]
+        s = np.sqrt(sigma[i] ** 2 + sigma[j] ** 2)
+        row = np.searchsorted(dt_edges, t[j] - t[i], side="right") - 1
+        ok = (row >= 0) & (row < out.shape[0])
+        z = (dm_edges[None, :] - dm[ok, None]) \
+            / (math.sqrt(2.0) * s[ok, None])
+        cdf = 0.5 * (1.0 + erf(z))
+        np.add.at(out, row[ok], np.diff(cdf, axis=1))
     return out
 
 
@@ -170,10 +194,11 @@ def count_dt_kernel(t: np.ndarray,
     """1-D Δt pair histogram — the reference's ``count_dt``
     (src/dmdt.rs:88-154: ``dt_points`` over ALL pairs, no dm filtering)."""
     t = np.asarray(t, float)
-    i, j = np.triu_indices(len(t), k=1)
-    b = _bin_exclusive(t[j] - t[i], np.asarray(dt_edges, float))
+    dt_edges = np.asarray(dt_edges, float)
     hist = np.zeros(len(dt_edges) - 1)
-    np.add.at(hist, b[b >= 0], 1.0)
+    for i, j in _pair_blocks(len(t)):
+        b = _bin_exclusive(t[j] - t[i], dt_edges)
+        np.add.at(hist, b[b >= 0], 1.0)
     return hist
 
 
@@ -199,17 +224,6 @@ def normalize_dmdt(hist: np.ndarray, norm: Sequence[str] = (),
     return out
 
 
-def edge_bin_expr(x, edges: Sequence[float]):
-    """Generic-grid bin index as a Spark Column: ``|{e in edges : e <= x}|
-    - 1`` over a literal border array — exactly ``_bin_exclusive``'s
-    searchsorted(right)-1, expressible identically in DuckDB as
-    ``len(list_filter([...], e -> e <= x)) - 1``, so arbitrary (e.g.
-    asinh) grids stay oracle-checkable.  O(|edges|) per pair; grids are
-    tens of borders, so this stays inside whole-stage codegen."""
-    arr = F.array(*[F.lit(float(e)) for e in edges])
-    return F.size(F.filter(arr, lambda e: e <= x)) - 1
-
-
 def sql_double_lit(v: float) -> str:
     """An EXACT double literal for DuckDB oracle SQL.  The STRING-cast
     form is load-bearing: DuckDB types a bare fractional literal as
@@ -221,79 +235,12 @@ def sql_double_lit(v: float) -> str:
 
 
 def edge_bin_sql(expr: str, edges: Sequence[float]) -> str:
-    """DuckDB twin of ``edge_bin_expr`` — identical border doubles via
-    ``sql_double_lit``."""
+    """``_bin_exclusive`` as a DuckDB expression over a literal border
+    array: ``|{e in edges : e <= x}| - 1`` (searchsorted(right) - 1), with
+    the kernels' border doubles via ``sql_double_lit``; callers keep
+    ``0 <= bin < len(edges) - 1``."""
     lits = ", ".join(sql_double_lit(e) for e in edges)
     return f"(len(list_filter([{lits}], e -> e <= ({expr}))) - 1)"
-
-
-def dmdt_points_sql(obs: DataFrame, entity: str = "doc_id", t: str = "t",
-                    m: str = "m", lgdt_min: float = -1.0,
-                    lgdt_max: float = 2.0, n_dt: int = 16,
-                    dm_min: float = -2.0, dm_max: float = 2.0,
-                    n_dm: int = 16,
-                    dt_edges: Optional[Sequence[float]] = None,
-                    dm_edges: Optional[Sequence[float]] = None) -> DataFrame:
-    """Sparse per-entity map: (entity, dt_bin, dm_bin, pair_count), 0-based
-    bins.  Default grids are uniform in lg(dt) × dm (the reference's
-    ``from_borders`` constructor); pass ``dt_edges`` / ``dm_edges``
-    (e.g. from ``grid_edges(..., 'asis')`` or ``asinh_edges``) for the
-    reference's arbitrary-border ArrayGrid form — binning then uses an
-    explicit border-array comparison identical to the kernels'
-    half-open searchsorted contract.
-
-    Self-join on the entity key (co-partitioned, no broadcast needed) with
-    ``t2 > t1``; arithmetic (or literal-array) bin indices so DuckDB
-    computes the identical thing.  At scale the O(n²)-per-entity pair
-    growth is bounded by windowing the observations first (compose with
-    bin_series).
-    """
-    a = obs.select(F.col(entity).alias("_e"), F.col(t).alias("_t1"),
-                   F.col(m).alias("_m1"))
-    b = obs.select(F.col(entity).alias("_e"), F.col(t).alias("_t2"),
-                   F.col(m).alias("_m2"))
-    pairs = a.join(b, "_e").filter(F.col("_t2") > F.col("_t1"))
-    if dt_edges is not None:
-        n_dt = len(dt_edges) - 1
-        dt_bin = edge_bin_expr(F.col("_t2") - F.col("_t1"), dt_edges)
-    else:
-        lg_step = (lgdt_max - lgdt_min) / n_dt
-        dt_bin = F.floor(
-            (F.log10(F.col("_t2") - F.col("_t1")) - F.lit(lgdt_min))
-            / F.lit(lg_step))
-    if dm_edges is not None:
-        n_dm = len(dm_edges) - 1
-        dm_bin = edge_bin_expr(F.col("_m2") - F.col("_m1"), dm_edges)
-    else:
-        dm_step = (dm_max - dm_min) / n_dm
-        dm_bin = F.floor((F.col("_m2") - F.col("_m1") - F.lit(dm_min))
-                         / F.lit(dm_step))
-    return (pairs
-            .withColumn("dt_bin", dt_bin.cast("long"))
-            .withColumn("dm_bin", dm_bin.cast("long"))
-            .filter((F.col("dt_bin") >= 0) & (F.col("dt_bin") < n_dt)
-                    & (F.col("dm_bin") >= 0) & (F.col("dm_bin") < n_dm))
-            .groupBy(F.col("_e").alias(entity), "dt_bin", "dm_bin")
-            .agg(F.count("*").alias("pair_count")))
-
-
-def count_dt_sql(obs: DataFrame, entity: str = "doc_id", t: str = "t",
-                 lgdt_min: float = -1.0, lgdt_max: float = 2.0,
-                 n_dt: int = 16) -> DataFrame:
-    """Sparse count_dt: (entity, dt_bin, pair_count) — 1-D variant of
-    dmdt_points_sql (ref src/dmdt.rs:88-154), same arithmetic bin indices so
-    DuckDB computes the identical thing."""
-    a = obs.select(F.col(entity).alias("_e"), F.col(t).alias("_t1"))
-    b = obs.select(F.col(entity).alias("_e"), F.col(t).alias("_t2"))
-    pairs = a.join(b, "_e").filter(F.col("_t2") > F.col("_t1"))
-    lg_step = (lgdt_max - lgdt_min) / n_dt
-    dt_bin = F.floor((F.log10(F.col("_t2") - F.col("_t1")) - F.lit(lgdt_min))
-                     / F.lit(lg_step))
-    return (pairs
-            .withColumn("dt_bin", dt_bin)
-            .filter((F.col("dt_bin") >= 0) & (F.col("dt_bin") < n_dt))
-            .groupBy(F.col("_e").alias(entity), "dt_bin")
-            .agg(F.count("*").alias("pair_count")))
 
 
 def erode_observations(df: DataFrame, entity_col: str = "doc_id",

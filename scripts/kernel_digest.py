@@ -1,12 +1,13 @@
 #!/usr/bin/env python
 """Bitwise digest of the feature kernels on a fixed golden corpus.
 
-Prints two sha256 digests, one per window evaluator, over the uint64 views
-of their outputs:
+Prints three sha256 digests over the uint64 views of their outputs:
 
 - ``evaluate_many``: every curve of the corpus, whole-curve windows;
 - ``prefix_battery``: ``PrefixBattery.evaluate_prefixes`` on the same
-  curves at nine prefix ends each (0 and n included).
+  curves at nine prefix ends each (0 and n included);
+- ``dmdt``: the dm-dt kernels (``dmdt_points_kernel``,
+  ``dmdt_gausses_kernel``, ``count_dt_kernel``) on every curve.
 
 The corpus is 45 seeded curves of 1-1000 points, among them constant-``m``
 curves and curves offset by 1e6 in ``t`` and ``m``.  The kernel set is the
@@ -90,6 +91,23 @@ def main(argv=None) -> None:
                       .view(np.uint64).tobytes())
     print(f"evaluate_many  {many.hexdigest()}")
     print(f"prefix_battery {prefix.hexdigest()}")
+    print(f"dmdt           {dmdt_digest()}")
+
+
+def dmdt_digest() -> str:
+    from light_curve_python_spark.operators.dmdt import (
+        asinh_edges, count_dt_kernel, dmdt_gausses_kernel,
+        dmdt_points_kernel, linear_edges, log_dt_edges)
+    dt_e = log_dt_edges(-1.0, 3.0, 12)
+    dm_e = asinh_edges(-6.0, 6.0, 10)
+    gauss_e = linear_edges(-4.0, 4.0, 16)
+    h = hashlib.sha256()
+    for t, m, s in corpus():
+        for out in (dmdt_points_kernel(t, m, dt_e, dm_e),
+                    dmdt_gausses_kernel(t, m, s, dt_e, gauss_e),
+                    count_dt_kernel(t, dt_e)):
+            h.update(out.view(np.uint64).tobytes())
+    return h.hexdigest()
 
 
 if __name__ == "__main__":

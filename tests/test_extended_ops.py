@@ -24,10 +24,8 @@ from light_curve_python_spark.functions.multiband import (
 )
 from light_curve_python_spark.operators.dmdt import (
     count_dt_kernel,
-    count_dt_sql,
     dmdt_gausses_kernel,
     dmdt_points_kernel,
-    dmdt_points_sql,
     linear_edges,
     log_dt_edges,
     normalize_dmdt,
@@ -129,24 +127,6 @@ def test_dmdt_gausses_mass_conservation():
     np.testing.assert_allclose(got.sum(axis=1), pts[:, 0], atol=1e-9)
 
 
-def test_dmdt_sql_matches_kernel(spark, obs):
-    lgmin, lgmax, ndt = -1.0, 3.0, 10
-    dmmin, dmmax, ndm = -6.0, 6.0, 12
-    got = dmdt_points_sql(obs, lgdt_min=lgmin, lgdt_max=lgmax, n_dt=ndt,
-                          dm_min=dmmin, dm_max=dmmax, n_dm=ndm).toPandas()
-    pdf = obs.toPandas()
-    dt_edges = np.logspace(lgmin, lgmax, ndt + 1)
-    dm_edges = np.linspace(dmmin, dmmax, ndm + 1)
-    for doc_id, grp in pdf.sort_values("t").groupby("doc_id"):
-        want = dmdt_points_kernel(grp.t.to_numpy(), grp.m.to_numpy(),
-                                  dt_edges, dm_edges)
-        sub = got[got.doc_id == doc_id]
-        dense = np.zeros_like(want)
-        for _, r in sub.iterrows():
-            dense[int(r.dt_bin), int(r.dm_bin)] = r.pair_count
-        np.testing.assert_array_equal(dense, want)
-
-
 def test_reduce_sequence_strategies(spark):
     seqs = generate_sequences(spark, 12, seed=3).cache()
     pdf = seqs.toPandas().set_index("doc_id")
@@ -228,26 +208,10 @@ def test_periodogram_composition():
     assert d["spectrum_amplitude"] > 0
 
 
-def test_count_dt_sql_matches_kernel(spark, obs):
-    lgmin, lgmax, ndt = -1.0, 3.0, 10
-    got = count_dt_sql(obs, lgdt_min=lgmin, lgdt_max=lgmax,
-                       n_dt=ndt).toPandas()
-    pdf = obs.toPandas()
-    dt_edges = np.logspace(lgmin, lgmax, ndt + 1)
-    for doc_id, grp in pdf.sort_values("t").groupby("doc_id"):
-        want = count_dt_kernel(grp.t.to_numpy(), dt_edges)
-        sub = got[got.doc_id == doc_id]
-        dense = np.zeros(ndt)
-        for _, r in sub.iterrows():
-            dense[int(r.dt_bin)] = r.pair_count
-        np.testing.assert_array_equal(dense, want)
-
-
 def test_dmdt_grids_exclude_top_edge():
     """The reference grid is half-open [min; max) (dmdt.rs:779): a pair
-    whose dt or dm equals the top edge falls OUTSIDE — and the SQL twins'
-    floor binning agrees (regression: np.histogram includes the last bin's
-    right edge)."""
+    whose dt or dm equals the top edge falls OUTSIDE (regression:
+    np.histogram includes the last bin's right edge)."""
     t = np.array([0.0, 1000.0])
     m = np.array([0.0, 2.0])
     dt_edges = np.logspace(-1, 3, 11)     # top edge = 1000 == dt
@@ -259,6 +223,39 @@ def test_dmdt_grids_exclude_top_edge():
     m2 = np.array([0.0, -2.0])
     assert count_dt_kernel(t2, dt_edges).sum() == 1      # dt == min edge
     assert dmdt_points_kernel(t2, m2, dt_edges, dm_edges).sum() == 1
+
+
+def test_dmdt_pair_blocks_bitwise(monkeypatch):
+    """The dm-dt kernels visit pairs in bounded row blocks: a tiny pair
+    budget (many blocks, single-row blocks included) gives maps bitwise
+    equal to the default one-block pass."""
+    from light_curve_python_spark.operators import dmdt as D
+    rng = np.random.default_rng(12)
+    n = 60
+    t = np.sort(rng.uniform(0, 100, n))
+    m = rng.uniform(-1.5, 1.5, n)
+    sigma = rng.uniform(0.05, 0.5, n)
+    dt_edges = log_dt_edges(-1, 2, 8)
+    dm_edges = linear_edges(-2, 2, 10)
+
+    def maps():
+        return [D.dmdt_points_kernel(t, m, dt_edges, dm_edges),
+                D.dmdt_gausses_kernel(t, m, sigma, dt_edges, dm_edges),
+                D.count_dt_kernel(t, dt_edges)]
+
+    want = maps()
+    ti, tj = np.triu_indices(n, k=1)
+    for budget in (1, 37, 200):
+        monkeypatch.setattr(D, "_PAIR_BLOCK", budget)
+        blocks = list(D._pair_blocks(n))
+        assert len(blocks) > 1
+        np.testing.assert_array_equal(
+            np.concatenate([i for i, _ in blocks]), ti)
+        np.testing.assert_array_equal(
+            np.concatenate([j for _, j in blocks]), tj)
+        for a, b in zip(maps(), want):
+            np.testing.assert_array_equal(a.view(np.uint64),
+                                          b.view(np.uint64))
 
 
 def test_grid_edges_contract():
@@ -321,25 +318,6 @@ def test_edge_bin_sql_duckdb_parity():
     want_valid = want >= 0
     np.testing.assert_array_equal(got_valid, want_valid)
     np.testing.assert_array_equal(got[got_valid], want[want_valid])
-
-
-def test_dmdt_sql_arbitrary_edges_match_kernel(spark, obs):
-    """Kernel ≡ SQL parity on the generic-grid path: explicit lg dt
-    borders + an asinh dm grid (the ArrayGrid/asis constructor form)."""
-    from light_curve_python_spark.operators.dmdt import asinh_edges
-    dt_edges = log_dt_edges(-1.0, 3.0, 10)
-    dm_edges = asinh_edges(-6.0, 6.0, 12)
-    got = dmdt_points_sql(obs, dt_edges=dt_edges,
-                          dm_edges=dm_edges).toPandas()
-    pdf = obs.toPandas()
-    for doc_id, grp in pdf.sort_values("t").groupby("doc_id"):
-        want = dmdt_points_kernel(grp.t.to_numpy(), grp.m.to_numpy(),
-                                  dt_edges, dm_edges)
-        sub = got[got.doc_id == doc_id]
-        dense = np.zeros_like(want)
-        for _, r in sub.iterrows():
-            dense[int(r.dt_bin), int(r.dm_bin)] = r.pair_count
-        np.testing.assert_array_equal(dense, want)
 
 
 # --- observation erosion (the batches drop_nobs contract, dmdt.rs:440-530) --
@@ -426,25 +404,24 @@ def test_erode_is_uniform_without_replacement(spark):
 
 
 def test_erode_composes_with_dmdt_kernel(spark):
-    """Eroded curve -> dmdt map == numpy kernel on the eroded arrays (the
+    """Eroded curve -> dmdt_maps == numpy kernel on the eroded arrays (the
     points_batches composition: per-epoch erosion feeding the map)."""
     from light_curve_python_spark.operators.dmdt import erode_observations
+    from light_curve_python_spark.operators.spectral import dmdt_maps
     df = _erode_df(spark, 3, 12)
     eroded = erode_observations(df, "doc_id", drop_nobs=0.25, seed=11)
     dt_edges = log_dt_edges(-1.0, 1.2, 6)
     dm_edges = linear_edges(-400.0, 400.0, 8)
-    got = dmdt_points_sql(eroded, entity="doc_id",
-                          dt_edges=list(dt_edges), dm_edges=list(dm_edges)) \
-        .toPandas()
+    got = dmdt_maps(eroded, dt_edges=dt_edges, dm_edges=dm_edges) \
+        .toPandas().set_index("doc_id")
     pdf = eroded.toPandas().sort_values(["doc_id", "t"])
+    assert sorted(got.index) == sorted(pdf.doc_id.unique())
     for e, grp in pdf.groupby("doc_id"):
         want = dmdt_points_kernel(grp.t.to_numpy(), grp.m.to_numpy(),
                                   dt_edges, dm_edges)
-        sub = got[got.doc_id == e]
-        dense = np.zeros_like(want)
-        dense[sub.dt_bin.to_numpy(), sub.dm_bin.to_numpy()] = \
-            sub.pair_count.to_numpy()
-        np.testing.assert_array_equal(dense, want)
+        assert want.sum() > 0
+        np.testing.assert_array_equal(
+            np.asarray(got.loc[e, "dmdt"]).reshape(want.shape), want)
 
 
 def test_erode_null_keys_hash_deterministically(spark):

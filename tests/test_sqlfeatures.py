@@ -40,13 +40,6 @@ def test_simple_stats(spark, obs):
     _compare(S.simple_stats(obs, "doc_id", "t", "m"), ex.extract(obs))
 
 
-def test_quantile_family(spark, obs):
-    ex = FeatureExtractor(
-        ["inter_percentile_range", "percent_difference_magnitude_percentile",
-         "magnitude_percentage_ratio", "median_buffer_range_percentage"])
-    _compare(S.quantile_family(obs, "doc_id", "m"), ex.extract(obs))
-
-
 def test_dispersion(spark, obs):
     ex = FeatureExtractor(["beyond_n_std", "eta", "eta_e", "maximum_slope",
                            "cusum", "lafler_kinman_string_length"])
