@@ -16,6 +16,8 @@ both sides so the driver's order-insensitive value-hash matches:
 from __future__ import annotations
 
 import functools
+import hashlib
+import io
 import os
 import tempfile
 import zipfile
@@ -28,8 +30,8 @@ from pyspark.sql import types as T
 from light_curve_python_spark.functions import sqlfeatures as SQ
 from light_curve_python_spark.operators.asof import asof_join
 from light_curve_python_spark.operators.bins import bin_series
-from light_curve_python_spark.operators.dedup import (pair_counts,
-                                                      posting_lists, shingle)
+from light_curve_python_spark.operators.dedup import (
+    nearest_neighbor_jaccard, shingle)
 from light_curve_python_spark.operators.extract import FeatureExtractor
 from light_curve_python_spark.operators.sessionize import session_stats
 from light_curve_python_spark.operators.windows import (
@@ -44,6 +46,30 @@ from light_curve_python_spark.operators.windows import (
 _SHIPPED: set = set()
 
 
+def _package_zip(pkg_dir: str) -> str:
+    """The package's ``.py`` files as a reproducible zip (sorted, fixed
+    timestamps) named by its content hash: drivers with different trees
+    never overwrite each other's file, which fails Spark tasks."""
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as z:
+        for full in sorted(os.path.join(root, f)
+                           for root, _dirs, files in os.walk(pkg_dir)
+                           for f in files if f.endswith(".py")):
+            rel = os.path.relpath(full, os.path.dirname(pkg_dir))
+            with open(full, "rb") as fh:
+                z.writestr(zipfile.ZipInfo(rel, (1980, 1, 1, 0, 0, 0)),
+                           fh.read())
+    data = buf.getvalue()
+    zpath = os.path.join(tempfile.gettempdir(), "lcps_pyfiles_"
+                         f"{hashlib.sha256(data).hexdigest()[:16]}.zip")
+    if not os.path.exists(zpath):
+        fd, tmp = tempfile.mkstemp(suffix=".zip", dir=os.path.dirname(zpath))
+        with os.fdopen(fd, "wb") as fh:
+            fh.write(data)
+        os.replace(tmp, zpath)
+    return zpath
+
+
 def _ensure_pyfiles(spark: SparkSession) -> None:
     sc = spark.sparkContext
     # keyed by applicationId, NOT id(sc): CPython recycles object ids
@@ -52,16 +78,7 @@ def _ensure_pyfiles(spark: SparkSession) -> None:
     if sc.applicationId in _SHIPPED:
         return
     import light_curve_python_spark as pkg
-    pkg_dir = os.path.dirname(os.path.abspath(pkg.__file__))
-    zpath = os.path.join(tempfile.gettempdir(), "lcps_pyfiles.zip")
-    with zipfile.ZipFile(zpath, "w") as z:
-        for root, _dirs, files in os.walk(pkg_dir):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                    z.write(full, rel)
-    sc.addPyFile(zpath)
+    sc.addPyFile(_package_zip(os.path.dirname(os.path.abspath(pkg.__file__))))
     _SHIPPED.add(sc.applicationId)
 
 
@@ -911,105 +928,16 @@ MAX_SHINGLE_DF = 400   # > any df in the test corpora; the PATH is exercised
 
 
 def q_nearest_neighbor_jaccard(spark, sf_dir):
-    """Per-doc nearest near-duplicate by 3-gram shingle Jaccard, candidates
-    generated by an inverted shingle index (pairs must share >= 1 shingle —
-    a guaranteed superset of pairs with jaccard > 0).
-
-    A composition of the dedup operators:
-    - ``shingle`` (per-doc distinct word 3-grams) hashed to 8-byte
-      ``xxhash64`` keys — Jaccard over per-doc distinct hashed shingles
-      equals Jaccard over the strings; a collision would be caught by the
-      DuckDB twin, which keeps the strings;
-    - the pair engine: ``posting_lists`` with the df prune (identical in
-      the DuckDB twin, so parity holds whether or not the cap fires), then
-      ``pair_counts`` for every candidate pair's |A ∩ B|;
-    - per-doc sizes over the PRUNED lists (the twin's ``sizes`` CTE);
-    - top-1 per doc through the exact strong/single split below, so the
-      sorting argmax sees pairs sharing >= 2 shingles plus one
-      single-shingle candidate per doc, not every pair."""
+    """Per-doc nearest near-duplicate by 3-gram shingle Jaccard over the
+    df-pruned inverted index (``dedup.nearest_neighbor_jaccard``).  Shingles
+    are hashed to ``xxhash64`` keys: Jaccard over per-doc distinct hashes
+    equals Jaccard over the strings, and a collision would show against
+    the DuckDB twin, which keeps the strings."""
     sh = shingle(_docs(spark, sf_dir), k=SHINGLE_K) \
         .select("doc_id", F.xxhash64("sh").alias("sh"))
-    posts, _, stats = posting_lists(sh, "doc_id", MAX_SHINGLE_DF)
-    # per-doc surviving-shingle counts: dimension-scale (one row per doc),
-    # broadcast-hinted below — Catalyst's pre-AQE size estimate for the
-    # exploded pair aggregate is unreliable and it otherwise tries to
-    # broadcast the PAIR side (observed OOM at sf1)
-    sizes = (posts.select(F.explode("ds").alias("doc_id"))
-             .groupBy("doc_id").agg(F.count("*").alias("n_sh")))
-    pairs = pair_counts(posts, stats).select(
-        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "inter")
-    # EXACT top-1 split (the min(struct) argmax plans as a SortAggregate,
-    # so feeding it all ~10^8 candidate pairs sorts them; the split cuts
-    # its input ~10x without changing any result):
-    # (a) pairs sharing >= 2 shingles keep their exact jaccard;
-    # (b) for inter == 1 pairs, jaccard = 1/(na + nb - 1) is monotone in
-    #     (nb, doc_b) alone, so each doc's best single-shingle candidate
-    #     is the (min n_sh, then min doc_id) OTHER member over its
-    #     posting lists — computable per list (top-2 members suffice)
-    #     with no pair fan-out.  Every candidate below the per-doc best
-    #     is dominated; an inter >= 2 pair surfacing in (b) carries an
-    #     UNDERESTIMATE of its exact jaccard (1 <= inter), so it is
-    #     strictly dominated by its own exact entry from (a) and can
-    #     never win or tie-break wrongly.  min over (a) union (b) is
-    #     therefore the min over all true candidates.
-    strong = (pairs.filter(F.col("inter") >= 2)
-              .join(F.broadcast(sizes.withColumnRenamed("doc_id", "doc_a")
-                                .withColumnRenamed("n_sh", "na")), "doc_a")
-              .join(F.broadcast(sizes.withColumnRenamed("doc_id", "doc_b")
-                                .withColumnRenamed("n_sh", "nb")), "doc_b")
-              .withColumn("jaccard", F.col("inter")
-                          / (F.col("na") + F.col("nb") - F.col("inter"))))
-    sym = (strong.select(F.explode(F.array(
-        F.struct(F.col("doc_a").alias("d"), F.col("doc_b").alias("o"),
-                 F.col("jaccard").alias("j")),
-        F.struct(F.col("doc_b").alias("d"), F.col("doc_a").alias("o"),
-                 F.col("jaccard").alias("j")))).alias("_z"))
-        .select(F.col("_z.d").alias("d"), F.col("_z.o").alias("o"),
-                F.col("_z.j").alias("j")))
-    mem = (posts.select("sh", F.explode("ds").alias("doc_id"))
-           .join(F.broadcast(sizes), "doc_id"))
-    # top-2 members per posting list via ONE hash aggregation:
-    # array_sort over struct(n_sh, doc_id) is the same lexicographic
-    # total order the former row_number window used, so sorted[0]/[1]
-    # equal its min/max over the rn<=2 rows and least(count, 2) equals
-    # its post-filter count — but the partition sort + window machinery
-    # over the exploded membership rows is gone (measured min-of-3 on
-    # the sf1-like mirror: 2.89 -> 1.51 s for the whole single-shingle
-    # branch, digests bit-identical).  _m2 is NULL only when the list
-    # has one member, and every consumer filters _c >= 2 first.
-    top2 = (mem.groupBy("sh").agg(
-        F.slice(F.array_sort(F.collect_list(F.struct("n_sh", "doc_id"))),
-                1, 2).alias("_t"),
-        F.count("*").alias("_cc"))
-        .select("sh", F.col("_t")[0].alias("_m1"),
-                F.col("_t")[1].alias("_m2"),
-                F.least(F.col("_cc"), F.lit(2)).cast("bigint").alias("_c")))
-    # NO broadcast hint on top2: it is one row per distinct SHINGLE —
-    # O(corpus tokens), not dimension-scale — so AQE must stay free to
-    # pick a shuffle join at real corpus size (it broadcasts here)
-    single = (mem.join(top2.filter(F.col("_c") >= 2), "sh")
-              .withColumn("_best", F.when(
-                  F.col("_m1.doc_id") == F.col("doc_id"),
-                  F.col("_m2")).otherwise(F.col("_m1")))
-              # 1/(na+nb-1) in the exact arithmetic of the inter==1 pair
-              # jaccard: long numerator / long denominator
-              .select(F.col("doc_id").alias("d"),
-                      F.col("_best.doc_id").alias("o"),
-                      (F.lit(1).cast("bigint")
-                       / (F.col("n_sh") + F.col("_best.n_sh")
-                          - F.lit(1).cast("bigint"))).alias("j"))
-              .groupBy("d").agg(F.min(F.struct(
-                  (-F.col("j")).alias("nj"),
-                  F.col("o").alias("doc_b"))).alias("_m"))
-              .select("d", (-F.col("_m.nj")).alias("j"),
-                      F.col("_m.doc_b").alias("o")))
-    best = (sym.unionByName(single.select("d", "o", "j"))
-            .groupBy("d")
-            .agg(F.min(F.struct((-F.col("j")).alias("nj"),
-                                F.col("o").alias("doc_b"))).alias("_m")))
-    return best.select(F.col("d").alias("doc_id"),
-                       F.col("_m.doc_b").alias("nearest_doc_id"),
-                       _r(-F.col("_m.nj"), 6).alias("jaccard"))
+    nn = nearest_neighbor_jaccard(sh, "doc_id", MAX_SHINGLE_DF)
+    return nn.select("doc_id", "nearest_doc_id",
+                     _r("jaccard", 6).alias("jaccard"))
 
 
 SQL_NN_JACCARD = f"""

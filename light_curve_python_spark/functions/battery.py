@@ -229,7 +229,6 @@ class PrefixBattery:
                                 k.key in self.LOOP_KEYS
                                 for k in kernels)
         self.needs_loop = any(k.key in self.LOOP_KEYS for k in kernels)
-        self.fallback = [k for k in kernels if k.key not in self.SUPPORTED]
 
     # ---- public ----------------------------------------------------------
 
@@ -703,8 +702,6 @@ class PrefixBattery:
     def _eval_kernel(self, kern: Kernel, ctx: _Ctx, ss: dict) -> np.ndarray:
         key = kern.key
         k = ctx.k
-        if key in {k_.key for k_ in self.fallback}:
-            return self._eval_fallback(kern, ctx)
         if key == "observation_count":
             return k.copy()
         if key == "mean":

@@ -156,11 +156,11 @@ def test_oracle_sql_order_matches_queries():
 
 
 def test_nn_jaccard_wide_id_fallback(spark, sf_dir, tmp_path):
-    """The packed-pair-key fast path in q_nearest_neighbor_jaccard is
-    gated on every doc id fitting 32 bits; ids at/above 2^31 must take
-    the exact two-column aggregation, and int32 ids the packed path with
-    the ids widened before the shift — both must still match the
-    (unchanged) DuckDB twin byte-for-byte."""
+    """dedup.pair_counts, under q_nearest_neighbor_jaccard, gates its
+    packed-pair-key fast path on every doc id fitting 32 bits; ids
+    at/above 2^31 must take the exact two-column aggregation, and int32
+    ids the packed path with the ids widened before the shift — both
+    must still match the (unchanged) DuckDB twin byte-for-byte."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq

@@ -16,6 +16,7 @@ from light_curve_python_spark.operators.dedup import (
     exact_dedup,
     lsh_candidates,
     minhash_signatures,
+    nearest_neighbor_jaccard,
     ngram_jaccard_pairs,
     shingle,
     simhash64,
@@ -310,15 +311,20 @@ def test_ngram_jaccard_hot_shingle_bounded(spark):
     assert len(all_pairs) == 1
 
 
-def _jaccard_reference(rows, k, threshold, max_df):
-    """Serial set-Jaccard: pairs sharing a word k-gram whose document
-    frequency is <= max_df (any shared k-gram when None), scored on the
-    FULL k-gram sets."""
+def _kgram_sets(rows, k):
+    """({id: set of word k-grams}, Counter of k-gram document frequency)."""
     sets = {}
     for i, text in rows:
         ws = text.split()
         sets[i] = {" ".join(ws[j:j + k]) for j in range(len(ws) - k + 1)}
-    df = Counter(s for v in sets.values() for s in v)
+    return sets, Counter(s for v in sets.values() for s in v)
+
+
+def _jaccard_reference(rows, k, threshold, max_df):
+    """Serial set-Jaccard: pairs sharing a word k-gram whose document
+    frequency is <= max_df (any shared k-gram when None), scored on the
+    FULL k-gram sets."""
+    sets, df = _kgram_sets(rows, k)
     out = {}
     for a, b in itertools.combinations(sorted(sets), 2):
         shared = sets[a] & sets[b]
@@ -330,6 +336,24 @@ def _jaccard_reference(rows, k, threshold, max_df):
     return out
 
 
+def _nearest_reference(rows, k, max_df):
+    """Serial top-1: {id: (nearest id, jaccard)} over the k-gram sets
+    restricted to k-grams of document frequency <= max_df — max Jaccard,
+    then min neighbour id (permutations of a sorted list visit each
+    doc's neighbours in ascending order, so ``>`` keeps the first tie)."""
+    sets, df = _kgram_sets(rows, k)
+    kept = {i: {s for s in v if max_df is None or df[s] <= max_df}
+            for i, v in sets.items()}
+    best = {}
+    for a, b in itertools.permutations(sorted(kept), 2):
+        inter = len(kept[a] & kept[b])
+        if inter:
+            j = inter / (len(kept[a]) + len(kept[b]) - inter)
+            if a not in best or j > best[a][1]:
+                best[a] = (b, j)
+    return best
+
+
 @pytest.mark.parametrize("generator", ["explode", "hof"])
 @pytest.mark.parametrize("ids", ["int32", "negative", "wide", "string"])
 def test_ngram_jaccard_pairs_every_id_width(spark, monkeypatch, ids,
@@ -338,7 +362,9 @@ def test_ngram_jaccard_pairs_every_id_width(spark, monkeypatch, ids,
     behind the double explode; negative, >= 2^31 and string ids, and
     every id behind the HOF generator, take the two-column key.  Every
     case, in exact and capped mode, must equal a serial set-Jaccard
-    reference."""
+    reference; ``nearest_neighbor_jaccard`` must equal a serial top-1
+    over the df-pruned sets, ties (this 6-letter corpus has some) to the
+    smaller neighbour id."""
     if generator == "hof":
         # the 24-member "hot tail" list is longer than this threshold
         monkeypatch.setattr(dedup, "HOF_MIN_LIST", 8)
@@ -362,6 +388,10 @@ def test_ngram_jaccard_pairs_every_id_width(spark, monkeypatch, ids,
         assert want and set(got) == set(want), (cap, got, want)
         for pair, j in want.items():
             assert got[pair] == pytest.approx(j, abs=1e-12), (cap, pair)
+        nn = nearest_neighbor_jaccard(shingle(df, k=2), "doc_id", cap)
+        assert nn.schema["nearest_doc_id"].dataType.simpleString() == id_type
+        got = {r.doc_id: (r.nearest_doc_id, r.jaccard) for r in nn.collect()}
+        assert got == _nearest_reference(rows, 2, cap), cap
 
 
 def test_exact_dedup_null_columns_distinct(spark):

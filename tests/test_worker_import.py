@@ -1,16 +1,20 @@
-"""The package root's stat-guarded ``zipimporter.invalidate_caches``
-(``light_curve_python_spark/_zipguard.py``), without Spark.
+"""The package zip shipped to Python workers, without Spark: its name
+and bytes (``__spark_entry__._package_zip``), and the package root's
+stat-guarded ``zipimporter.invalidate_caches``
+(``light_curve_python_spark/_zipguard.py``).
 
-Each case runs in a fresh interpreter with a throwaway package zip on
-``sys.path`` (imported through three zipimporters: the archive, its
+Each guard case runs in a fresh interpreter with a throwaway package zip
+on ``sys.path`` (imported through three zipimporters: the archive, its
 package and a subpackage) and counts ``zipimport._read_directory`` calls
 on that archive per ``importlib.invalidate_caches()``.
 """
 
 import json
 import os
+import shutil
 import subprocess
 import sys
+import tempfile
 import zipfile
 
 import pytest
@@ -128,3 +132,40 @@ def test_stock_method_outside_workers_and_on_313(tmp_path, mode):
     assert not out["reinstall"] and out["reinstall_same"]
     assert out["unchanged"] == [out["before_import"]] * 3
     assert out["extra"] == 7
+
+
+def test_package_zip_is_named_by_its_content(tmp_path, monkeypatch):
+    """Two copies of the package tree with different mtimes zip to the
+    same path and bytes; a one-byte source change gives another path, so
+    drivers on one host with different trees never share a zip file."""
+    import __spark_entry__ as E
+
+    out = tmp_path / "tmp"
+    out.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(out))
+    trees = []
+    for name, mtime in (("a", 1e9), ("b", 2e9)):
+        dst = tmp_path / name / "light_curve_python_spark"
+        shutil.copytree(os.path.join(REPO, "light_curve_python_spark"), dst,
+                        ignore=shutil.ignore_patterns("__pycache__"))
+        for root, _dirs, files in os.walk(dst):
+            for f in files:
+                os.utime(os.path.join(root, f), (mtime, mtime))
+        trees.append(dst)
+    zips = []
+    for tree in trees:
+        zpath = E._package_zip(str(tree))
+        with open(zpath, "rb") as fh:
+            zips.append((zpath, fh.read()))
+        os.remove(zpath)
+    assert zips[0] == zips[1]
+    zpath = E._package_zip(str(trees[0]))
+    with zipfile.ZipFile(zpath) as z:
+        assert "light_curve_python_spark/__init__.py" in z.namelist()
+    init = trees[1] / "__init__.py"
+    init.write_bytes(init.read_bytes() + b" ")
+    changed = E._package_zip(str(trees[1]))
+    assert changed != zpath
+    # written through a temp file and os.replace: only the zips remain
+    assert sorted(os.listdir(out)) == sorted(
+        os.path.basename(p) for p in (zpath, changed))
