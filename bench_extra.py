@@ -19,7 +19,9 @@ skips the headline datagen and warm-up.
 times one engine ``mapInArrow`` (``grouped.map_curves``, a trivial
 callback) over the same 4096 entities at 4 and 64 partitions, min-of-N,
 and reports the seconds each extra Python task costs one core: the
-fixed per-task floor of the Python workers, not kernel time.
+fixed per-task floor of the Python workers, not kernel time.  Its
+``python_transport`` ("unix" or "tcp", from the session conf) names the
+executor-worker socket the tasks used.
 """
 from __future__ import annotations
 
@@ -113,6 +115,10 @@ def main():
     floor = {}
     if FLOOR_PROBE in only:
         runs, floor["s_per_task_core"] = _task_floor(spark, n_runs)
+        uds = spark.sparkContext.getConf().get(
+            "spark.python.unix.domain.socket.enabled", "false")
+        floor["python_transport"] = "unix" if uds.lower() == "true" \
+            else "tcp"
         for p, draws in runs.items():
             runs_log[f"{FLOOR_PROBE}.p{p}"] = draws
             results[f"{FLOOR_PROBE}.p{p}"] = min(draws)

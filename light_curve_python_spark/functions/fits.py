@@ -23,7 +23,12 @@ non-finite => fill_value.
 
 from __future__ import annotations
 
+import contextlib
+import ctypes
+import functools
+import glob
 import math
+import os
 from typing import Callable, Optional, Sequence, Tuple
 
 import numpy as np
@@ -182,6 +187,45 @@ def _make_residuals(model: Callable, t: np.ndarray, m: np.ndarray,
     return residuals
 
 
+@functools.lru_cache(maxsize=None)
+def _openblas_threads():
+    """(get, set) of the thread count of numpy's bundled OpenBLAS (the
+    wheel's ``numpy.libs/libopenblas64_*``, 64-bit interface), or None
+    under any other BLAS."""
+    libs = glob.glob(os.path.join(os.path.dirname(np.__file__), os.pardir,
+                                  "numpy.libs", "libopenblas64_*.so*"))
+    if len(libs) != 1:
+        return None
+    try:
+        # numpy already loaded this file: dlopen returns the same handle
+        lib = ctypes.CDLL(libs[0])
+        get = lib.openblas_get_num_threads64_
+        set_ = lib.openblas_set_num_threads64_
+    except (OSError, AttributeError):
+        return None
+    get.argtypes, get.restype = [], ctypes.c_int
+    set_.argtypes, set_.restype = [ctypes.c_int], None
+    return get, set_
+
+
+@contextlib.contextmanager
+def _one_blas_thread():
+    """Run the block on one OpenBLAS thread and restore the count after.
+    A threaded GEMM/solve sums in another order, so the same fit would
+    differ in the last bits with the host's BLAS thread count; on one
+    thread it is bitwise reproducible.  No-op under any other BLAS."""
+    handles = _openblas_threads()
+    n = handles[0]() if handles else 1
+    if n != 1:
+        handles[1](1)
+    try:
+        yield
+    finally:
+        if n != 1:
+            handles[1](n)
+
+
+@_one_blas_thread()
 def levenberg_marquardt(model: Callable, t: np.ndarray, m: np.ndarray,
                         w: np.ndarray, p0: np.ndarray,
                         lower: np.ndarray, upper: np.ndarray,
@@ -277,6 +321,7 @@ def levenberg_marquardt(model: Callable, t: np.ndarray, m: np.ndarray,
     return p, chi2
 
 
+@_one_blas_thread()
 def lm_errors(model: Callable, t: np.ndarray, m: np.ndarray,
               w: np.ndarray, p: np.ndarray,
               ln_priors: Optional[Sequence["LnPrior"]] = None,

@@ -22,6 +22,7 @@ from typing import Callable, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 __all__ = ["CheckpointedRun"]
 
@@ -165,24 +166,37 @@ class CheckpointedRun:
         return executed
 
     @staticmethod
-    def _parquet_rows(path: str) -> int:
-        """Rows of a written parquet directory, summed from the part files'
-        footers — no Spark job re-reads what was just written.  Spark's
+    def _part_files(path: str) -> List[str]:
+        """Data files of a written parquet directory: Spark's
         ``_``/``.``-prefixed side files (``_SUCCESS``, checksums) are not
         data."""
+        return sorted(os.path.join(path, f) for f in os.listdir(path)
+                      if not f.startswith(("_", ".")))
+
+    @classmethod
+    def _parquet_rows(cls, path: str) -> int:
+        """Rows of a written parquet directory, summed from the part files'
+        footers — no Spark job re-reads what was just written."""
         import pyarrow.parquet as pq
-        return sum(pq.read_metadata(os.path.join(path, f)).num_rows
-                   for f in os.listdir(path)
-                   if not f.startswith(("_", ".")))
+        return sum(pq.read_metadata(f).num_rows
+                   for f in cls._part_files(path))
 
     def read(self, spark: SparkSession) -> DataFrame:
-        paths = [self._spark_prefix
-                 + os.path.join(self.output_path, f"bucket={b}")
-                 for b in self.completed_buckets()]
-        if not paths:
+        import pyarrow.parquet as pq
+        done = self.completed_buckets()
+        if not done:
             # spark.read.parquet() with zero paths raises an unrelated
             # schema-inference error — name the real cause
             raise ValueError(
                 f"no committed buckets under {self.output_path!r} "
                 "(fresh run, or crashed before the first commit)")
-        return spark.read.parquet(*paths)
+        bpaths = [os.path.join(self.output_path, f"bucket={b}")
+                  for b in done]
+        # Spark writes its schema into every part file's footer (an empty
+        # bucket still gets one schema-only file), so the reader needs no
+        # schema-inference job over the buckets
+        meta = pq.read_metadata(self._part_files(bpaths[0])[0]).metadata
+        schema = T.StructType.fromJson(json.loads(
+            meta[b"org.apache.spark.sql.parquet.row.metadata"]))
+        return spark.read.schema(schema).parquet(
+            *(self._spark_prefix + p for p in bpaths))

@@ -473,3 +473,36 @@ def test_review_fixes_transform_domain_parity(spark):
         for g, w in zip(got, want):
             assert g is not None
             assert (np.isnan(g) and np.isnan(w)) or g == w, (name, g, w)
+
+
+def test_fits_are_bitwise_equal_across_blas_thread_counts():
+    """The LM solve and its errors run on one OpenBLAS thread, so a fit
+    does not change in its last bits with the host's BLAS thread count
+    (a threaded GEMM sums in another order); the caller's count is
+    restored afterwards."""
+    from light_curve_python_spark.functions.rainbow import rainbow_fit_arrays
+    handles = FT._openblas_threads()
+    if handles is None:
+        pytest.skip("numpy is not on its bundled OpenBLAS")
+    get, set_ = handles
+    t, m, s = _noisy(FT.villar_model,
+                     (80.0, 10.0, 30.0, 25.0, 0.02, 3.0, 15.0), n=2000)
+    band = np.where(np.arange(len(t)) % 2 == 0, "g", "r")
+    flux = m - m.min() + 1.0
+    villar = make_kernel("villar_fit")
+    before = get()
+    outs = {}
+    try:
+        for n in (1, 4):
+            set_(n)
+            outs[n] = (
+                evaluate_kernel(villar, t, m, s, fill_value=None),
+                rainbow_fit_arrays(t, flux, s, band,
+                                   {"g": 4770e-8, "r": 6231e-8},
+                                   with_errors=True))
+            assert get() == n
+    finally:
+        set_(before)
+    for one, four in zip(outs[1], outs[4]):
+        assert np.isfinite(one).all()
+        assert one.tobytes() == four.tobytes()

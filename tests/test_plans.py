@@ -12,7 +12,9 @@ against .explain output, not taken on faith.
 - similarity searches score pairs in the JVM, with no per-pair Python
   UDF;
 - an engine ``mapInArrow`` guards its Python workers' per-task zip
-  re-read.
+  re-read;
+- a checkpoint read takes its schema from a part-file footer, with no
+  schema-inference job.
 """
 
 import re
@@ -376,3 +378,46 @@ def test_checkpoint_resume_guards(spark, tmp_path):
     run3 = CheckpointedRun("file://" + out3, "doc_id", n_buckets=2)
     run3.run(probes, lambda s: s.withColumn("f", F.col("ts")))
     assert run3.read(spark).count() == probes.count()
+
+
+def test_checkpoint_read_takes_the_schema_from_a_footer(spark, tmp_path):
+    """``CheckpointedRun.read`` takes its schema from the first committed
+    bucket's part-file footer (here an empty bucket's schema-only file):
+    same rows and schema as a plain ``spark.read.parquet``, one Spark job
+    fewer (no schema-inference job)."""
+    from light_curve_python_spark.datagen import generate_probes
+    from light_curve_python_spark.plans.checkpoint import CheckpointedRun
+    probes = generate_probes(spark, 6, probes_per_entity=2, seed=2) \
+        .select("doc_id", "ts")
+    calls = []
+
+    def compute(s):
+        calls.append(1)
+        out = s.withColumn("f", F.array(F.col("ts")))
+        return out.limit(0) if len(calls) == 1 else out
+
+    out = str(tmp_path / "run")
+    run = CheckpointedRun(out, "doc_id", n_buckets=4)
+    run.run(probes, compute)
+    assert run.completed_buckets() == [0, 1, 2, 3]
+    assert CheckpointedRun._parquet_rows(out + "/bucket=0") == 0
+    paths = [f"{out}/bucket={b}" for b in range(4)]
+    sc = spark.sparkContext
+    got = {}
+    try:
+        for name, read in (("footer", lambda: run.read(spark)),
+                           ("inferred",
+                            lambda: spark.read.parquet(*paths))):
+            sc.setJobGroup(f"checkpoint_read_{name}", name)
+            df = read()
+            got[name] = (df.schema, sorted(df.collect()), len(
+                sc.statusTracker().getJobIdsForGroup(
+                    f"checkpoint_read_{name}")))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got["footer"][0] == got["inferred"][0]
+    assert got["footer"][1] == got["inferred"][1]
+    assert 0 < len(got["footer"][1]) == sum(
+        CheckpointedRun._parquet_rows(p) for p in paths)
+    assert got["footer"][2] == got["inferred"][2] - 1, got
