@@ -151,7 +151,14 @@ def _hazen_sorted(sm: np.ndarray, qs) -> np.ndarray:
 @dataclass(frozen=True)
 class Kernel:
     """One feature extractor: a pure function of a sorted window's
-    ``WindowContext``."""
+    ``WindowContext``.
+
+    A kernel built by :func:`make_kernel` pickles as that call, by
+    registry key and arguments: its ``func`` is a closure that cloudpickle
+    would otherwise ship by value (a full battery is ~14 KB per plan), and
+    the factories are deterministic, so the rebuilt kernel is the same
+    function.  A kernel constructed directly, or derived with
+    ``dataclasses.replace``, has no such recipe and pickles by value."""
 
     key: str                      # canonical registry key, e.g. "beyond_n_std"
     names: Tuple[str, ...]        # output column names (len == size)
@@ -160,10 +167,19 @@ class Kernel:
     needs_sigma: bool = False
     needs_t: bool = True          # False => column pruning may drop t
     params: dict = field(default_factory=dict)
+    # (key, kwargs) of the make_kernel call that built this kernel; not an
+    # init field, so dataclasses.replace leaves a derived kernel without it
+    _spec: Optional[tuple] = field(default=None, init=False, repr=False,
+                                   compare=False)
 
     @property
     def size(self) -> int:
         return len(self.names)
+
+    def __reduce_ex__(self, protocol):
+        if self._spec is None:
+            return super().__reduce_ex__(protocol)
+        return _kernel_from_spec, self._spec
 
 
 def on_arrays(fn) -> Callable[[WindowContext], np.ndarray]:
@@ -196,7 +212,14 @@ def make_kernel(key: str, **params) -> Kernel:
     ensure_lazy_factories(key)
     if key not in KERNEL_FACTORIES:
         raise ValueError(f"unknown feature: {key}")
-    return KERNEL_FACTORIES[key](**params)
+    kernel = KERNEL_FACTORIES[key](**params)
+    object.__setattr__(kernel, "_spec", (key, params))
+    return kernel
+
+
+def _kernel_from_spec(key: str, params: dict) -> Kernel:
+    """Unpickle a registry kernel (see ``Kernel.__reduce_ex__``)."""
+    return make_kernel(key, **params)
 
 
 # --------------------------------------------------------------------------

@@ -255,7 +255,7 @@ class FeatureExtractor:
         import pyarrow as pa
 
         this = self
-        feature_names = self.names
+        feature_fields = [pa.field(n, pa.float64()) for n in self.names]
         battery = (PrefixBattery(self.kernels, self.fill_value)
                    if horizon is None and self.bands is None else None)
         probe_names = [f.name for f in probes.schema.fields]
@@ -265,9 +265,7 @@ class FeatureExtractor:
                                                        copy=False)
 
         def fn(obs_t: "pa.Table", probes_t: "pa.Table") -> "pa.Table":
-            out_schema = pa.schema(
-                list(probes_t.schema)
-                + [pa.field(n, pa.float64()) for n in feature_names])
+            out_schema = pa.schema(list(probes_t.schema) + feature_fields)
             if probes_t.num_rows == 0:
                 return out_schema.empty_table()
             t = column(obs_t, t_col)
@@ -300,7 +298,7 @@ class FeatureExtractor:
                 codes = (this._band_codes(
                     obs_t.column(band_col).to_numpy()[order])
                     if this.bands is not None else None)
-                feats = np.empty((len(ts), len(feature_names)))
+                feats = np.empty((len(ts), len(feature_fields)))
                 for j, (lo, hi) in enumerate(zip(starts, ends)):
                     sl = slice(lo, hi)
                     feats[j] = this._eval(
@@ -309,7 +307,7 @@ class FeatureExtractor:
             cols = [probes_t.column(n).combine_chunks()
                     for n in probe_names] + \
                    [pa.array(feats[:, i], from_pandas=True)
-                    for i in range(len(feature_names))]
+                    for i in range(len(feature_fields))]
             return pa.Table.from_arrays(cols, schema=out_schema)
 
         grouped = obs_p.groupby(*group_keys).cogroup(

@@ -21,6 +21,26 @@ directory longer than 64 bytes also keeps TCP.  ``extra_conf`` is applied
 last and can set either key.  A daemon killed before its stdin-EOF/SIGTERM
 cleanup leaves its ``.<uuid>.sock`` file behind in that directory; nothing
 reuses or removes it.
+
+Sorted buckets feed the PIT cogroup without a Sort.  A bucketed table
+declared ``SORTED BY (doc_id, t)`` holds each bucket sorted by its entity
+key, the order ``applyInArrow``'s cogroup asks of its inputs, but by
+default Spark ignores that and sorts every observation row again.
+``spark.sql.legacy.bucketedTableScan.outputOrdering`` makes the scan
+report the declared order.  It is safe to set unconditionally: Spark
+reports the order only when every bucket of the scan is a single file
+(one sorted file is sorted; several files of one bucket together are
+not).  So the ``Sort`` stays on a side whose buckets hold several files,
+which is what ``bucketBy(n, key).sortBy(...).saveAsTable`` writes from a
+frame not partitioned by the key, and on a side with no ``SORTED BY``
+(e.g. a probe table bucketed but not declared sorted).  Writing
+``repartition(n, key)`` before ``bucketBy(n, key)`` gives one file per
+bucket.  Where the Sort goes, so do its sort buffers: on the perfbench
+``pit_features`` workload (4-core host, 3 pairs) this setting alone took
+``job_s.p50`` 0.374 → 0.359 s and peak RSS 1745 → 1693 MB (medians).
+Spark trusts the declaration: a table registered over files that are not
+in fact sorted by its ``SORTED BY`` columns would split entities across
+cogroup calls.  Spark's own writers always sort.
 """
 
 from __future__ import annotations
@@ -151,6 +171,9 @@ def get_spark(master: Optional[str] = None,
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
+        # single-file buckets report their SORTED BY order, so the
+        # cogroup over a sorted bucketed table skips its Sort (docstring)
+        .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
         .config("spark.ui.enabled", "false")
     )
     local_dirs = _local_dirs()

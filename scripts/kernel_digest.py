@@ -1,11 +1,15 @@
 #!/usr/bin/env python
 """Bitwise digest of the feature kernels on a fixed golden corpus.
 
-Prints three sha256 digests over the uint64 views of their outputs:
+Prints five sha256 digests over the uint64 views of their outputs:
 
 - ``evaluate_many``: every curve of the corpus, whole-curve windows;
 - ``prefix_battery``: ``PrefixBattery.evaluate_prefixes`` on the same
   curves at nine prefix ends each (0 and n included);
+- ``prefix_nosigma``: the same battery with ``sigma=None``, so every
+  sigma-requiring kernel takes the battery's fill branch;
+- ``prefix_fill``: the same battery with ``fill_value=-1.0``, so every
+  filled block is told apart from a NaN output;
 - ``dmdt``: the dm-dt kernels (``dmdt_points_kernel``,
   ``dmdt_gausses_kernel``, ``count_dt_kernel``) on every curve.
 
@@ -83,14 +87,19 @@ def main(argv=None) -> None:
 
     ks = kernels(make_kernel)
     battery = PrefixBattery(ks)
-    many, prefix = hashlib.sha256(), hashlib.sha256()
+    filled = PrefixBattery(ks, fill_value=-1.0)
+    many, prefix, nosigma, fill = (hashlib.sha256() for _ in range(4))
     for t, m, s in corpus():
         many.update(evaluate_many(ks, t, m, s).view(np.uint64).tobytes())
         ends = np.unique(np.linspace(0, len(t), 9).astype(np.int64))
-        prefix.update(battery.evaluate_prefixes(t, m, s, ends)
-                      .view(np.uint64).tobytes())
+        for h, b, sigma in ((prefix, battery, s), (nosigma, battery, None),
+                            (fill, filled, s)):
+            h.update(b.evaluate_prefixes(t, m, sigma, ends)
+                     .view(np.uint64).tobytes())
     print(f"evaluate_many  {many.hexdigest()}")
     print(f"prefix_battery {prefix.hexdigest()}")
+    print(f"prefix_nosigma {nosigma.hexdigest()}")
+    print(f"prefix_fill    {fill.hexdigest()}")
     print(f"dmdt           {dmdt_digest()}")
 
 

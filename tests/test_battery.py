@@ -238,3 +238,29 @@ def test_deferred_flush_equals_unflushed(monkeypatch):
     flushed = b.evaluate_prefixes(t, m, s, ends)
     np.testing.assert_allclose(flushed, base, rtol=1e-9, atol=1e-12,
                                equal_nan=True)
+
+
+def test_fill_is_per_kernel_block_and_strict_names_first_kernel(curve):
+    """The one-pass fill fills a kernel's whole block in the rows where
+    its window is short or any of its outputs is non-finite, and nothing
+    else; with fill_value=None the first offending kernel, in kernel
+    order, is named."""
+    t, m, s = curve
+    ks = [make_kernel("mean"), make_kernel("linear_fit"),
+          make_kernel("weighted_mean"), make_kernel("kurtosis")]
+    ends = np.array([0, 2, 3, 50])
+    got = PrefixBattery(ks, fill_value=-5.0).evaluate_prefixes(t, m, s, ends)
+    for row, e in zip(got, ends):
+        want = evaluate_many(ks, t[:e], m[:e], s[:e], fill_value=-5.0)
+        np.testing.assert_allclose(row, want, rtol=1e-9)
+    nosig = PrefixBattery(ks, fill_value=-5.0).evaluate_prefixes(
+        t, m, None, ends)
+    assert (nosig[:, 1:5] == -5.0).all()
+    np.testing.assert_array_equal(nosig[:, [0, 5]], got[:, [0, 5]])
+
+    strict = PrefixBattery(ks, fill_value=None)
+    with pytest.raises(ValueError, match="^linear_fit: fill required"):
+        strict.evaluate_prefixes(t, m, s, ends[1:])
+    with pytest.raises(ValueError, match="^linear_fit: needs sigma"):
+        strict.evaluate_prefixes(t, m, None, ends[3:])
+    assert np.isfinite(strict.evaluate_prefixes(t, m, s, ends[3:])).all()

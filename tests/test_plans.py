@@ -5,7 +5,8 @@ against .explain output, not taken on faith.
 - multi-stage features reuse the entity partitioning (no extra Exchange);
 - small dimension joins broadcast;
 - parquet filters reach the scan (PushedFilters);
-- bucketed tables feed the cogroup with zero Exchanges;
+- bucketed tables feed the cogroup with zero Exchanges, and a sorted
+  table with one file per bucket feeds it with no Sort either;
 - a horizon PIT with a payload is a single Arrow cogroup;
 - the pair engine's stats ride its checkpoint job, and its pair stage
   has one size-derived exchange;
@@ -271,6 +272,61 @@ def test_bucketed_cogroup_zero_exchange(spark, tmp_path_factory, obs):
         spark.table("pt.p").groupby("doc_id")) \
         .applyInPandas(fn, "doc_id string, x double")
     assert _n_exchanges(g) == 0, _plan(g)
+
+
+def _cogroup_obs_side(plan: str) -> str:
+    """The first (observation-side) child subtree of the plan's
+    FlatMapCoGroupsInArrow: the lines marked ':' at the children's
+    column."""
+    lines = plan.splitlines()
+    i = next(j for j, ln in enumerate(lines)
+             if "FlatMapCoGroupsInArrow" in ln)
+    col = lines[i].index("FlatMapCoGroupsInArrow")
+    return "\n".join(ln for ln in lines[i + 1:]
+                     if ln[col:col + 1] == ":")
+
+
+@pytest.mark.parametrize("files", ["one_per_bucket", "two_in_a_bucket"])
+def test_sorted_single_file_buckets_skip_obs_sort(spark, tmp_path_factory,
+                                                  obs, files):
+    """A PIT over a bucketed table SORTED BY (doc_id, t) written as one
+    file per bucket takes the scan's order (no Sort on the observation
+    side); a second file in one bucket brings the Sort back.  The rows
+    equal the same PIT over plain parquet either way."""
+    from light_curve_python_spark.operators.extract import FeatureExtractor
+    wh = str(tmp_path_factory.mktemp("wh"))
+    table = f"pt.o_{files}"
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS pt LOCATION '{wh}'")
+    # repartition by the bucket key: each write task holds whole buckets,
+    # so each write adds one file per bucket
+    first, second = obs, None
+    if files == "two_in_a_bucket":
+        late = (F.col("doc_id") == "doc00000003") & (F.col("t") > 500.0)
+        first, second = obs.filter(~late), obs.filter(late)
+    for df, mode in ((first, "overwrite"), (second, "append")):
+        if df is not None:
+            df.repartition(4, "doc_id").write.mode(mode).format("parquet") \
+                .bucketBy(4, "doc_id").sortBy("doc_id", "t") \
+                .saveAsTable(table)
+    probes = generate_probes(spark, 10, 4, seed=1).select("doc_id", "ts")
+    probes.write.mode("overwrite").format("parquet") \
+        .bucketBy(4, "doc_id").saveAsTable("pt.p_sorted_obs")
+    plain = str(tmp_path_factory.mktemp("plain"))
+    obs.write.parquet(f"{plain}/obs")
+    probes.write.parquet(f"{plain}/probes")
+
+    ex = FeatureExtractor(["mean", "amplitude", "stetson_k", "eta_e"])
+    got = ex.extract_point_in_time(spark.table(table),
+                                   spark.table("pt.p_sorted_obs"))
+    want = ex.extract_point_in_time(spark.read.parquet(f"{plain}/obs"),
+                                    spark.read.parquet(f"{plain}/probes"))
+    plan = _plan(got)
+    assert _n_exchanges(got) == 0, plan
+    assert ("Sort [" in _cogroup_obs_side(plan)) \
+        == (files == "two_in_a_bucket"), plan
+    rows = sorted(got.collect())
+    assert len(rows) == 40
+    assert rows == sorted(want.collect())
 
 
 def test_feature_spec_roundtrips_priors_and_rainbow():
