@@ -174,23 +174,34 @@ def _ensure_synth(spark):
     if not _complete(probes_path):
         generate_probes(spark, N_ENTITIES, PROBES_PER_ENTITY, seed=42) \
             .write.mode("overwrite").parquet(probes_path)
-    wh = f"{CACHE}/sf{SF}/wh{N_BUCKETS}"
+    wh = _warehouse()
     if not (_complete(f"{wh}/obs_b") and _complete(f"{wh}/probes_b")):
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS bench LOCATION "
-                  f"'{CACHE}/sf{SF}/wh{N_BUCKETS}'")
-        spark.read.parquet(obs_path).write.mode("overwrite") \
+        spark.sql(f"CREATE DATABASE IF NOT EXISTS bench LOCATION '{wh}'")
+        # hash-partitioned like the buckets: each write task holds one
+        # bucket, so each bucket is one file and a SORTED BY scan reports
+        # its order (no obs-side Sort before the cogroup)
+        spark.read.parquet(obs_path).repartition(N_BUCKETS, "doc_id") \
+            .write.mode("overwrite") \
             .format("parquet").bucketBy(N_BUCKETS, "doc_id") \
             .sortBy("doc_id", "t").saveAsTable("bench.obs_b")
-        spark.read.parquet(probes_path).write.mode("overwrite") \
+        spark.read.parquet(probes_path).repartition(N_BUCKETS, "doc_id") \
+            .write.mode("overwrite") \
             .format("parquet").bucketBy(N_BUCKETS, "doc_id") \
             .saveAsTable("bench.probes_b")
     return obs_path, probes_path
 
 
+def _warehouse():
+    """Bucketed-table location: the bucket count and the one-file-per-
+    bucket layout are in the path, so no stale cache of another layout
+    is reused."""
+    return f"{CACHE}/sf{SF}/wh{N_BUCKETS}_1f"
+
+
 def _register_bucketed(spark):
     """Attach the pre-bucketed files as external tables (in-memory catalog
     => re-register per session)."""
-    wh = f"{CACHE}/sf{SF}/wh{N_BUCKETS}"  # bucket count in path: stale-cache-proof
+    wh = _warehouse()
     spark.sql("CREATE DATABASE IF NOT EXISTS bench LOCATION "
               f"'{wh}'")
     spark.sql(f"""
@@ -374,13 +385,13 @@ def _lsh_recall(spark) -> dict:
                     "n_cells": 16, "n_probe_cells": 4}}
 
 
-def _session(cores: int):
+def _session(cores: int, extra_conf=None):
     from light_curve_python_spark.session import get_spark
     import __spark_entry__ as E
     # 8 tasks/core: fine enough that the 10x group-cost variance (100 vs
     # 1000-obs entities) doesn't leave straggler tails
     s = get_spark(master=f"local[{cores}]", shuffle_partitions=cores * 8,
-                  app_name=f"lcps-bench-{cores}")
+                  app_name=f"lcps-bench-{cores}", extra_conf=extra_conf)
     E._ensure_pyfiles(s)  # executors import the package from any cwd
     return s
 

@@ -22,11 +22,21 @@ and reports the seconds each extra Python task costs one core: the
 fixed per-task floor of the Python workers, not kernel time.  Its
 ``python_transport`` ("unix" or "tcp", from the session conf) names the
 executor-worker socket the tasks used.
+
+``python_cold_start`` (also only when named, no datagen or warm-up)
+restarts the Spark context ``--n`` times per leg in one JVM and times
+each new context from ``get_spark`` to the end of its first Python job
+(the same ``map_curves`` job, at 4 partitions), min and median per leg.
+The ``cached`` leg is ``get_spark``'s own conf; the ``stock`` leg names
+``pyspark.daemon`` in ``extra_conf``, so its daemon compiles pyspark.zip
+from source on every start.  Legs alternate.  ``python_daemon`` ("cached"
+or "stock") names the daemon ``get_spark``'s own conf started.
 """
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -39,36 +49,59 @@ SKEW_PROBE = "ngram_jaccard_bounded"
 # per-task fixed cost of the Python workers (not a headline)
 FLOOR_PROBE = "python_task_floor"
 FLOOR_PARTITIONS = (4, 64)
+# seconds from a context restart to its first Python job (not a headline)
+COLD_PROBE = "python_cold_start"
+COLD_LEGS = {"cached": {},
+             "stock": {"spark.python.daemon.module": "pyspark.daemon"}}
 
 
 def _task_floor(spark, n_runs):
     """Min-of-``n_runs`` seconds of one ``map_curves`` job per partition
     count in FLOOR_PARTITIONS (draws alternate), and the extra seconds
     per extra task times the session's cores."""
+    lo, hi = FLOOR_PARTITIONS
+    bench._time_one(spark, lambda s: _floor_job(s, hi))  # start every worker
+    runs = {p: [] for p in FLOOR_PARTITIONS}
+    for _ in range(n_runs):
+        for p in FLOOR_PARTITIONS:
+            runs[p].append(round(
+                bench._time_one(spark, lambda s: _floor_job(s, p)), 3))
+    cores = spark.sparkContext.defaultParallelism
+    per_task_core = (min(runs[hi]) - min(runs[lo])) * cores / (hi - lo)
+    return runs, round(per_task_core, 4)
+
+
+def _floor_job(spark, parts):
+    """A trivial ``map_curves`` over 4096 32-point curves."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     from light_curve_python_spark.operators.grouped import map_curves
 
-    def job(parts):
-        curves = spark.range(4096, numPartitions=parts).select(
-            "id", F.transform(F.sequence(F.lit(1), F.lit(32)),
-                              lambda k: F.struct((F.col("id") + k)
-                                                 .cast("double").alias("t")))
-            .alias("c"))
-        return map_curves(curves, "c", [0],
-                          [T.StructField("mean", T.DoubleType())],
-                          lambda t: ([t.mean()],))
+    curves = spark.range(4096, numPartitions=parts).select(
+        "id", F.transform(F.sequence(F.lit(1), F.lit(32)),
+                          lambda k: F.struct((F.col("id") + k)
+                                             .cast("double").alias("t")))
+        .alias("c"))
+    return map_curves(curves, "c", [0],
+                      [T.StructField("mean", T.DoubleType())],
+                      lambda t: ([t.mean()],))
 
-    lo, hi = FLOOR_PARTITIONS
-    bench._time_one(spark, lambda s: job(hi))  # start every worker
-    runs = {p: [] for p in FLOOR_PARTITIONS}
+
+def _cold_start(spark, n_runs):
+    """Per leg of COLD_LEGS, ``n_runs`` draws of the seconds from a
+    context restart to the end of its first Python job; returns the draws
+    and the last session."""
+    bench._time_one(spark, lambda s: _floor_job(s, 4))  # warm the JVM
+    runs = {leg: [] for leg in COLD_LEGS}
     for _ in range(n_runs):
-        for p in FLOOR_PARTITIONS:
-            runs[p].append(round(bench._time_one(spark, lambda s: job(p)), 3))
-    cores = spark.sparkContext.defaultParallelism
-    per_task_core = (min(runs[hi]) - min(runs[lo])) * cores / (hi - lo)
-    return runs, round(per_task_core, 4)
+        for leg, extra in COLD_LEGS.items():
+            spark.stop()
+            t0 = time.perf_counter()
+            spark = bench._session(bench.CPUS, extra)
+            bench._force(_floor_job(spark, 4))
+            runs[leg].append(round(time.perf_counter() - t0, 3))
+    return runs, spark
 
 
 def main():
@@ -84,7 +117,7 @@ def main():
     # the headline table only closes over its arguments, so its names are
     # known before any session, datagen or warm-up work is paid for
     names = list(bench._headline_queries(None, None, None))
-    probes = {SKEW_PROBE, FLOOR_PROBE}
+    probes = {SKEW_PROBE, FLOOR_PROBE, COLD_PROBE}
     unknown = only - set(names) - probes
     if unknown:
         sys.exit(f"unknown queries: {sorted(unknown)}; "
@@ -122,6 +155,17 @@ def main():
         for p, draws in runs.items():
             runs_log[f"{FLOOR_PROBE}.p{p}"] = draws
             results[f"{FLOOR_PROBE}.p{p}"] = min(draws)
+    if COLD_PROBE in only:
+        daemon = spark.sparkContext.getConf().get(
+            "spark.python.daemon.module", "pyspark.daemon")
+        floor["python_daemon"] = "stock" if daemon == "pyspark.daemon" \
+            else "cached"
+        runs, spark = _cold_start(spark, n_runs)
+        for leg, draws in runs.items():
+            runs_log[f"{COLD_PROBE}.{leg}"] = draws
+            results[f"{COLD_PROBE}.{leg}"] = min(draws)
+        floor[f"{COLD_PROBE}_median"] = {
+            leg: statistics.median(draws) for leg, draws in runs.items()}
     spark.stop()
     print(json.dumps({"queries": results, "sf": bench.SF,
                       "queries_runs": runs_log, **floor,

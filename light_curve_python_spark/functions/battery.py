@@ -238,7 +238,6 @@ class PrefixBattery:
         self.needs_sorted = any(k.key in self.SORTED_KEYS or
                                 k.key in self.LOOP_KEYS
                                 for k in kernels)
-        self.needs_loop = any(k.key in self.LOOP_KEYS for k in kernels)
         # column layout of the output matrix, for the one-pass fill:
         # kernel j owns columns [starts[j], starts[j] + sizes[j])
         self.sizes = np.array([k.size for k in self.kernels], dtype=np.int64)

@@ -22,6 +22,37 @@ last and can set either key.  A daemon killed before its stdin-EOF/SIGTERM
 cleanup leaves its ``.<uuid>.sock`` file behind in that directory; nothing
 reuses or removes it.
 
+Python daemon from cached bytecode (local masters only).  Each Spark
+context starts its own Python daemon, which imports pyspark from
+``$SPARK_HOME/python/lib/pyspark.zip``.  The zip holds no ``.pyc`` files
+and Python never writes them into a zip, so every daemon start compiled
+pyspark from source: ``import pyspark.worker`` takes ~1.2 s from the zip
+and ~0.35 s from compiled files on a 4-core host, paid again after every
+context restart.  So a session on a ``local``/``local[...]`` master keeps
+one compiled copy of that zip per user, interpreter and zip at
+``<tempfile.gettempdir()>/lcps_pyspark_<hash>``, the hash taken over the
+user id, the zip's real path, size and ``st_mtime_ns``, and
+``sys.implementation.cache_tag``.  Its ``lib`` holds the zip's files with
+unchecked hash-based ``.pyc`` files for every module outside ``tests`` and
+``examples``; its ``bin`` holds a copy of the stdlib-only launcher
+``_cached_daemon.py``.  The session names the launcher in
+``spark.python.daemon.module`` and appends ``bin`` to
+``spark.executorEnv.PYTHONPATH`` (after any entries ``extra_conf`` gives
+that key).  The launcher puts ``lib`` first on ``sys.path`` only when the
+cache is complete and the ``pyspark.zip`` on its own path still matches
+the key; otherwise it leaves the path alone.  Either way it runs
+``pyspark.daemon``, so workers run the same pyspark sources.  The first
+session on a host builds the copy (extract and compile, ~2 s on a 4-core
+host) in a temporary directory renamed into place, so of concurrent
+builders one wins and the others remove theirs.  A cluster master, an
+``extra_conf`` that names its own daemon module, a missing zip, a failed
+build and a cache directory that is not the user's or is writable by
+others all keep the stock daemon.  A cache damaged after its build (e.g.
+files removed by a temp-directory cleaner) is not rebuilt in place, and
+the session keeps the stock daemon until its directory is removed.
+Nothing removes old caches either: after a Spark upgrade the previous one
+(~30 MB) stays in the temp directory.
+
 Sorted buckets feed the PIT cogroup without a Sort.  A bucketed table
 declared ``SORTED BY (doc_id, t)`` holds each bucket sorted by its entity
 key, the order ``applyInArrow``'s cogroup asks of its inputs, but by
@@ -45,9 +76,12 @@ cogroup calls.  Spark's own writers always sort.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 import tempfile
+import warnings
+import zipfile
 from typing import Optional
 
 from pyspark.sql import SparkSession
@@ -88,17 +122,125 @@ def _defaults_conf_has_master() -> bool:
 _MAX_SOCKET_DIR_BYTES = 64
 
 
+def _is_local(master: Optional[str]) -> bool:
+    return master is not None and bool(re.fullmatch(r"local(\[.*\])?",
+                                                     master))
+
+
 def _python_transport_conf(master: Optional[str], sock_dir: str) -> dict:
     """Conf that puts executor<->Python-worker traffic on Unix domain
     sockets in ``sock_dir`` — only for a local master and only when the
     daemon's socket path fits ``sun_path``; otherwise empty (loopback
     TCP)."""
-    if master is None or not re.fullmatch(r"local(\[.*\])?", master):
+    if not _is_local(master):
         return {}
     if len(os.fsencode(sock_dir)) > _MAX_SOCKET_DIR_BYTES:
         return {}
     return {"spark.python.unix.domain.socket.enabled": "true",
             "spark.python.unix.domain.socket.dir": sock_dir}
+
+
+DAEMON_MODULE_KEY = "spark.python.daemon.module"
+PYTHONPATH_KEY = "spark.executorEnv.PYTHONPATH"
+_LAUNCHER = "lcps_cached_daemon"
+# never imported by a worker, so never compiled in the cache
+_UNUSED_DIRS = r"(?:.*/)?(?:tests|examples)/"
+
+
+def _pyspark_zip() -> Optional[str]:
+    """The ``pyspark.zip`` the JVM puts on its Python workers' path
+    (``$SPARK_HOME/python/lib``, SPARK_HOME found as pyspark's launcher
+    finds it), or None."""
+    from pyspark.find_spark_home import _find_spark_home
+    try:
+        path = os.path.join(_find_spark_home(), "python", "lib",
+                            "pyspark.zip")
+    except SystemExit:
+        return None
+    return path if os.path.isfile(path) else None
+
+
+def _build_cache(zip_path: str, final: str) -> None:
+    """Extract ``zip_path`` into ``<final>/lib``, compile it to unchecked
+    hash-based pycs, add the launcher and its key, and rename the lot to
+    ``final`` in one step; a concurrent builder that renamed first wins
+    and this build is removed."""
+    import compileall
+    import py_compile
+    import shutil
+
+    from . import _cached_daemon
+
+    work = tempfile.mkdtemp(prefix=f".{os.path.basename(final)}.",
+                            dir=os.path.dirname(final))
+    try:
+        lib = os.path.join(work, "lib")
+        with zipfile.ZipFile(zip_path) as z:
+            z.extractall(lib)
+        compileall.compile_dir(
+            lib, quiet=2, rx=re.compile(re.escape(lib + os.sep)
+                                        + _UNUSED_DIRS),
+            invalidation_mode=py_compile.PycInvalidationMode.UNCHECKED_HASH)
+        os.mkdir(os.path.join(work, "bin"))
+        shutil.copyfile(_cached_daemon.__file__,
+                        os.path.join(work, "bin", _LAUNCHER + ".py"))
+        with open(os.path.join(work, _cached_daemon.KEY_FILE), "w") as f:
+            f.write(_cached_daemon.zip_key(zip_path))
+        os.rename(work, final)
+    except OSError:
+        if not os.path.isdir(final):
+            raise
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def _bytecode_cache(zip_path: str, tmp: str) -> Optional[str]:
+    """The cache directory of ``zip_path`` under ``tmp``, built on first
+    use; None if it cannot be built or is not this user's."""
+    from . import _cached_daemon
+
+    key = f"{os.getuid()}\n{_cached_daemon.zip_key(zip_path)}"
+    final = os.path.join(tmp, "lcps_pyspark_" + hashlib.sha256(
+        key.encode()).hexdigest()[:16])
+    lib = _cached_daemon.cached_lib(final, zip_path)
+    if lib is None:
+        _build_cache(zip_path, final)
+        lib = _cached_daemon.cached_lib(final, zip_path)
+    st = os.stat(final)
+    mine = st.st_uid == os.getuid() and not st.st_mode & 0o022
+    return final if lib and mine else None
+
+
+def _python_daemon_conf(master: Optional[str], tmp: str,
+                        extra_conf: dict) -> dict:
+    """Conf that starts the Python daemon through the cached-bytecode
+    launcher: a local master only, not when ``extra_conf`` names its own
+    daemon module, and not without a built cache.  The caller's
+    ``spark.executorEnv.PYTHONPATH`` keeps its entries first."""
+    if not _is_local(master) or DAEMON_MODULE_KEY in extra_conf:
+        return {}
+    zip_path = _pyspark_zip()
+    try:
+        cache = zip_path and _bytecode_cache(zip_path, tmp)
+    except (OSError, zipfile.BadZipFile) as e:
+        warnings.warn(f"no compiled copy of {zip_path} ({e!r}); the Python "
+                      "daemon compiles pyspark from the zip", RuntimeWarning)
+        cache = None
+    if not cache:
+        return {}
+    path = [p for p in (extra_conf.get(PYTHONPATH_KEY),
+                        os.path.join(cache, "bin")) if p]
+    return {DAEMON_MODULE_KEY: _LAUNCHER, PYTHONPATH_KEY: os.pathsep.join(path)}
+
+
+def _session_conf(master: Optional[str], extra_conf: dict) -> dict:
+    """The master-dependent conf ``get_spark`` applies after its fixed
+    settings: Python transport, then ``extra_conf``, then the daemon conf,
+    which yields to ``extra_conf``'s daemon module and carries its
+    ``spark.executorEnv.PYTHONPATH`` entries first."""
+    tmp = tempfile.gettempdir()
+    return {**_python_transport_conf(master, tmp), **extra_conf,
+            **_python_daemon_conf(master, tmp, extra_conf)}
 
 
 def _local_dirs() -> Optional[str]:
@@ -179,8 +321,6 @@ def get_spark(master: Optional[str] = None,
     local_dirs = _local_dirs()
     if local_dirs:
         builder = builder.config("spark.local.dir", local_dirs)
-    conf = {**_python_transport_conf(master, tempfile.gettempdir()),
-            **(extra_conf or {})}
-    for k, v in conf.items():
+    for k, v in _session_conf(master, extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
