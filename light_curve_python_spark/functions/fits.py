@@ -5,6 +5,20 @@ Levenberg–Marquardt (numerical Jacobian, box bounds by clipping) — per-curve
 problem sizes are tiny (4-7 params, 10^2-10^3 points), so the pure-numpy loop
 is adequate executor-side.
 
+The LM runs in two phases.  The descent (forward-difference Jacobian, a step
+accepted only if it lowers the cost) stops once a step lowers the cost by
+less than ``ftol`` or moves the parameters by less than ``ptol``, relative.
+That point is near the optimum but not on it: the forward differences' error
+moves the fixed point, and the last digits it lands on depend on the CPU's
+BLAS and SIMD kernels.  A refinement phase then takes Gauss–Newton steps on
+a fourth-order finite-difference Jacobian, accepting a step unless it raises
+the cost by more than rounding, and returns once a step falls below 1e-13
+relative or stops halving (see ``_refine``).  On the oracle's fit fixtures
+the result lies within ~1e-10*max(|p|, 1) of the optimum that
+scripts/fit_golden.py solves at high precision, under every OpenBLAS core
+type and numpy SIMD setting tried; the descent alone stops 4e-7 (Rainbow
+``T``) to 4e-6 (``t_color``) relative away from it.
+
 Model semantics:
 - Bazin: ``b + a * exp(-dt/fall) / (1 + exp(-dt/rise))``, dt = t - t0 —
   pinned verbatim by the reference's own test
@@ -239,6 +253,17 @@ def levenberg_marquardt(model: Callable, t: np.ndarray, m: np.ndarray,
     (params, DATA chi2 — the penalty steers the optimum but is not
     reported).
 
+    Two phases (module docstring).  The descent uses a forward-difference
+    Jacobian and accepts a step only if it lowers the cost; it ends after
+    ``max_iter`` steps, when no damping finds a lower cost (the point is
+    returned as it is), or when an accepted step changes the cost by less
+    than ``ftol`` or the parameters by less than ``ptol``, relative.  In
+    that last case the refinement phase (``_refine``) continues with
+    Gauss–Newton steps on a fourth-order Jacobian until a step falls
+    below 1e-13 relative or stops halving; it moves no parameter by more
+    than 2e-4*max(|p_k|, 1), so it polishes the optimum the descent found
+    and never picks another one.
+
     ``upper_mask`` marks censored observations (upper limits): those rows
     contribute the Tobit term -ln Phi((m - f)/sigma) to the negative log
     likelihood instead of the Gaussian z^2/2 (reference minuit_ml.py:
@@ -313,11 +338,116 @@ def levenberg_marquardt(model: Callable, t: np.ndarray, m: np.ndarray,
                 lam = max(lam / 10, 1e-12)
                 improved = True
                 if rel_f < ftol or rel_p < ptol:
-                    return p, chi2
+                    return _refine(residuals, penalty, ln_priors, p, r,
+                                   chi2, cost, lam, lower, upper)
                 break
             lam *= 10
         if not improved:
             break
+    return p, chi2
+
+
+def _refine_jacobian(residuals, p) -> Optional[np.ndarray]:
+    """Fourth-order central-difference Jacobian at ``p`` (step
+    1e-4*max(|p_k|, 1)); None if a residual on the stencil is not
+    finite."""
+    cols = []
+    for k in range(len(p)):
+        h = 1e-4 * max(abs(p[k]), 1.0)
+        col = 0.0
+        for off, c in ((2, -1.0), (1, 8.0), (-1, -8.0), (-2, 1.0)):
+            pk = p.copy()
+            pk[k] += off * h
+            col = col + c * residuals(pk)
+        col = col / (12.0 * h)
+        if not np.all(np.isfinite(col)):
+            return None
+        cols.append(col)
+    return np.stack(cols, axis=1)
+
+
+def _prior_terms(ln_priors, p) -> Tuple[np.ndarray, np.ndarray]:
+    """Gradient and (non-negative) curvature of -2*sum(ln_prior) at ``p``
+    by fourth-order central differences (same step as _refine_jacobian);
+    zero for a prior that is not finite on the whole stencil."""
+    grad = np.zeros(len(p))
+    curv = np.zeros(len(p))
+    if ln_priors is None:
+        return grad, curv
+    for k, pr in enumerate(ln_priors):
+        if pr.kind == "none":
+            continue
+        h = 1e-4 * max(abs(p[k]), 1.0)
+        f = [-2.0 * pr(p[k] + j * h) for j in (2, 1, 0, -1, -2)]
+        if all(math.isfinite(v) for v in f):
+            grad[k] = (-f[0] + 8.0 * f[1] - 8.0 * f[3] + f[4]) / (12.0 * h)
+            curv[k] = max((-f[0] + 16.0 * f[1] - 30.0 * f[2] + 16.0 * f[3]
+                           - f[4]) / (12.0 * h * h), 0.0)
+    return grad, curv
+
+
+def _refine(residuals, penalty, ln_priors, p, r, chi2, cost, lam,
+            lower, upper) -> Tuple[np.ndarray, float]:
+    """The refinement phase of levenberg_marquardt: damped Gauss-Newton
+    steps from the descent's stopping point on an accurate Jacobian
+    (_refine_jacobian), so that the fit lands on the optimum itself
+    rather than on the forward-difference fixed point near it.
+
+    - A parameter on a box bound whose gradient points out of the box is
+      held there (left out of the step).
+    - A step is accepted unless its cost exceeds the current cost by more
+      than the rounding of that cost (near the optimum a step changes the
+      cost by less than its rounding, so ``<`` would stall).
+    - Each step, relative to max(|p_k|, 1), must be at most 1e-4 (the
+      differencing step) and at most half the previous step; the phase
+      returns before the first step that is not.  So it moves each
+      parameter by less than 2e-4*max(|p_k|, 1) in all and cannot carry
+      the fit into another basin.
+    - It returns after a step below 1e-13 (converged to rounding)."""
+    n_par = len(p)
+    eps = np.finfo(np.float64).eps
+    limit = 1e-4
+    for _ in range(64):
+        J = _refine_jacobian(residuals, p)
+        if J is None:
+            break
+        g_pr, h_pr = _prior_terms(ln_priors, p)
+        g = J.T @ r + 0.5 * g_pr
+        H = J.T @ J + np.diag(0.5 * h_pr)
+        held = ((p <= lower) & (g > 0)) | ((p >= upper) & (g < 0))
+        free = np.flatnonzero(~held)
+        if not len(free):
+            break
+        Hf = H[np.ix_(free, free)]
+        slack = 4.0 * (len(r) + n_par) * eps * (chi2 + abs(cost - chi2))
+        step = None
+        for _try in range(12):
+            delta = np.zeros(n_par)
+            try:
+                delta[free] = np.linalg.solve(
+                    Hf + lam * np.diag(np.diag(Hf))
+                    + 1e-300 * np.eye(len(free)), -g[free])
+            except np.linalg.LinAlgError:
+                lam *= 10
+                continue
+            p_new = np.clip(p + delta, lower, upper)
+            r_new = residuals(p_new)
+            chi2_new = float(r_new @ r_new)
+            cost_new = chi2_new + penalty(p_new)
+            if np.isfinite(cost_new) and cost_new <= cost + slack:
+                step = (p_new, r_new, chi2_new, cost_new)
+                break
+            lam *= 10
+        if step is None:
+            break
+        rel = float(np.max(np.abs(step[0] - p) / np.maximum(np.abs(p), 1.0)))
+        if rel > limit and rel >= 1e-13:
+            break
+        p, r, chi2, cost = step
+        lam = max(lam / 10, 1e-12)
+        if rel < 1e-13:
+            break
+        limit = 0.5 * rel
     return p, chi2
 
 

@@ -3,6 +3,12 @@ truth (the reference's own BazinFit test strategy —
 tests/test_w_bench.py:303-340 generates a noisy Bazin curve and asserts
 recovered params at rtol 1e-3)."""
 
+import json
+import os
+import subprocess
+import sys
+from decimal import ROUND_HALF_UP, Decimal
+
 import numpy as np
 import pytest
 
@@ -90,6 +96,37 @@ def test_lm_on_linear_problem_exact():
         np.array([-1e9, -1e9]), np.array([1e9, 1e9]))
     np.testing.assert_allclose(p, [3.0, 7.0], rtol=1e-6)
     assert chi2 < 1e-10
+
+
+def test_refinement_polishes_only_near_its_start():
+    """The LM's refinement phase converges from a point near the optimum
+    but declines a first step larger than 1e-4*max(|p|, 1), so it never
+    carries a fit away from the point the descent stopped at."""
+    rng = np.random.default_rng(2)
+    t = np.sort(rng.uniform(0, 10, 50))
+    s = np.full(50, 0.1)
+    m = 2.0 * np.exp(-t / 4.0) + 1.0 + s * rng.normal(size=50)
+    w = s ** -2.0
+
+    def model(t, a, tau, b):
+        return a * np.exp(-t / tau) + b
+
+    lower, upper = np.full(3, -1e9), np.full(3, 1e9)
+    residuals = FT._make_residuals(model, t, m, np.sqrt(w), None)
+
+    def refine(p):
+        p = np.asarray(p, dtype=np.float64)
+        r = residuals(p)
+        return FT._refine(residuals, lambda _p: 0.0, None, p, r,
+                          float(r @ r), float(r @ r), 1e-3, lower, upper)
+
+    p_opt, _ = refine(FT.levenberg_marquardt(model, t, m, w,
+                                             np.array([1.0, 1.0, 0.0]),
+                                             lower, upper)[0])
+    near, _ = refine(p_opt * (1.0 + 1e-6))
+    np.testing.assert_allclose(near, p_opt, rtol=1e-11)
+    far = p_opt * 1.01
+    assert refine(far)[0].tobytes() == far.tobytes()
 
 
 def test_spark_extract_with_fit(spark):
@@ -506,3 +543,90 @@ def test_fits_are_bitwise_equal_across_blas_thread_counts():
     for one, four in zip(outs[1], outs[4]):
         assert np.isfinite(one).all()
         assert one.tobytes() == four.tobytes()
+
+
+_FIT_FIXTURES_PROBE = r"""
+import json, sys
+import numpy as np
+sys.path.insert(0, sys.argv[1])
+from light_curve_python_spark.functions.kernels import (
+    evaluate_kernel, make_kernel)
+from light_curve_python_spark.functions.rainbow import rainbow_fit_arrays
+data = np.load(sys.argv[2])
+waves = json.loads(sys.argv[3])
+out = {}
+for doc in json.loads(sys.argv[4]):
+    out[doc] = rainbow_fit_arrays(
+        data[doc + "/t"], data[doc + "/m"], data[doc + "/sigma"],
+        data[doc + "/band"], waves).tolist()
+bazin = make_kernel("bazin_fit")
+for doc in json.loads(sys.argv[5]):
+    out[doc] = evaluate_kernel(
+        bazin, data[doc + "/t"], data[doc + "/m"], data[doc + "/sigma"],
+        fill_value=None).tolist()
+print(json.dumps(out))
+"""
+
+
+def _avx512_features():
+    try:
+        from numpy._core._multiarray_umath import __cpu_features__
+    except ImportError:
+        from numpy.core._multiarray_umath import __cpu_features__
+    return sorted(k for k, on in __cpu_features__.items()
+                  if on and k.startswith("AVX512"))
+
+
+@pytest.mark.parametrize("var,value", [
+    ("OPENBLAS_CORETYPE", "Haswell"), ("OPENBLAS_CORETYPE", "SkylakeX"),
+    ("OPENBLAS_CORETYPE", "Nehalem"), ("OPENBLAS_CORETYPE", "Prescott"),
+    ("NPY_DISABLE_CPU_FEATURES", None)],
+    ids=["Haswell", "SkylakeX", "Nehalem", "Prescott", "no-avx512"])
+def test_fit_fixtures_round_to_goldens_on_any_cpu_dispatch(var, value,
+                                                           tmp_path):
+    """The rainbow_fit and bazin_fit oracle rows compare the fits of two
+    fixtures, rounded as ``_r`` rounds them, with golden literals of the
+    fits' optimum.  The fit must reach those digits whatever kernels
+    OpenBLAS (``OPENBLAS_CORETYPE``) and numpy's SIMD dispatch
+    (``NPY_DISABLE_CPU_FEATURES``: every AVX-512 feature the host's numpy
+    reports) pick, so each setting runs the fits in a fresh numpy-only
+    process on the same float64 fixture arrays."""
+    import __spark_entry__ as E
+    if value is None:
+        feats = _avx512_features()
+        if not feats:
+            pytest.skip("numpy reports no AVX-512 feature on this host")
+        value = " ".join(feats)
+    arrays = {}
+    for pdf in (E._rainbow_fixture_pdf(), E._bazin_fixture_pdf()):
+        for doc, g in pdf.groupby("doc_id"):
+            for col in ("t", "m", "sigma", "band"):
+                if col in g:
+                    arrays[f"{doc}/{col}"] = g[col].to_numpy().astype(
+                        "U" if col == "band" else "f8")
+    path = str(tmp_path / "fixtures.npz")
+    np.savez(path, **arrays)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    res = subprocess.run(
+        [sys.executable, "-c", _FIT_FIXTURES_PROBE, root, path,
+         json.dumps(E.RAINBOW_WAVES), json.dumps(sorted(E.RAINBOW_GOLDEN)),
+         json.dumps(sorted(E.BAZIN_GOLDEN))],
+        env={**os.environ, var: value}, capture_output=True, text=True,
+        timeout=300)
+    assert res.returncode == 0, res.stderr
+    got = json.loads(res.stdout)
+
+    def r6(x):
+        # Spark's round(x + EPS_ROUND, 6): HALF_UP on the decimal string
+        return float(Decimal(repr(x + E.EPS_ROUND)).quantize(
+            Decimal("1e-6"), rounding=ROUND_HALF_UP))
+
+    bad = []
+    for golden, cols in ((E.RAINBOW_GOLDEN, E._RAINBOW_COLS),
+                         (E.BAZIN_GOLDEN, E._BAZIN_COLS)):
+        for doc, row in golden.items():
+            for col, x in zip(cols, got[doc]):
+                if r6(x) != row[col]:
+                    bad.append(f"{doc}.{col}: {x!r} -> {r6(x)!r}, "
+                               f"golden {row[col]!r}")
+    assert not bad, f"{var}={value}: " + "; ".join(bad)
