@@ -18,8 +18,12 @@ skips the headline datagen and warm-up.
 ``python_task_floor`` (also only when named, no datagen or warm-up)
 times one engine ``mapInArrow`` (``grouped.map_curves``, a trivial
 callback) over the same 4096 entities at 4 and 64 partitions, min-of-N,
-and reports the seconds each extra Python task costs one core: the
-fixed per-task floor of the Python workers, not kernel time.  Its
+and reports per leg the seconds each extra Python task costs one core
+(``s_per_task_core``): the fixed per-task floor of the Python workers,
+not kernel time.  The ``engine`` leg is ``get_spark``'s own conf; the
+``stock`` leg names ``pyspark.daemon`` in ``extra_conf``, whose reused
+workers run a full garbage collection after every task.  Legs alternate,
+each draw in a fresh context whose workers one untimed job started.  Its
 ``python_transport`` ("unix" or "tcp", from the session conf) names the
 executor-worker socket the tasks used.
 
@@ -49,26 +53,35 @@ SKEW_PROBE = "ngram_jaccard_bounded"
 # per-task fixed cost of the Python workers (not a headline)
 FLOOR_PROBE = "python_task_floor"
 FLOOR_PARTITIONS = (4, 64)
+STOCK_DAEMON = {"spark.python.daemon.module": "pyspark.daemon"}
+FLOOR_LEGS = {"engine": {}, "stock": STOCK_DAEMON}
 # seconds from a context restart to its first Python job (not a headline)
 COLD_PROBE = "python_cold_start"
-COLD_LEGS = {"cached": {},
-             "stock": {"spark.python.daemon.module": "pyspark.daemon"}}
+COLD_LEGS = {"cached": {}, "stock": STOCK_DAEMON}
 
 
 def _task_floor(spark, n_runs):
-    """Min-of-``n_runs`` seconds of one ``map_curves`` job per partition
-    count in FLOOR_PARTITIONS (draws alternate), and the extra seconds
-    per extra task times the session's cores."""
+    """Per leg of FLOOR_LEGS, ``n_runs`` draws of one ``map_curves`` job
+    per partition count in FLOOR_PARTITIONS, each draw in a fresh context
+    (legs alternate), and the extra seconds per extra task times the
+    session's cores from the min-of-``n_runs``; returns the draws, the
+    per-leg floors and the last session."""
     lo, hi = FLOOR_PARTITIONS
-    bench._time_one(spark, lambda s: _floor_job(s, hi))  # start every worker
-    runs = {p: [] for p in FLOOR_PARTITIONS}
+    runs = {leg: {p: [] for p in FLOOR_PARTITIONS} for leg in FLOOR_LEGS}
     for _ in range(n_runs):
-        for p in FLOOR_PARTITIONS:
-            runs[p].append(round(
-                bench._time_one(spark, lambda s: _floor_job(s, p)), 3))
+        for leg, extra in FLOOR_LEGS.items():
+            spark.stop()
+            spark = bench._session(bench.CPUS, extra)
+            # start every worker
+            bench._time_one(spark, lambda s: _floor_job(s, hi))
+            for p in FLOOR_PARTITIONS:
+                runs[leg][p].append(round(
+                    bench._time_one(spark, lambda s: _floor_job(s, p)), 3))
     cores = spark.sparkContext.defaultParallelism
-    per_task_core = (min(runs[hi]) - min(runs[lo])) * cores / (hi - lo)
-    return runs, round(per_task_core, 4)
+    per_task_core = {
+        leg: round((min(r[hi]) - min(r[lo])) * cores / (hi - lo), 4)
+        for leg, r in runs.items()}
+    return runs, per_task_core, spark
 
 
 def _floor_job(spark, parts):
@@ -147,14 +160,15 @@ def main():
             results[f"{SKEW_PROBE}.{leg}"] = min(runs)
     floor = {}
     if FLOOR_PROBE in only:
-        runs, floor["s_per_task_core"] = _task_floor(spark, n_runs)
+        runs, floor["s_per_task_core"], spark = _task_floor(spark, n_runs)
         uds = spark.sparkContext.getConf().get(
             "spark.python.unix.domain.socket.enabled", "false")
         floor["python_transport"] = "unix" if uds.lower() == "true" \
             else "tcp"
-        for p, draws in runs.items():
-            runs_log[f"{FLOOR_PROBE}.p{p}"] = draws
-            results[f"{FLOOR_PROBE}.p{p}"] = min(draws)
+        for leg, by_parts in runs.items():
+            for p, draws in by_parts.items():
+                runs_log[f"{FLOOR_PROBE}.{leg}.p{p}"] = draws
+                results[f"{FLOOR_PROBE}.{leg}.p{p}"] = min(draws)
     if COLD_PROBE in only:
         daemon = spark.sparkContext.getConf().get(
             "spark.python.daemon.module", "pyspark.daemon")

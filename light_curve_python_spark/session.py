@@ -19,8 +19,12 @@ path may be too long for a socket.  The daemon binds ``<dir>/.<uuid4>.sock``,
 which must fit AF_UNIX's 108-byte ``sun_path`` with its NUL, so a socket
 directory longer than 64 bytes also keeps TCP.  ``extra_conf`` is applied
 last and can set either key.  A daemon killed before its stdin-EOF/SIGTERM
-cleanup leaves its ``.<uuid>.sock`` file behind in that directory; nothing
-reuses or removes it.
+cleanup leaves its ``.<uuid4>.sock`` file behind in that directory, so a
+session that turns Unix sockets on first removes the files there that are
+named so, are sockets of this user, are older than 60 s (a daemon between
+``bind`` and ``listen`` refuses connections too) and refuse ``connect()``.
+A live daemon accepts that probe and forks one worker, which exits when
+the probe's connection closes.
 
 Python daemon from cached bytecode (local masters only).  Each Spark
 context starts its own Python daemon, which imports pyspark from
@@ -29,10 +33,11 @@ and Python never writes them into a zip, so every daemon start compiled
 pyspark from source: ``import pyspark.worker`` takes ~1.2 s from the zip
 and ~0.35 s from compiled files on a 4-core host, paid again after every
 context restart.  So a session on a ``local``/``local[...]`` master keeps
-one compiled copy of that zip per user, interpreter and zip at
+one compiled copy of that zip per user, interpreter, zip and launcher at
 ``<tempfile.gettempdir()>/lcps_pyspark_<hash>``, the hash taken over the
-user id, the zip's real path, size and ``st_mtime_ns``, and
-``sys.implementation.cache_tag``.  Its ``lib`` holds the zip's files with
+user id, the zip's real path, size and ``st_mtime_ns``,
+``sys.implementation.cache_tag`` and the launcher's sha256 (a cache keeps
+the launcher it was built with).  Its ``lib`` holds the zip's files with
 unchecked hash-based ``.pyc`` files for every module outside ``tests`` and
 ``examples``; its ``bin`` holds a copy of the stdlib-only launcher
 ``_cached_daemon.py``.  The session names the launcher in
@@ -41,17 +46,25 @@ unchecked hash-based ``.pyc`` files for every module outside ``tests`` and
 that key).  The launcher puts ``lib`` first on ``sys.path`` only when the
 cache is complete and the ``pyspark.zip`` on its own path still matches
 the key; otherwise it leaves the path alone.  Either way it runs
-``pyspark.daemon``, so workers run the same pyspark sources.  The first
-session on a host builds the copy (extract and compile, ~2 s on a 4-core
-host) in a temporary directory renamed into place, so of concurrent
-builders one wins and the others remove theirs.  A cluster master, an
-``extra_conf`` that names its own daemon module, a missing zip, a failed
-build and a cache directory that is not the user's or is writable by
-others all keep the stock daemon.  A cache damaged after its build (e.g.
-files removed by a temp-directory cleaner) is not rebuilt in place, and
-the session keeps the stock daemon until its directory is removed.
-Nothing removes old caches either: after a Spark upgrade the previous one
-(~30 MB) stays in the temp directory.
+``pyspark.daemon``, so workers run the same pyspark sources, with one
+difference: a reused worker of the stock daemon runs a full
+``gc.collect()`` after every task before it reads the next one (34 ms at
+the median, 68 ms at p90 over the ~74k objects a warm worker tracks,
+4-core host), and the launcher makes that a collection of generations 0
+and 1 only; CPython's own thresholds still run full collections.  That
+cuts the per-task floor of every Python task by more than half
+(``bench_extra.py python_task_floor``).  The first session on a host
+builds the copy (extract and compile, ~2 s on a 4-core host) in a
+temporary directory renamed into place, so of concurrent builders one
+wins and the others remove theirs.  A cluster master, an ``extra_conf``
+that names its own daemon module, a missing zip, a failed build and a
+cache directory that is not the user's or is writable by others all keep
+the stock daemon, and with it the full collection after every task.  A
+cache damaged after its build (e.g. files removed by a temp-directory
+cleaner) is not rebuilt in place, and the session keeps the stock daemon
+until its directory is removed.  Nothing removes old caches either: after
+a Spark upgrade or a launcher change the previous one (~30 MB) stays in
+the temp directory.
 
 Sorted buckets feed the PIT cogroup without a Sort.  A bucketed table
 declared ``SORTED BY (doc_id, t)`` holds each bucket sorted by its entity
@@ -79,7 +92,10 @@ from __future__ import annotations
 import hashlib
 import os
 import re
+import socket
+import stat
 import tempfile
+import time
 import warnings
 import zipfile
 from typing import Optional
@@ -199,7 +215,11 @@ def _bytecode_cache(zip_path: str, tmp: str) -> Optional[str]:
     use; None if it cannot be built or is not this user's."""
     from . import _cached_daemon
 
-    key = f"{os.getuid()}\n{_cached_daemon.zip_key(zip_path)}"
+    # the launcher is copied in once, so a changed launcher needs a new
+    # directory: a cache built by an older one would keep running it
+    with open(_cached_daemon.__file__, "rb") as f:
+        launcher = hashlib.sha256(f.read()).hexdigest()
+    key = f"{os.getuid()}\n{_cached_daemon.zip_key(zip_path)}\n{launcher}"
     final = os.path.join(tmp, "lcps_pyspark_" + hashlib.sha256(
         key.encode()).hexdigest()[:16])
     lib = _cached_daemon.cached_lib(final, zip_path)
@@ -233,13 +253,51 @@ def _python_daemon_conf(master: Optional[str], tmp: str,
     return {DAEMON_MODULE_KEY: _LAUNCHER, PYTHONPATH_KEY: os.pathsep.join(path)}
 
 
+# the name pyspark's daemon gives its socket: "." + uuid4 + ".sock"
+_SOCKET_NAME = re.compile(r"\.[0-9a-f]{8}-[0-9a-f]{4}-4[0-9a-f]{3}"
+                          r"-[89ab][0-9a-f]{3}-[0-9a-f]{12}\.sock")
+# a daemon binds its socket, then listens: younger files may be that gap
+_DEAD_SOCKET_AGE_S = 60
+
+
+def _remove_dead_sockets(sock_dir: str) -> None:
+    """Remove the daemon socket files in ``sock_dir`` that a killed
+    daemon left behind: named as the daemon names them, a socket owned by
+    this user, older than ``_DEAD_SOCKET_AGE_S`` and refusing
+    ``connect()``.  A live daemon's socket accepts, so it stays (its
+    daemon forks a worker that exits on the closed connection)."""
+    try:
+        names = [n for n in os.listdir(sock_dir) if _SOCKET_NAME.fullmatch(n)]
+    except OSError:
+        return
+    for name in names:
+        path = os.path.join(sock_dir, name)
+        try:
+            st = os.lstat(path)
+            if not (stat.S_ISSOCK(st.st_mode) and st.st_uid == os.getuid()
+                    and time.time() - st.st_mtime > _DEAD_SOCKET_AGE_S):
+                continue
+            with socket.socket(socket.AF_UNIX, socket.SOCK_STREAM) as s:
+                s.setblocking(False)  # a full backlog is live, not dead
+                try:
+                    s.connect(path)
+                except ConnectionRefusedError:
+                    os.remove(path)
+        except OSError:
+            continue
+
+
 def _session_conf(master: Optional[str], extra_conf: dict) -> dict:
     """The master-dependent conf ``get_spark`` applies after its fixed
     settings: Python transport, then ``extra_conf``, then the daemon conf,
     which yields to ``extra_conf``'s daemon module and carries its
-    ``spark.executorEnv.PYTHONPATH`` entries first."""
+    ``spark.executorEnv.PYTHONPATH`` entries first.  Turning Unix sockets
+    on also removes dead daemon sockets from their directory."""
     tmp = tempfile.gettempdir()
-    return {**_python_transport_conf(master, tmp), **extra_conf,
+    transport = _python_transport_conf(master, tmp)
+    if transport:
+        _remove_dead_sockets(tmp)
+    return {**transport, **extra_conf,
             **_python_daemon_conf(master, tmp, extra_conf)}
 
 
@@ -308,7 +366,10 @@ def get_spark(master: Optional[str] = None,
         # so kernel import/jit costs are paid once per core, not per task,
         # and the zipimport guard the package root installs in a worker
         # (_zipguard.py) keeps its later tasks from re-reading pyspark.zip
-        # and the other zips on its path (CPython < 3.13, ~120 ms per task)
+        # and the other zips on its path (CPython < 3.13, ~120 ms per task);
+        # on a local master the daemon launcher also replaces the stock
+        # daemon's full gc.collect() between a worker's tasks with a
+        # young-generation one (~34 ms per task); cluster masters keep it
         .config("spark.python.worker.reuse", "true")
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
